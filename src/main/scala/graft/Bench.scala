@@ -48,9 +48,8 @@ object Bench {
     val corpusOk = new java.io.File(dir, "_SUCCESS").isFile &&
       Option(new java.io.File(dir).list()).exists(_.exists(_.endsWith(".parquet")))
     if (stampOk && corpusOk) return false
-    val turns = Transcripts.transcripts(spark, sfDir)
+    val turns = Transcripts.payloadTurns(spark, sfDir)
       .select("conv_id", "turn_idx", "text")
-      .filter(col("turn_idx") % 2 === 0)
     val reps = spark.range(k).select(col("id").as("rep"))
     turns.crossJoin(reps)
       .select(concat(col("conv_id"), lit("#"), col("rep")).as("conv_id"), col("turn_idx"), col("text"))
@@ -151,8 +150,8 @@ object Bench {
     def calibrate(): Double =
       try timed {
         ParseStage.parseTurns(
-          Transcripts.transcripts(spark1, sfDir)
-            .select("conv_id", "turn_idx", "text").filter(col("turn_idx") % 2 === 0).limit(256)
+          Transcripts.payloadTurns(spark1, sfDir)
+            .select("conv_id", "turn_idx", "text").limit(256)
         ).count()
       }._2
       catch { case e: Exception => System.err.println(s"[bench] calibration skipped: ${e.getMessage}"); -1.0 }

@@ -17,7 +17,9 @@ import graft.pipeline.KgPipeline
   * In the sandbox the same main runs under `local[*]`; the session builder
   * only fills in a master when spark-submit did not provide one. Every
   * stage is a resumable snapshot — re-running with the same outDir skips
-  * completed stages (Materialize manifests).
+  * completed stages (Materialize manifests). The printed numbers are the
+  * counters each stage recorded in its manifest while writing, so a resume
+  * of a finished outDir reads only manifests and launches no Spark job.
   */
 object KgMain {
   def main(args: Array[String]): Unit = {

@@ -18,15 +18,17 @@ object KgPipeline {
     * (and re-broadcast at runtime if the map turns out small after all). */
   val CanonicalBroadcastMaxRows = 10000000L
 
-  /** The mention → component join with the size guard applied. The row
-    * count is read from the already-materialized canonical snapshot, so the
-    * guard costs one metadata-cheap count, not an extra shuffle. */
+  /** The mention → component join with the size guard applied.
+    * `canonicalRows` is the row count of `canonical`, which its snapshot
+    * stage recorded while writing it, so the guard launches no job. */
   private[pipeline] def joinCanonical(mentions: DataFrame, canonical: DataFrame,
-                                      maxBroadcastRows: Long): DataFrame = {
-    val dim = if (canonical.count() <= maxBroadcastRows) broadcast(canonical) else canonical
+                                      canonicalRows: Long, maxBroadcastRows: Long): DataFrame = {
+    val dim = if (canonicalRows <= maxBroadcastRows) broadcast(canonical) else canonical
     mentions.join(dim, mentions("mention") === canonical("node"))
   }
 
+  /** What one run built, read from the stage manifests: the same numbers
+    * for a fresh and a resumed run. */
   final case class PipelineStats(
       turns: Long,
       triples: Long,
@@ -42,36 +44,36 @@ object KgPipeline {
 
   def run(spark: SparkSession, sfDir: String, outDir: String,
           canonicalBroadcastMaxRows: Long = CanonicalBroadcastMaxRows): PipelineStats = {
-    var reused = 0
-
     // P1-P3: scan + parse (shuffle-free; each turn self-contained).
-    val turns = Transcripts.transcripts(spark, sfDir)
-    val (parsed, r1) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse") {
-      ParseStage.parseTurns(turns.filter(col("turn_idx") % 2 === 0)).toDF()
+    val (parsed, parse) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse",
+        Seq("parse_errors" -> count(col("error"))), inputCounters = Seq("turns_in")) { in =>
+      ParseStage.parseTurns(in.count(Transcripts.payloadTurns(spark, sfDir), "turns_in")).toDF()
     }
-    if (r1.reused) reused += 1
 
     // P5: mentions from the prose turns.
-    val (mentions, r2) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions") {
-      Ner.mentions(turns.filter(col("turn_idx") % 2 === 1))
+    val (mentions, ner) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions",
+        inputCounters = Seq("turns_in")) { in =>
+      Ner.mentions(in.count(Transcripts.proseTurns(spark, sfDir), "turns_in"))
     }
-    if (r2.reused) reused += 1
 
-    // P6-P8: universe → LSH candidates → verified edges → components.
-    val (canonical, r3) = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical") {
+    // P6-P8: universe → LSH candidates → verified edges → components. Each
+    // component's representative (its minimum) maps to itself, so the
+    // entity count is the number of rows with node = component.
+    val (canonical, canon) = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical",
+        Seq("entities" -> count(when(col("node") === col("component"), 1)))) { _ =>
       val universe = mentions.select("mention").distinct()
       val edges = Linking.jaccardEdges(universe, 0.5)
       ConnectedComponents.run(edges)
     }
-    if (r3.reused) reused += 1
 
     // Canonical entity triples: mention → its component representative,
     // emitted as sameAs triples joined into the graph. The canonical map is
     // usually small (distinct mentions) → broadcast join; size-guarded so a
     // corpus whose mention universe outgrows broadcast limits degrades to a
     // shuffle join instead of failing (see [[CanonicalBroadcastMaxRows]]).
-    val (allTriples, r4) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all") {
-      val mentionTriples = joinCanonical(mentions, canonical, canonicalBroadcastMaxRows)
+    val (allTriples, all) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all",
+        Seq("subjects_approx" -> approx_count_distinct("subj", 0.02))) { _ =>
+      val mentionTriples = joinCanonical(mentions, canonical, canon.rows, canonicalBroadcastMaxRows)
         .select(
           concat(lit("<http://graft.dev/mention/"), col("mention"), lit(">")).as("subj"),
           lit("<http://graft.dev/voc#sameAs>").as("pred"),
@@ -81,24 +83,21 @@ object KgPipeline {
         .select("subj", "pred", "obj", "conv_id", "turn_idx")
         .unionAll(mentionTriples)
     }
-    if (r4.reused) reused += 1
 
     // P9: bucketed, pred-partitioned triple table + subject adjacency table.
-    val matRes = Materialize.triples(
+    val graph = Materialize.triples(
       allTriples.withColumn("error", lit(null: String)), s"$outDir/graph")
-    if (matRes.reused) reused += 1
-    val adjRes = Materialize.adjacency(
+    val adjacency = Materialize.adjacency(
       allTriples.withColumn("error", lit(null: String)), s"$outDir/adjacency")
-    if (adjRes.reused) reused += 1
 
     PipelineStats(
-      turns = turns.count(),
-      triples = allTriples.count(),
-      parseErrors = parsed.filter(col("error").isNotNull).count(),
-      mentions = mentions.count(),
-      entities = canonical.select("component").distinct().count(),
-      subjectsApprox = allTriples.agg(approx_count_distinct("subj", 0.02)).head().getLong(0),
-      reusedStages = reused,
+      turns = parse.counters("turns_in") + ner.counters("turns_in"),
+      triples = all.rows,
+      parseErrors = parse.counters("parse_errors"),
+      mentions = ner.rows,
+      entities = canon.counters("entities"),
+      subjectsApprox = all.counters("subjects_approx"),
+      reusedStages = Seq(parse, ner, canon, all, graph, adjacency).count(_.reused),
     )
   }
 }

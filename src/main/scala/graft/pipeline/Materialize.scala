@@ -1,18 +1,41 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** P9/P10: graph materialization and resumable snapshot stages.
   *
   * Layout is Iceberg-shaped without an Iceberg catalog (none in the image —
-  * SURVEY §7): each stage writes a parquet snapshot directory plus a
-  * `_meta/manifest.json` carrying row counts, per-partition metrics and the
-  * stage name; a stage whose manifest already exists is *not* recomputed —
-  * it re-reads its snapshot, which is what makes every stage re-entrant
-  * (north_rule: "resumable from checkpoint with per-partition lineage +
-  * metrics"). Swap the writer for a real Iceberg catalog at deploy time.
+  * SURVEY §7): each stage writes a parquet snapshot directory `data/` plus a
+  * `_meta/manifest.json`; a stage whose manifest is committed is *not*
+  * recomputed — it re-reads its snapshot, which is what makes every stage
+  * re-entrant (north_rule: "resumable from checkpoint with per-partition
+  * lineage + metrics"). Swap the writer for a real Iceberg catalog at
+  * deploy time.
+  *
+  * Every stage counts its rows while it writes them: the written frame
+  * carries a `Dataset.observe` of `count(1)` plus the stage's own counters,
+  * so nothing is read back to be counted. The manifest is one JSON object:
+  *   - `stage`: the stage name;
+  *   - `rows`: rows written;
+  *   - `counters`: name → value of every other observed aggregate (the
+  *     stage's counters over its written rows, and the row counts of its
+  *     inputs, see [[StageInputs]]);
+  *   - `schema`: the written schema as Spark JSON — read-backs and resumes
+  *     pass it to the reader, so no parquet schema-inference job runs;
+  *   - `files`: `{path, bytes}` of every data file under `data/`, from a
+  *     filesystem listing.
+  * It is committed by temp file + rename, after the data. A manifest that is
+  * missing, does not parse, lists a file that is absent or has another
+  * size, or lacks a counter the stage now records marks the stage as not
+  * done, and the stage is recomputed. A resume
+  * therefore reads only manifests and launches no Spark job.
   *
   * Triple layout for scale: partitioned by `pred_bucket` (16-way — predicate
   * sets are small and skewed, bucketing by hash keeps partition counts
@@ -22,31 +45,124 @@ import org.apache.spark.sql.functions._
   */
 object Materialize {
 
-  final case class StageResult(path: String, rows: Long, reused: Boolean)
+  /** A stage's outcome, fresh or reused: rows written and its counters, as
+    * recorded in the manifest. */
+  final case class StageResult(path: String, rows: Long, reused: Boolean, counters: Map[String, Long])
+
+  /** Row-count counters over a stage's inputs. A compute wraps each input
+    * it wants counted in [[count]], under a name the stage declared; the
+    * counts land in the manifest's `counters`. Place the counted input after
+    * its last shuffle, so its count, like the stage's own counters, runs in
+    * the write's final stage. */
+  final class StageInputs private[Materialize] (private[Materialize] val declared: Seq[String]) {
+    private[Materialize] val observed = mutable.ArrayBuffer[Observation]()
+
+    def count(df: DataFrame, counter: String): DataFrame = {
+      require(declared.contains(counter), s"input counter $counter is not declared by the stage")
+      val o = Observation()
+      observed += o
+      df.observe(o, functions.count(lit(1)).as(counter))
+    }
+  }
+
+  /** Predicate buckets of the triple table. */
+  val PredBuckets = 16
+
+  private val Json = new ObjectMapper()
 
   private def manifestPath(dir: String) = Paths.get(dir, "_meta", "manifest.json")
 
-  def manifestExists(dir: String): Boolean = Files.exists(manifestPath(dir))
+  private def dataDir(dir: String) = s"$dir/data"
 
-  /** Run `compute` as a resumable snapshot stage: skip + re-read when the
-    * snapshot manifest is already present. */
-  def snapshotStage(spark: SparkSession, name: String, dir: String)(compute: => DataFrame): (DataFrame, StageResult) = {
-    if (manifestExists(dir)) {
-      val df = spark.read.parquet(s"$dir/data")
-      (df, StageResult(dir, -1L, reused = true))
-    } else {
-      val df = compute
-      df.write.mode("overwrite").parquet(s"$dir/data")
-      val back = spark.read.parquet(s"$dir/data")
-      val partCounts = back.groupBy(spark_partition_id().as("pid")).count()
-        .collect().map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-      val rows = partCounts.map(_.split("\"rows\":")(1).dropRight(1).toLong).sum
-      Files.createDirectories(manifestPath(dir).getParent)
-      Files.writeString(manifestPath(dir),
-        s"""{"stage":"$name","rows":$rows,"partitions":[${partCounts.mkString(",")}]}""")
-      (back, StageResult(dir, rows, reused = false))
+  /** The committed manifest of the stage at `dir` as (result, written
+    * schema), or None when the stage must be (re)computed: also when the
+    * manifest lacks one of the `expected` counters, e.g. one written before
+    * the stage gained a counter. */
+  private def committed(dir: String, expected: Seq[String]): Option[(StageResult, StructType)] = Try {
+    val m = Json.readTree(Files.readString(manifestPath(dir)))
+    val files = m.required("files").elements().asScala.toSeq
+    require(files.forall { f =>
+      val p = Paths.get(dataDir(dir), f.required("path").asText())
+      Files.isRegularFile(p) && Files.size(p) == f.required("bytes").asLong()
+    })
+    val counters = m.required("counters").properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong()).toMap
+    require(expected.forall(counters.contains))
+    val schema = DataType.fromJson(m.required("schema").toString).asInstanceOf[StructType]
+    (StageResult(dir, m.required("rows").asLong(), reused = true, counters), schema)
+  }.toOption
+
+  /** Every data file under `data/` as (relative path, bytes), sorted;
+    * hidden and `_`-prefixed files (checksums, `_SUCCESS`) are not data. */
+  private def dataFiles(dir: String): Seq[(String, Long)] = {
+    val root = Paths.get(dataDir(dir))
+    def isData(p: Path) = Files.isRegularFile(p) && !p.getFileName.toString.matches("[._].*")
+    Using.resource(Files.walk(root))(_.iterator.asScala.filter(isData).toList)
+      .map(p => root.relativize(p).toString -> Files.size(p)).sorted
+  }
+
+  /** The one stage writer: `rows` is `df` with `count(1)` and the named
+    * `counters` observed as its last operator, so every observed aggregate
+    * runs in the write's final (result) stage, where Spark applies each
+    * task's accumulator update exactly once, also when tasks are retried.
+    * Open it with [[beginWrite]], save exactly `rows` (saving any other
+    * frame leaves the observation unfilled, and [[commit]] would wait for it
+    * forever), then call [[commit]], which records the observed values, the
+    * schema and the file listing in the manifest. The save stays in each
+    * stage's own method because the benchmark's per-layer trace keys on the
+    * call site Spark records for the write. */
+  private final class StageWrite(name: String, dir: String, df: DataFrame,
+                                 counters: Seq[(String, Column)], inputs: StageInputs) {
+    private val out = Observation()
+    val rows: DataFrame =
+      df.observe(out, count(lit(1)).as("rows"), counters.map { case (n, c) => c.as(n) }: _*)
+
+    def commit(): StageResult = {
+      val observed = (out +: inputs.observed.toSeq).flatMap(_.get)
+        .map { case (k, v) => k -> v.asInstanceOf[Number].longValue }.toMap
+      // a manifest without a declared counter would never be reused
+      val missing = inputs.declared.filterNot(observed.contains)
+      require(missing.isEmpty, s"stage $name never counted its inputs ${missing.mkString(", ")}")
+      val counters = (observed - "rows").toSeq.sorted
+      val m = Json.createObjectNode().put("stage", name).put("rows", observed("rows"))
+      val cs = m.putObject("counters")
+      counters.foreach { case (k, v) => cs.put(k, v) }
+      m.set("schema", Json.readTree(rows.schema.json))
+      val fs = m.putArray("files")
+      dataFiles(dir).foreach { case (p, n) => fs.addObject().put("path", p).put("bytes", n) }
+      val target = manifestPath(dir)
+      Files.createDirectories(target.getParent)
+      val tmp = target.resolveSibling(".manifest.json.tmp")
+      Files.writeString(tmp, Json.writeValueAsString(m))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      StageResult(dir, observed("rows"), reused = false, counters.toMap)
     }
   }
+
+  /** Start a stage write: the stale manifest goes first, so it cannot
+    * outlive the data the save overwrites. */
+  private def beginWrite(name: String, dir: String, df: DataFrame, counters: Seq[(String, Column)],
+                         inputs: StageInputs = new StageInputs(Nil)): StageWrite = {
+    Files.deleteIfExists(manifestPath(dir))
+    new StageWrite(name, dir, df, counters, inputs)
+  }
+
+  /** Run `compute` as a resumable snapshot stage: skip + re-read when the
+    * stage's manifest is committed. The returned frame reads the snapshot
+    * with the manifest's schema. `counters` are named aggregates over the
+    * written rows; `compute` may count its inputs through the given
+    * [[StageInputs]] under the names in `inputCounters`. */
+  def snapshotStage(spark: SparkSession, name: String, dir: String,
+                    counters: Seq[(String, Column)] = Nil, inputCounters: Seq[String] = Nil)(
+      compute: StageInputs => DataFrame): (DataFrame, StageResult) =
+    committed(dir, counters.map(_._1) ++ inputCounters) match {
+      case Some((res, schema)) => (spark.read.schema(schema).parquet(dataDir(dir)), res)
+      case None =>
+        val inputs = new StageInputs(inputCounters)
+        val w = beginWrite(name, dir, compute(inputs), counters, inputs)
+        w.rows.write.mode("overwrite").parquet(dataDir(dir))
+        (spark.read.schema(w.rows.schema).parquet(dataDir(dir)), w.commit())
+    }
 
   /** Materialize the adjacency table: one row per subject with the full
     * out-degree and a capped, deterministically-ordered adjacency list
@@ -56,8 +172,8 @@ object Materialize {
     * which is bucketed for exactly that. Degree stays exact (count, not
     * list size). */
   def adjacency(rows: DataFrame, dir: String, maxFanout: Int = 1024, subjBuckets: Int = 64): StageResult = {
-    val spark = rows.sparkSession
-    if (manifestExists(dir)) return StageResult(dir, -1L, reused = true)
+    val done = committed(dir, Nil)
+    if (done.isDefined) return done.get._1
     val triples = rows.filter(col("error").isNull)
     // Degree/n_pred: plain aggregates — map-side partial, skew-safe.
     val degrees = triples.groupBy("subj")
@@ -75,15 +191,10 @@ object Materialize {
       .agg(sort_array(collect_list(struct(col("pred"), col("obj")))).as("edges"))
     val adj = degrees.join(capped, "subj")
       .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    adj.repartition(col("subj_hash"))
-      .sortWithinPartitions("subj")
-      .write.mode("overwrite").parquet(s"$dir/data")
-    val back = spark.read.parquet(s"$dir/data")
-    val rows2 = back.count()
-    Files.createDirectories(manifestPath(dir).getParent)
-    Files.writeString(manifestPath(dir),
-      s"""{"stage":"adjacency","rows":$rows2,"maxFanout":$maxFanout,"buckets":$subjBuckets}""")
-    StageResult(dir, rows2, reused = false)
+    val stage = beginWrite("adjacency", dir,
+      adj.repartition(col("subj_hash")).sortWithinPartitions("subj"), Nil)
+    stage.rows.write.mode("overwrite").parquet(dataDir(dir))
+    stage.commit()
   }
 
   /** Catalog-bucketed triple table (`bucketBy` + `saveAsTable`): subject-hash
@@ -172,28 +283,23 @@ object Materialize {
   }
 
   /** Materialize the triple table: pred_bucket partitions on disk, rows
-    * co-located and sorted by subject within files. */
+    * co-located and sorted by subject within files. Counters: the row count
+    * of each predicate bucket, `pred_bucket_0` … `pred_bucket_15`. */
   def triples(rows: DataFrame, dir: String, subjBuckets: Int = 64): StageResult = {
-    val spark = rows.sparkSession
-    if (manifestExists(dir)) return StageResult(dir, -1L, reused = true)
+    val bucketCounts = (0 until PredBuckets).map(b =>
+      s"pred_bucket_$b" -> count(when(col("pred_bucket") === b, 1)))
+    val done = committed(dir, bucketCounts.map(_._1))
+    if (done.isDefined) return done.get._1
     val keyed = rows
       .filter(col("error").isNull)
-      .withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(16)).cast("int"))
+      .withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(PredBuckets)).cast("int"))
       .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    keyed
-      .repartition(col("subj_hash"))
-      .sortWithinPartitions("subj", "pred")
-      .write.mode("overwrite")
+    val stage = beginWrite("triples", dir,
+      keyed.repartition(col("subj_hash")).sortWithinPartitions("subj", "pred"), bucketCounts)
+    stage.rows.write.mode("overwrite")
       .partitionBy("pred_bucket")
-      .parquet(s"$dir/data")
-    val back = spark.read.parquet(s"$dir/data")
-    val perBucket = back.groupBy("pred_bucket").count().collect()
-      .map(r => s"""{"pred_bucket":${r.get(0)},"rows":${r.getLong(1)}}""")
-    val rows2 = back.count()
-    Files.createDirectories(manifestPath(dir).getParent)
-    Files.writeString(manifestPath(dir),
-      s"""{"stage":"triples","rows":$rows2,"buckets":$subjBuckets,"partitions":[${perBucket.mkString(",")}]}""")
-    StageResult(dir, rows2, reused = false)
+      .parquet(dataDir(dir))
+    stage.commit()
   }
 }
 

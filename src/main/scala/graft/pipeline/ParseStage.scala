@@ -90,24 +90,15 @@ object ParseStage {
     parseTurns(turns, opts)
       .withColumn("graph", if (opts.defaultGraph.isEmpty) lit(null: String) else lit(opts.defaultGraph))
 
-  /** Parse only the RDF/XML turns of the synthesized transcripts (even
-    * turn_idx carries the payloads; odd ones are prose for NER). The filter
-    * sits on a base column, so it is pushed below everything else. */
+  /** Parse only the RDF/XML turns of the synthesized transcripts: the
+    * even-turn payloads, emitted directly by `Transcripts.payloadTurns`,
+    * the one place that holds the payload/prose turn-parity rule. */
   def parsedTranscripts(spark: SparkSession, sfDir: String): Dataset[TripleRow] =
-    parseTurns(payloadTurns(spark, sfDir))
+    parseTurns(Transcripts.payloadTurns(spark, sfDir))
 
   /** [[parsedTranscripts]] through the quads surface — same payload-turn
     * selection, with the graph column from `opts.defaultGraph`. */
   def parsedQuadTranscripts(spark: SparkSession, sfDir: String,
                             opts: ParserOptions): DataFrame =
-    parseQuads(payloadTurns(spark, sfDir), opts)
-
-  /** The even-turn payload convention, pinned in exactly one place so the
-    * triple and quad surfaces can never diverge. `Transcripts.payloadTurns`
-    * IS `transcripts(...).filter(turn_idx % 2 = 0)` by construction
-    * (structural turn parity, spec-pinned) — emitted directly so the parse
-    * family never generates the prose turns it would discard, nor reads or
-    * shuffles the raw text column they embed (r7 optimization). */
-  private def payloadTurns(spark: SparkSession, sfDir: String): DataFrame =
-    Transcripts.payloadTurns(spark, sfDir)
+    parseQuads(Transcripts.payloadTurns(spark, sfDir), opts)
 }

@@ -43,6 +43,23 @@ class ConnectedComponentsSpec extends SparkSuite {
     }
   }
 
+  test("entities rule: count(node = component) = count(distinct component) on both paths") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // KgPipeline counts entities as the rows whose node is its own component
+    // while it writes the canonical snapshot; that is the number of
+    // components only if every representative maps to itself. Input: six
+    // groups of ten nodes, linked only within a group, so several components
+    val rnd = new scala.util.Random(7)
+    val es = List.fill(60) { val g = rnd.nextInt(6); (s"g$g-${rnd.nextInt(10)}", s"g$g-${rnd.nextInt(10)}") }
+      .filter { case (a, b) => a != b }
+    for (limit <- Seq(ConnectedComponents.DriverEdgeLimit, 0L)) {
+      val cc = ConnectedComponents.run(es.toDF("a", "b"), driverEdgeLimit = limit)
+      val r = cc.agg(count(when(col("node") === col("component"), 1)), countDistinct(col("component"))).head()
+      assert(r.getLong(0) == r.getLong(1) && r.getLong(1) > 1, s"driverEdgeLimit=$limit: $r")
+    }
+  }
+
   test("supplementary-plane ids: driver and distributed paths pick the same component label") {
     import spark.implicits._
     // "" (private-use BMP char) vs "😀" (U+1F600 emoji):

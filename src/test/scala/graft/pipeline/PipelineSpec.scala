@@ -58,9 +58,9 @@ class PipelineSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_snap").toString
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val (df1, r1) = Materialize.snapshotStage(spark, "s", dir)(compute)
+    val (df1, r1) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
     assert(!r1.reused && r1.rows == 2 && computes == 1)
-    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(compute)
+    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
     assert(r2.reused && computes == 1)
     assert(df2.collect().map(_.getInt(0)).sorted sameElements Array(1, 2))
     assert(Files.readString(java.nio.file.Paths.get(dir, "_meta", "manifest.json")).contains("\"rows\":2"))
@@ -94,6 +94,91 @@ class PipelineSpec extends SparkSuite {
     assert(adj.count() > 0)
     val r = adj.selectExpr("max(degree)", "max(size(edges))", "min(size(edges))").head()
     assert(r.getLong(0) >= r.getInt(1) && r.getInt(2) >= 1)
+  }
+
+  /** Spark jobs `f` launches, counted by a listener. A sentinel job closes
+    * the window: the listener bus is FIFO, so once the sentinel's JobStart
+    * has arrived every job `f` launched has been counted. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("graft.sentinel") != null) sentinelSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("PipelineStats from the manifests equal the recomputing derivations; a resume launches no Spark job") {
+    val out = Files.createTempDirectory("graft_kg_stats").toString
+    val stats = KgPipeline.run(spark, sfDir, out)
+    // reference formulations: the six actions that rebuilt the stats from
+    // the transcripts and the snapshots before the stages counted their rows
+    def snap(stage: String) = spark.read.parquet(s"$out/$stage/data")
+    val allTriples = snap("triples_all")
+    val reference = KgPipeline.PipelineStats(
+      turns = Transcripts.transcripts(spark, sfDir).count(),
+      triples = allTriples.count(),
+      parseErrors = snap("parse").filter(col("error").isNotNull).count(),
+      mentions = snap("mentions").count(),
+      entities = snap("canonical").select("component").distinct().count(),
+      subjectsApprox = allTriples.agg(approx_count_distinct("subj", 0.02)).head().getLong(0),
+      reusedStages = 0)
+    assert(stats == reference)
+    val (resumed, jobs) = jobsOf(KgPipeline.run(spark, sfDir, out))
+    assert(jobs == 0, s"a resumed KgPipeline.run launched $jobs Spark job(s)")
+    assert(resumed == stats.copy(reusedStages = 6))
+    // the triple table's per-bucket counters add up to its rows
+    val graph = Materialize.triples(spark.emptyDataFrame, s"$out/graph")
+    assert(graph.reused && graph.counters.size == Materialize.PredBuckets &&
+      graph.counters.values.sum == graph.rows && graph.rows == stats.triples)
+  }
+
+  test("a truncated or missing manifest, a missing counter or a missing data file forces a recompute") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_snap_trunc").toString
+    var computes = 0
+    def compute = { computes += 1; Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v") }
+    val manifest = java.nio.file.Paths.get(dir, "_meta", "manifest.json")
+    val (_, r1) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    assert(!r1.reused && r1.rows == 3 && computes == 1)
+    val text = Files.readString(manifest)
+    Files.writeString(manifest, text.take(text.length / 2))
+    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    assert(!r2.reused && r2.rows == 3 && computes == 2)
+    assert(df2.count() == 3)
+    Files.delete(manifest)
+    val (_, r3) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    assert(!r3.reused && computes == 3)
+    val (df4, r4) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    assert(r4.reused && r4.rows == 3 && computes == 3)
+    // the resumed frame reads with the recorded schema, as inference would
+    assert(df4.schema == spark.read.parquet(s"$dir/data").schema)
+    // the stage gained a counter the manifest lacks: recompute, then reuse
+    val nB = Seq("n_b" -> count(when(col("v") === "b", 1)))
+    val (_, r4b) = Materialize.snapshotStage(spark, "s", dir, nB)(_ => compute)
+    assert(!r4b.reused && r4b.counters == Map("n_b" -> 1L) && computes == 4)
+    val (_, r4c) = Materialize.snapshotStage(spark, "s", dir, nB)(_ => compute)
+    assert(r4c.reused && r4c.counters == Map("n_b" -> 1L) && computes == 4)
+    val (_, r4d) = Materialize.snapshotStage(spark, "s", dir, inputCounters = Seq("rows_in")) { in =>
+      in.count(compute, "rows_in")
+    }
+    assert(!r4d.reused && r4d.counters == Map("rows_in" -> 3L) && computes == 5)
+    // a data file the manifest lists is gone: recompute, not a short read
+    Files.list(java.nio.file.Paths.get(dir, "data")).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().ifPresent(p => Files.delete(p))
+    val (df5, r5) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    assert(!r5.reused && computes == 6 && df5.count() == 3)
+    assert(!Files.list(manifest.getParent).anyMatch(_.getFileName.toString.endsWith(".tmp")))
   }
 
   test("ntriples text sink: canonical line-per-triple output, parse round-trip") {
@@ -145,8 +230,8 @@ class PipelineSpec extends SparkSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val small = KgPipeline.joinCanonical(mentions, canonical, maxBroadcastRows = 1000000)
-      val large = KgPipeline.joinCanonical(mentions, canonical, maxBroadcastRows = 0)
+      val small = KgPipeline.joinCanonical(mentions, canonical, canonicalRows = 3, maxBroadcastRows = 1000000)
+      val large = KgPipeline.joinCanonical(mentions, canonical, canonicalRows = 3, maxBroadcastRows = 0)
       assert(small.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
       val largePlan = large.queryExecution.executedPlan.toString
       assert(!largePlan.contains("BroadcastHashJoin"), largePlan) // sort-merge/shuffled-hash fallback
