@@ -84,129 +84,10 @@ object BenchExtra {
         }
         val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
         println(f"""{"metric":"noop_total","value":${results.map(_._2).sum}%.2f,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-      case Some("streamprobe") =>
-        streamProbe(spark, sfDir)
-      case Some("abassign") =>
-        abAssign(spark, sfDir)
       case other =>
-        System.err.println(s"usage: BenchExtra plans <outDir> [suffix] | noop [q1,q2,...] | streamprobe; got $other")
+        System.err.println(s"usage: BenchExtra plans <outDir> [suffix] | noop [q1,q2,...]; got $other")
         sys.exit(2)
     }
     spark.stop()
-  }
-
-  /** Interleaved A/B of the r7 map-side argmax/argmin assignment kernels
-    * against their defining aggregate formulations (guide §1: the VM's
-    * weather swings full-suite runs by ±30%; alternating both forms inside
-    * one JVM cancels it to first order). Noop sink — every column computed.
-    * A = defining groupBy aggregate, B = map-side native kernel. */
-  private def abAssign(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.ops.Similarity
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val e = Similarity.withNorms(emb)
-    val cb = Similarity.coarseCodebook(e, 16)
-    def t(f: => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "assignA" -> (() => Similarity.coarseAssignByAgg(e, cb)),
-      "assignB" -> (() => Similarity.coarseAssign(e, cb)),
-      "pqA" -> (() => Similarity.pqCodesByAgg(emb, dim = 64)),
-      "pqB" -> (() => Similarity.pqCodes(emb, dim = 64)),
-      "ivfTrainedB" -> (() => Similarity.ivfTopK(emb, 16, 5, trainIters = 2)),
-      "pqTrainedB" -> (() => Similarity.pqCodes(emb, dim = 64, trainIters = 2)))
-    val reps = sys.env.get("SPARK_GRAFT_AB_REPS").flatMap(_.toIntOption).getOrElse(5)
-    val acc = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-    for (r <- 1 to reps; (name, f) <- cases) {
-      spark.sparkContext.setJobDescription(s"ab:$name#$r")
-      acc(name) = t(f()) :: acc(name)
-    }
-    val out = cases.map { case (name, _) =>
-      f""""$name":${acc(name).min}%.3f"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"abassign_min","reps":$reps,"queries":$out,"sf":"$sfDir"}""")
-  }
-
-  /** Stage-isolated timing of the streaming gates' envelope pieces
-    * (guide §1: find where the seconds actually go before touching the
-    * operators). Mirrors the SparkEntry staging shapes without the gates'
-    * result contract — measurement only. */
-  private def streamProbe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[probe] $label%-42s ${(System.nanoTime() - t0) / 1e9}%6.3f s")
-      r
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_probe_").toString
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    val ev = t("read events (count)") {
-      val d = ss.read.parquet(s"$sfDir/events.parquet")
-        .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-          col("event_id"), col("event_type"), col("value"))
-      d.count(); d
-    }
-    t("stage clicks coalesce(1)") {
-      ev.filter(col("event_type") === "click").coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/c")
-    }
-    t("stage purchases coalesce(1)") {
-      ev.filter(col("event_type") === "purchase").coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/p")
-    }
-    t("stage clicks repartition(1)") {
-      ev.filter(col("event_type") === "click").repartition(1)
-        .write.mode("overwrite").parquet(s"$root/c2")
-    }
-    val q = t("attrib stream: plan+run (1 micro-batch)") {
-      val cs = ss.readStream.schema(ev.schema).parquet(s"$root/c")
-      val ps = ss.readStream.schema(ev.schema).parquet(s"$root/p")
-      val out = graft.streaming.StreamingJoins.clickAttribution(cs, ps)
-        .select(col("user_id"), col("click_id"), col("purchase_id"))
-      val sq = out.writeStream.format("parquet")
-        .option("path", s"$root/out").option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      sq.awaitTermination(); sq
-    }
-    println(s"[probe] attrib batches: ${q.recentProgress.length}")
-    q.recentProgress.foreach(p => println(
-      s"[probe]   batch ${p.batchId}: rows=${p.numInputRows} durationMs=${p.durationMs}"))
-    t("read back (count)") { ss.read.parquet(s"$root/out").count() }
-
-    // sessions shape: 1 real file + sentinels, maxFilesPerTrigger=1
-    val batch = ss.read.parquet(s"$sfDir/events.parquet")
-      .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_id"))
-    t("sessions stage real coalesce(1)") {
-      batch.coalesce(1).write.mode("overwrite").parquet(s"$root/sin")
-    }
-    val mxMs = batch.agg(max(col("ts"))).head().getTimestamp(0).getTime
-    t("sessions stage 2 sentinels") {
-      Seq(1, 2).foreach { d =>
-        ss.range(1).select(lit(-d.toLong).as("user_id"),
-            timestamp_millis(lit(mxMs + d * 86400000L)).as("ts"),
-            lit(-d.toLong).as("event_id"))
-          .coalesce(1).write.mode("append").parquet(s"$root/sin")
-      }
-    }
-    val q2 = t("sessions stream (3 files, mfpt=1)") {
-      val src = ss.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$root/sin")
-      val sq = graft.streaming.StreamingJoins.sessionize(ss, src).toDF()
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), unix_micros(col("session_start")).as("s"))
-        .writeStream.format("parquet")
-        .option("path", s"$root/sout").option("checkpointLocation", s"$root/sckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      sq.awaitTermination(); sq
-    }
-    println(s"[probe] sessions batches: ${q2.recentProgress.length}")
-    q2.recentProgress.foreach(p => println(
-      s"[probe]   batch ${p.batchId}: rows=${p.numInputRows} durationMs=${p.durationMs}"))
-    t("sessions read back (count)") { ss.read.parquet(s"$root/sout").count() }
   }
 }

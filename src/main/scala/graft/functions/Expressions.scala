@@ -19,17 +19,6 @@ private[functions] object InputCheck {
     case org.apache.spark.sql.types.NullType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(s"$name requires a string input, got ${t.sql}")
   }
-  def stringArray(e: Expression, name: String): TypeCheckResult = e.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    // NullType admitted like Spark builtins (a NULL literal evaluates to
-    // NULL via the null-safe eval; no implicit cast is inserted for custom
-    // expressions, so rejecting it would fail `f(NULL)` at analysis)
-    case org.apache.spark.sql.types.NullType => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(org.apache.spark.sql.types.NullType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$name requires an array<string> input (e.g. word_shingles(text, n)), got ${t.sql}")
-  }
-
   /** array<string> (shingles, hashed internally) OR array<long>
     * (pre-computed fnv1a64 hashes, e.g. word_gram_hashes output). */
   def stringOrLongArray(e: Expression, name: String): TypeCheckResult = e.dataType match {

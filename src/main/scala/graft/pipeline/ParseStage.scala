@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.rdf._
 
-/** One parsed-triple output row. Terms are carried in canonical N-Triples
-  * text (`subj`/`pred`/`obj`) plus decomposed object fields for relational
-  * work; `error` is the per-document error channel (a bad document becomes
-  * one error row, never a task failure — reference semantics R28,
-  * `lib/ParseError.ts:7-12`). Blank nodes are relabeled
-  * `_:{conv_id}_{turn_idx}_{label}` (P4): per-document isomorphism is
-  * preserved while labels become globally unique, which is what lets
-  * downstream stages treat triples as plain strings.
+/** One parsed-triple output row: the `(conv_id, turn_idx)` lineage, then
+  * the columns of [[graft.rdf.TripleColumns]] (term text, the decomposed
+  * object and the per-document error channel). Blank nodes are renumbered
+  * per turn and prefixed by [[graft.rdf.Relabeler.forTurn]], e.g.
+  * `_:c1_0_b0` (P4): per-document isomorphism is preserved while labels
+  * become globally unique, which is what lets downstream stages treat
+  * triples as plain strings.
   */
 final case class TripleRow(
     conv_id: String,
@@ -20,7 +19,7 @@ final case class TripleRow(
     subj: String,
     pred: String,
     obj: String,
-    obj_type: String, // iri | bnode | literal | triple
+    obj_type: String,
     lexical: String,
     datatype: String,
     lang: String,
@@ -44,24 +43,8 @@ object ParseStage {
   }
 
   private[pipeline] def toRows(conv: String, turn: Int, parsed: Either[ParseError, Vector[Triple]]): Iterator[TripleRow] =
-    parsed match {
-      case Left(e) =>
-        Iterator(TripleRow(conv, turn, null, null, null, "error", null, null, null, e.message))
-      case Right(ts) =>
-        // P4: canonical bnode relabel `_:{conv}_{turn}_bN` (shared impl —
-        // see graft.rdf.Relabeler)
-        val relabel = new Relabeler(s"${conv}_${turn}_")
-        ts.iterator.map { t0 =>
-          val t = relabel(t0)
-          val (oty, lex, dt, lang) = t.obj match {
-            case Lit(l, d, la, _) => ("literal", l, d, la)
-            case Iri(_)           => ("iri", null, null, null)
-            case BNode(_)         => ("bnode", null, null, null)
-            case TripleTerm(_)    => ("triple", null, null, null)
-          }
-          TripleRow(conv, turn, t.subj.ntriples, t.pred.ntriples, t.obj.ntriples, oty, lex, dt, lang, null)
-        }
-    }
+    TripleColumns.rows(parsed, Relabeler.forTurn(conv, turn))
+      .map(v => TripleRow(conv, turn, v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7)))
 
   /** P3: the per-turn parse. Column pruning is done *manually* before the
     * opaque typed map (Catalyst cannot prune across `mapPartitions` — the

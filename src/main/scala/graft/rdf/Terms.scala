@@ -80,15 +80,15 @@ final case class Triple(subj: Term, pred: Term, obj: Term) {
   * stage P4 and the DSv2 source): bnodes are renumbered `b0, b1, …` in order
   * of first appearance in the emitted stream — deterministic for a
   * deterministic document and independent of internal counter details — then
-  * prefixed with the caller's document lineage (`{conv}_{turn}_` /
-  * `{md5(path)}_`), making labels globally unique across the corpus.
+  * prefixed with the document's lineage ([[Relabeler.forTurn]] /
+  * [[Relabeler.forPath]]), making labels globally unique across the corpus.
   * Recurses into RDF 1.2 triple terms. One instance per document.
   *
   * One implementation on purpose: the pipeline and the source each had a
   * private copy, and the two diverged once (the truncated-MD5-prefix
   * collision bug) before being re-unified here.
   */
-final class Relabeler(prefix: String) {
+final class Relabeler private (prefix: String) {
   private val seen = scala.collection.mutable.HashMap.empty[String, String]
   def apply(t: Term): Term = t match {
     case BNode(l) => BNode(seen.getOrElseUpdate(l, prefix + "b" + seen.size))
@@ -96,6 +96,18 @@ final class Relabeler(prefix: String) {
     case other => other
   }
   def apply(t: Triple): Triple = Triple(apply(t.subj), apply(t.pred), apply(t.obj))
+}
+
+object Relabeler {
+  /** A transcript turn's labels: `{conv}_{turn}_bN`. */
+  def forTurn(conv: String, turn: Int): Relabeler = new Relabeler(s"${conv}_${turn}_")
+
+  /** A file's labels: `{md5(path)}_bN` with the FULL 128-bit path MD5 — a
+    * truncated prefix is not collision-safe (32 bits birthday-collides at
+    * ~65k files, silently merging unrelated blank nodes across documents). */
+  def forPath(path: String): Relabeler = new Relabeler(
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_")
 }
 
 object RdfVocab {

@@ -83,7 +83,6 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
   private var pos: Int = 0 // cursor into buf — consumed prefix is NOT copied away
   private var started = false
   private var closedRoot = false
-  private var seenRoot = false
 
   var line: Int = 1
   var column: Int = 0
@@ -412,7 +411,6 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     }
     val attrs = scala.collection.immutable.ArraySeq.unsafeWrapArray(attrsArr)
 
-    seenRoot = true
     scopes = scope :: scopes
     openNames += name
     handler(OpenTag(name, ePrefix, eLocal, eUri, attrs, selfClosing))

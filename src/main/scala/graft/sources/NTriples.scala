@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.rdf.TripleColumns.{BNodeType, ErrorType, IriType, LiteralType, TripleType}
+
 /** N-Triples / N-Quads SOURCE — the read half of `Materialize.ntriples` /
   * `.nquads` (and of any standard N-Triples dump): lines → rows carrying the
   * same canonical term TEXT the rest of the pipeline uses in its `subj` /
@@ -87,7 +89,7 @@ object NTriples {
     val n = line.length
     def skipWs(): Unit = { while (i < n && (line.charAt(i) == ' ' || line.charAt(i) == '\t')) i += 1 }
     def err(msg: String): Option[NtRow] =
-      Some(NtRow(path, null, null, null, "error", null, null, null, null, s"$msg: ${line.take(160)}"))
+      Some(NtRow(path, null, null, null, ErrorType, null, null, null, null, s"$msg: ${line.take(160)}"))
     // Is the '.' at `pos` the statement terminator (followed only by
     // whitespace and/or a '#' comment)? Needed because blank-node labels and
     // language tags may be followed DIRECTLY by the terminating dot in the
@@ -182,16 +184,16 @@ object NTriples {
   }
 
   /** Decompose a scanned object term into (obj_type, lexical, datatype,
-    * lang) — the same fields [[graft.pipeline.TripleRow]] carries: `lexical`
+    * lang), the text-side inverse of [[graft.rdf.TripleColumns]]: `lexical`
     * is the UNESCAPED literal value, `datatype` the bare datatype IRI,
     * `lang` the language tag WITHOUT the RDF 1.2 `--dir` suffix (direction
     * stays visible in the canonical `obj` text, exactly as in the rdfxml
     * source's rows). The term text was already boundary-validated by the
     * caller's scan. */
   private[sources] def decomposeObject(obj: String): Either[String, (String, String, String, String)] =
-    if (obj.startsWith("<<(")) Right(("triple", null, null, null))
-    else if (obj.startsWith("<")) Right(("iri", null, null, null))
-    else if (obj.startsWith("_:")) Right(("bnode", null, null, null))
+    if (obj.startsWith("<<(")) Right((TripleType, null, null, null))
+    else if (obj.startsWith("<")) Right((IriType, null, null, null))
+    else if (obj.startsWith("_:")) Right((BNodeType, null, null, null))
     else {
       // literal: find the escape-aware closing quote
       var i = 1
@@ -204,13 +206,13 @@ object NTriples {
       if (close < 0) return Left("Unterminated literal")
       unescape(obj.substring(1, close)).flatMap { lex =>
         val suffix = obj.substring(close + 1)
-        if (suffix.isEmpty) Right(("literal", lex, null, null))
+        if (suffix.isEmpty) Right((LiteralType, lex, null, null))
         else if (suffix.startsWith("^^<") && suffix.endsWith(">"))
-          Right(("literal", lex, suffix.substring(3, suffix.length - 1), null))
+          Right((LiteralType, lex, suffix.substring(3, suffix.length - 1), null))
         else if (suffix.startsWith("@")) {
           val tag = suffix.substring(1)
           val dirSep = tag.indexOf("--")
-          Right(("literal", lex, null, if (dirSep >= 0) tag.substring(0, dirSep) else tag))
+          Right((LiteralType, lex, null, if (dirSep >= 0) tag.substring(0, dirSep) else tag))
         }
         else Left("Malformed literal suffix")
       }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Relabeler, Term, Triple, TripleTerm}
+import graft.rdf.{ParserOptions, RdfXmlParser, Relabeler, TripleColumns}
 
 /** `spark.read.format("rdfxml")` — a DataSource V2 batch source that parses
   * RDF/XML files into triple rows, re-expressing the reference's primary
@@ -25,10 +25,11 @@ import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Rela
   *
   * Shape: one RDF/XML document per file; files are unsplittable (a document
   * is one parser state machine), so parallelism = file count, bin-packed
-  * into partitions by size. Schema mirrors [[graft.pipeline.TripleRow]] with
-  * `path` as the lineage column; a malformed document becomes one error row,
-  * never a task failure (R28). Column pruning is pushed into the reader
-  * (`SupportsPushDownRequiredColumns`).
+  * into partitions by size. Schema: the `path` lineage column, then the
+  * columns of [[graft.rdf.TripleColumns]], so a malformed document becomes
+  * one error row, never a task failure (R28), and blank nodes are prefixed
+  * by [[graft.rdf.Relabeler.forPath]]. Column pruning is pushed into the
+  * reader (`SupportsPushDownRequiredColumns`).
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
   * the file URI), `validateUri`, `allowDuplicateRdfIds`.
@@ -44,17 +45,9 @@ class RdfXmlDataSource extends TableProvider with DataSourceRegister {
 }
 
 object RdfXmlTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("subj", StringType),
-    StructField("pred", StringType),
-    StructField("obj", StringType),
-    StructField("obj_type", StringType),
-    StructField("lexical", StringType),
-    StructField("datatype", StringType),
-    StructField("lang", StringType),
-    StructField("error", StringType),
-  ))
+  val Schema: StructType = StructType(
+    StructField("path", StringType, nullable = false) +:
+      TripleColumns.Names.map(StructField(_, StringType)))
 }
 
 final class RdfXmlTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -478,30 +471,11 @@ final class RdfXmlPartitionReader(
     finally in.close()
   }
 
-  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+  /** Per output column, its index in [[TripleColumns.Names]]; -1 is `path`. */
+  private val ordinals = fieldNames.map(n => TripleColumns.Names.indexOf(n))
 
-  private def toRow(path: String, t: Triple, err: String): InternalRow = {
-    val (oty, lex, dt, lang) =
-      if (t == null) (if (err != null) "error" else null, null, null, null)
-      else t.obj match {
-        case Lit(l, d, la, _) => ("literal", l, d, la)
-        case Iri(_)           => ("iri", null, null, null)
-        case BNode(_)         => ("bnode", null, null, null)
-        case TripleTerm(_)    => ("triple", null, null, null)
-      }
-    val all: Map[String, String] = Map(
-      "path" -> path,
-      "subj" -> (if (t == null) null else t.subj.ntriples),
-      "pred" -> (if (t == null) null else t.pred.ntriples),
-      "obj" -> (if (t == null) null else t.obj.ntriples),
-      "obj_type" -> oty,
-      "lexical" -> lex,
-      "datatype" -> dt,
-      "lang" -> lang,
-      "error" -> err,
-    )
-    new GenericInternalRow(fieldNames.map(n => utf8(all(n)): Any))
-  }
+  private def toRow(path: UTF8String, values: Array[String]): InternalRow =
+    new GenericInternalRow(ordinals.map(o => (if (o < 0) path else UTF8String.fromString(values(o))): Any))
 
   private def parseNext(): Boolean = {
     while (!rows.hasNext && fileIdx < files.length) {
@@ -509,18 +483,9 @@ final class RdfXmlPartitionReader(
       fileIdx += 1
       val base = if (baseIRI.contains("{path}")) baseIRI.replace("{path}", path) else baseIRI
       val opts = ParserOptions(baseIRI = base, validateUri = validateUri, allowDuplicateRdfIds = allowDup)
-      rows = RdfXmlParser.parse(readFile(path), opts) match {
-        case Left(ParseError(msg)) => Iterator.single(toRow(path, null, msg))
-        case Right(ts) =>
-          // Globally-unique bnode relabel (shared graft.rdf.Relabeler), keyed
-          // by file: the FULL 128-bit path MD5 as prefix — a truncated prefix
-          // is not collision-safe (32 bits birthday-collides at ~65k files,
-          // silently merging unrelated blank nodes across documents).
-          val relabel = new Relabeler(
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_")
-          ts.iterator.map(t => toRow(path, relabel(t), null))
-      }
+      val pathUtf8 = UTF8String.fromString(path)
+      rows = TripleColumns.rows(RdfXmlParser.parse(readFile(path), opts), Relabeler.forPath(path))
+        .map(v => toRow(pathUtf8, v))
     }
     rows.hasNext
   }

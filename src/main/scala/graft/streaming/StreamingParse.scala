@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.pipeline.{ParseStage, Materialize}
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
+import graft.pipeline.ParseStage
 
 /** Structured Streaming wrapper for the KG pipeline.
   *
@@ -11,23 +10,22 @@ import graft.pipeline.{ParseStage, Materialize}
   * §3 E1), not event-time processing — each transcript turn is
   * self-contained, so the streaming job is stateless: `readStream` over a
   * transcript directory → the same shuffle-free mapPartitions parse →
-  * append-mode sink. A `foreachBatch` variant runs the downstream
-  * (linking/canonicalization) stages per micro-batch when those are wanted
-  * incrementally; watermarking is provided for the one genuinely
-  * event-time-ish operator we expose (per-conversation turn counts over
-  * `ts`).
+  * append-mode sink. Per-conversation progress is the one stateful
+  * operator we expose.
   */
 final case class ConvProgress(conv_id: String, n_turns: Long, max_turn_idx: Int)
 
 object StreamingParse {
 
-  /** Parse a stream of transcript parquet files into a stream of triples. */
-  def parseStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val turns = spark.readStream
+  /** Stream reader with the transcript turn schema (a file stream does not
+    * infer one). */
+  private def transcriptReader(spark: SparkSession): DataStreamReader =
+    spark.readStream
       .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    ParseStage.parseTurns(turns).toDF()
-  }
+
+  /** Parse a stream of transcript parquet files into a stream of triples. */
+  def parseStream(spark: SparkSession, inputDir: String): DataFrame =
+    ParseStage.parseTurns(transcriptReader(spark).parquet(inputDir)).toDF()
 
   /** Append-mode parquet sink for the parsed triple stream. */
   def run(spark: SparkSession, inputDir: String, outDir: String, checkpoint: String): StreamingQuery =
@@ -37,19 +35,6 @@ object StreamingParse {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Windowed per-conversation turn counts with a watermark — the
-    * event-time aggregation surface (10-minute windows over `ts`, 30-minute
-    * late-data bound). */
-  def turnRates(spark: SparkSession, inputDir: String): DataFrame = {
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    turns
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("conv_id"))
-      .agg(count(lit(1)).as("n_turns"))
-  }
 
   /** Per-conversation progress tracked across micro-batches with
     * `mapGroupsWithState` — the custom-state surface
@@ -61,8 +46,7 @@ object StreamingParse {
   def conversationProgress(spark: SparkSession, inputDir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
+    val turns = transcriptReader(spark)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
       .select("conv_id", "turn_idx")
@@ -80,23 +64,5 @@ object StreamingParse {
           next
       }
       .toDF()
-  }
-
-  /** foreachBatch variant: run parse + materialization per micro-batch —
-    * the pattern for attaching the batch-only stages (linking, CC) to a
-    * stream without stateful operators. */
-  def runWithBatchStages(spark: SparkSession, inputDir: String, outDir: String, checkpoint: String): StreamingQuery = {
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    turns.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = ParseStage.parseTurns(batch).toDF()
-        parsed.write.mode("append").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.pipeline.SparkSuite
-import org.apache.spark.sql.functions._
 
 class ChunkingSpec extends SparkSuite {
 
@@ -70,7 +69,6 @@ class ChunkingSpec extends SparkSuite {
   }
 
   test("chunkDocs plans no shuffle; packSequences plans exactly one bucket-key exchange") {
-    import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val chunkPlan = Chunking.chunkDocs(docs).queryExecution.executedPlan.toString
     assert(!chunkPlan.contains("Exchange"), s"chunking must be map-only:\n$chunkPlan")

@@ -44,7 +44,6 @@ class MergeSpec extends SparkSuite {
   }
 
   test("upsertMerge plans one exchange: union + window + filter share the key shuffle") {
-    import spark.implicits._
     val snapshot = spark.range(100).select(col("id").as("k"), lit("v").as("v"))
     val delta = spark.range(10)
       .select(col("id").as("k"), lit("v1").as("v"), lit(1L).as("ver"), lit("U").as("op"))

@@ -396,7 +396,6 @@ class OpsSpec extends SparkSuite {
   }
 
   test("multimodal feature extraction: schema, determinism, stub geometry") {
-    import spark.implicits._
     val feats = Multimodal.extractFeatures(Multimodal.syntheticMedia(docs)).collect()
     assert(feats.length == docs.count())
     val f0 = feats.find(_.doc_id == 0).get

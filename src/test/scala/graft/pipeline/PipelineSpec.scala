@@ -285,7 +285,6 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("dictionary encoding: collision-free ids, dict covers terms, decode is an identity") {
-    import spark.implicits._
     val parsed = ParseStage.parsedTranscripts(spark, sfDir).toDF()
       .filter(col("error").isNull).select("subj", "pred", "obj")
       .localCheckpoint(true)

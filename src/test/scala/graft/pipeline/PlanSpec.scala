@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.SparkEntry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.col
 
 /** Physical-plan hygiene: the properties that make these operators behave
   * at 100 TB are asserted from the actual optimized plans, not hoped for —
@@ -127,7 +126,6 @@ class PlanSpec extends SparkSuite {
   }
 
   test("bucketed triple table: subject self-join is exchange-free (co-located buckets)") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val rows = ParseStage.parseTurns(
       Transcripts.transcripts(spark, sfDir).filter(col("turn_idx") % 2 === 0).limit(50)).toDF()
