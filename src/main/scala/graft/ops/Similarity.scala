@@ -432,7 +432,12 @@ object Similarity {
     * codebook rows — r7, no corpus exchange; the mean groups by
     * (subspace, j, pos)). Same order-free fixed-point mean, same
     * keep-previous-on-empty rule, same per-iteration localCheckpoint of
-    * the bounded m·k-row codebook. */
+    * the bounded m·k-row codebook.
+    *
+    * Precondition: `vsubs` holds one row per `(vec_id, subspace)`, i.e.
+    * `vec_id` is unique in the corpus. The assignment does not deduplicate,
+    * so a duplicated vector counts once per copy in the centroid means and
+    * the trained codebook differs from one trained on distinct vectors. */
   private[graft] def lloydRefinePq(vsubs: DataFrame, init: DataFrame, iters: Int): DataFrame = {
     var cb = init.select(col("j"), col("subspace"),
       transform(col("csub"), x => x.cast("double")).as("csub"))

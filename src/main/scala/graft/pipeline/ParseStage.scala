@@ -42,9 +42,16 @@ object ParseStage {
       .withColumn("dense", col("turn_rank") === col("turn_idx"))
   }
 
-  private[pipeline] def toRows(conv: String, turn: Int, parsed: Either[ParseError, Vector[Triple]]): Iterator[TripleRow] =
-    TripleColumns.rows(parsed, Relabeler.forTurn(conv, turn))
-      .map(v => TripleRow(conv, turn, v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7)))
+  /** One turn's rows: its whole text is one write, so every row is ready
+    * once the document has ended. */
+  private def toRows(conv: String, turn: Int, text: String, opts: ParserOptions): Iterator[TripleRow] = {
+    val doc = new TripleColumns.Document(opts, Relabeler.forTurn(conv, turn))
+    doc.write(text)
+    doc.end()
+    Iterator.continually(doc).takeWhile(_.next()).map(d =>
+      TripleRow(conv, turn, d.value(0), d.value(1), d.value(2), d.value(3),
+        d.value(4), d.value(5), d.value(6), d.value(7)))
+  }
 
   /** P3: the per-turn parse. Column pruning is done *manually* before the
     * opaque typed map (Catalyst cannot prune across `mapPartitions` — the
@@ -60,7 +67,7 @@ object ParseStage {
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .as[TurnSlim]
       .mapPartitions { it =>
-        it.flatMap { t => toRows(t.conv_id, t.turn_idx, RdfXmlParser.parse(t.text, opts)) }
+        it.flatMap(t => toRows(t.conv_id, t.turn_idx, t.text, opts))
       }
   }
 

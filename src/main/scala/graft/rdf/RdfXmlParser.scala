@@ -137,6 +137,10 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   private def isValidVersion(version: String): Boolean =
     opts.parseUnsupportedVersions || RdfXmlParser.SupportedVersions.contains(version)
 
+  /** A per-element list of property attributes or buffered sub-properties:
+    * nearly always empty or short, so it starts at two slots, not 16. */
+  private def attrBuffer[A]: mutable.ArrayBuffer[A] = new mutable.ArrayBuffer[A](2)
+
   private def freshBNode(): BNode = {
     val label =
       if (opts.blankNodeLabel ne null) opts.blankNodeLabel(bnodeCounter) else "b" + bnodeCounter
@@ -283,11 +287,11 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
         activeTag.namespaces += ((s"${a.prefix}:${a.local}", a.value))
       }
     }
+    // Own declarations first, then the parent's. An element that declares
+    // none shares its parent's list: no list is changed after its own tag.
     if (parentTag != null && parentTag.namespaces != null) {
-      val merged = mutable.ArrayBuffer.empty[(String, String)]
-      if (activeTag.namespaces != null) merged ++= activeTag.namespaces
-      merged ++= parentTag.namespaces
-      activeTag.namespaces = merged
+      if (activeTag.namespaces == null) activeTag.namespaces = parentTag.namespaces
+      else activeTag.namespaces ++= parentTag.namespaces
     }
   }
 
@@ -308,8 +312,8 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
       }
     }
 
-    val predicates = mutable.ArrayBuffer.empty[Iri]
-    val objects = mutable.ArrayBuffer.empty[String]
+    val predicates = attrBuffer[Iri]
+    val objects = attrBuffer[String]
 
     // Collect attributes first; subject is assigned only after all
     // attributes are seen because xml:base may still change (`:332-420`).
@@ -318,7 +322,12 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     var subjectValueBlank = false
     var explicitType: String = null
 
-    tag.attributes.foreach { attribute =>
+    // An indexed loop, not foreach: the flags below are then plain locals
+    // rather than heap-boxed captures of a closure, on the hottest path.
+    var next = 0
+    while (next < tag.attributes.length) {
+      val attribute = tag.attributes(next)
+      next += 1
       var handled = true
       if (attribute.uri == RDF && attribute.local == "version") {
         setVersion(activeTag, attribute.value)
@@ -417,8 +426,8 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
                 parentTag.reifier)
               i += 1
             }
-            parentTag.predicateSubPredicates = mutable.ArrayBuffer.empty
-            parentTag.predicateSubObjects = mutable.ArrayBuffer.empty
+            parentTag.predicateSubPredicates = attrBuffer
+            parentTag.predicateSubObjects = attrBuffer
           }
         }
       }
@@ -455,17 +464,20 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     if (tag.uri == RDF && ForbiddenPropertyElements.contains(tag.local))
       throw parseError(s"Illegal property element name: ${tag.local}")
 
-    activeTag.predicateSubPredicates = mutable.ArrayBuffer.empty
-    activeTag.predicateSubObjects = mutable.ArrayBuffer.empty
+    activeTag.predicateSubPredicates = attrBuffer
+    activeTag.predicateSubObjects = attrBuffer
     var parseType = false
     var attributedProperty = false
 
     var activeSubSubjectValue: String = null
     var subSubjectValueBlank = true
-    val predicates = mutable.ArrayBuffer.empty[Iri]
-    val objects = mutable.ArrayBuffer.empty[Term]
+    val predicates = attrBuffer[Iri]
+    val objects = attrBuffer[Term]
 
-    tag.attributes.foreach { attribute =>
+    var next = 0 // indexed, as in onTagResource
+    while (next < tag.attributes.length) {
+      val attribute = tag.attributes(next)
+      next += 1
       var handled = true
       if (attribute.uri == RDF && attribute.local == "version") {
         setVersion(activeTag, attribute.value)
@@ -684,23 +696,27 @@ object RdfXmlParser {
     runToEither(new RdfXmlParser(opts, out += _), text)(out.result())
   }
 
-  /** Single source of the exception → ParseError mapping shared by every
-    * batch entry point — a new error site added to the parser must not make
-    * the plain and factory surfaces diverge. */
+  /** Single source of the exception → ParseError mapping: the batch entry
+    * points and the row surfaces ([[TripleColumns.Document]]) all catch
+    * through it, so a new error site added to the parser cannot make them
+    * diverge. */
+  private[rdf] val AsParseError: PartialFunction[Throwable, ParseError] = {
+    case e: ParseException => ParseError(e.rawMessage)
+    case e: XmlSyntaxException => ParseError(e.getMessage)
+    case e: IriResolver.IriResolutionError => ParseError(e.message)
+    case e: NumberFormatException => ParseError(s"Invalid character reference: ${e.getMessage}")
+  }
+
   private def runToEither[T](parser: RdfXmlParser, text: String)(result: => T): Either[ParseError, T] =
     try {
       parser.write(text)
       parser.end()
       Right(result)
-    } catch {
-      case e: ParseException => Left(ParseError(e.rawMessage))
-      case e: XmlSyntaxException => Left(ParseError(e.getMessage))
-      case e: IriResolver.IriResolutionError => Left(ParseError(e.message))
-      case e: NumberFormatException => Left(ParseError(s"Invalid character reference: ${e.getMessage}"))
-    }
+    } catch AsParseError.andThen(Left(_))
 
-  /** Incremental parse surface for streaming-emission tests: feed chunks,
-    * observe pushes. */
+  /** Incremental parse surface: feed chunks with `write`, finish with
+    * `end`, observe each triple as it is pushed. Used by the file source
+    * (through [[TripleColumns.Document]]) and the streaming-emission tests. */
   def streaming(opts: ParserOptions)(push: Triple => Unit): RdfXmlParser =
     new RdfXmlParser(opts, push)
 

@@ -19,11 +19,21 @@ sealed trait Term {
 }
 
 final case class Iri(iri: String) extends Term {
-  def ntriples: String = "<" + iri + ">"
+  // Built once per term: a subject is serialized again for every triple
+  // that shares it. A racy first build only repeats the same work.
+  private[this] var text: String = _
+  def ntriples: String = {
+    if (text == null) text = "<" + iri + ">"
+    text
+  }
 }
 
 final case class BNode(label: String) extends Term {
-  def ntriples: String = "_:" + label
+  private[this] var text: String = _ // as in Iri
+  def ntriples: String = {
+    if (text == null) text = "_:" + label
+    text
+  }
 }
 
 /** A literal. `datatype == null` means plain (implicitly xsd:string);
@@ -46,8 +56,10 @@ final case class Lit(
 
 object Lit {
   def escape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
     var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) return s // the common case: no copy
+    val sb = new java.lang.StringBuilder(s.length + 8).append(s, 0, i)
     while (i < s.length) {
       s.charAt(i) match {
         case '\\' => sb.append("\\\\")
@@ -61,6 +73,9 @@ object Lit {
     }
     sb.toString
   }
+
+  private def needsEscape(c: Char): Boolean =
+    c == '\\' || c == '"' || c == '\n' || c == '\r' || c == '\t'
 }
 
 /** RDF 1.2 triple term (quoted triple) in the object position.
@@ -90,12 +105,22 @@ final case class Triple(subj: Term, pred: Term, obj: Term) {
   */
 final class Relabeler private (prefix: String) {
   private val seen = scala.collection.mutable.HashMap.empty[String, String]
+  /** Returns `t` itself when it holds no blank node. */
   def apply(t: Term): Term = t match {
     case BNode(l) => BNode(seen.getOrElseUpdate(l, prefix + "b" + seen.size))
-    case TripleTerm(tr) => TripleTerm(apply(tr))
+    case TripleTerm(tr) =>
+      val r = apply(tr)
+      if (r eq tr) t else TripleTerm(r)
     case other => other
   }
-  def apply(t: Triple): Triple = Triple(apply(t.subj), apply(t.pred), apply(t.obj))
+
+  /** Returns `t` itself when it holds no blank node. */
+  def apply(t: Triple): Triple = {
+    val s = apply(t.subj)
+    val p = apply(t.pred)
+    val o = apply(t.obj)
+    if ((s eq t.subj) && (p eq t.pred) && (o eq t.obj)) t else Triple(s, p, o)
+  }
 }
 
 object Relabeler {

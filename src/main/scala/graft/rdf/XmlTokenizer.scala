@@ -77,7 +77,9 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
   /** prefix → uri scopes; one frame per open element. */
   private var scopes: List[Map[String, String]] =
     List(Map("xml" -> RdfVocab.XML, "xmlns" -> RdfVocab.XMLNS))
-  private val openNames = mutable.ArrayBuffer.empty[String]
+  /** Names of the open elements, innermost last; pushed and popped once per
+    * element, so both must be O(1) without clearing any freed tail. */
+  private val openNames = new java.util.ArrayDeque[String]()
 
   private var buf: String = ""
   private var pos: Int = 0 // cursor into buf — consumed prefix is NOT copied away
@@ -87,7 +89,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
   var line: Int = 1
   var column: Int = 0
 
-  def depth: Int = openNames.length
+  def depth: Int = openNames.size
 
   private def fail(msg: String): Nothing = throw new XmlSyntaxException(msg, line, column)
 
@@ -142,7 +144,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
       buf = ""
       pos = 0
     }
-    if (depth > 0) fail(s"Unclosed tag: ${openNames.last}")
+    if (depth > 0) fail(s"Unclosed tag: ${openNames.peekLast}")
   }
 
   private def emitText(raw: String, cdata: Boolean): Unit = {
@@ -308,10 +310,10 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
       return false
     }
     val selfClosing = buf.charAt(endPos - 1) == '/'
-    val inner = buf.substring(pos + 1, if (selfClosing) endPos - 1 else endPos)
+    val start = pos + 1
     advance(pos, endPos + 1)
     pos = endPos + 1
-    onOpenTag(inner, selfClosing)
+    onOpenTag(start, if (selfClosing) endPos - 1 else endPos, selfClosing)
     true
   }
 
@@ -335,32 +337,35 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
   private val rawAttrNames = mutable.ArrayBuffer.empty[String]
   private val rawAttrValues = mutable.ArrayBuffer.empty[String]
 
-  private def onOpenTag(inner: String, selfClosing: Boolean): Unit = {
+  /** The open tag whose name and attributes are `buf[start, end)`, scanned
+    * in place. The position counters already stand after the tag, which is
+    * where a syntax error in it is reported. */
+  private def onOpenTag(start: Int, end: Int, selfClosing: Boolean): Unit = {
     if (closedRoot) fail("Markup after the root element")
     // Parse name.
-    var i = 0
-    while (i < inner.length && !inner.charAt(i).isWhitespace) i += 1
-    val name = inner.substring(0, i)
+    var i = start
+    while (i < end && !buf.charAt(i).isWhitespace) i += 1
+    val name = buf.substring(start, i)
     if (name.isEmpty || !isNameStart(name.charAt(0))) fail(s"Invalid tag name: $name")
 
     // Parse attributes (document order preserved).
     rawAttrNames.clear()
     rawAttrValues.clear()
-    while (i < inner.length) {
-      while (i < inner.length && inner.charAt(i).isWhitespace) i += 1
-      if (i < inner.length) {
-        val eq = inner.indexOf('=', i)
-        if (eq < 0) fail(s"Attribute without value in element $name")
-        val aname = inner.substring(i, eq).trim
+    while (i < end) {
+      while (i < end && buf.charAt(i).isWhitespace) i += 1
+      if (i < end) {
+        val eq = buf.indexOf('=', i)
+        if (eq < 0 || eq >= end) fail(s"Attribute without value in element $name")
+        val aname = buf.substring(i, eq).trim
         if (aname.isEmpty) fail(s"Attribute without name in element $name")
         var j = eq + 1
-        while (j < inner.length && inner.charAt(j).isWhitespace) j += 1
-        if (j >= inner.length || (inner.charAt(j) != '"' && inner.charAt(j) != '\''))
+        while (j < end && buf.charAt(j).isWhitespace) j += 1
+        if (j >= end || (buf.charAt(j) != '"' && buf.charAt(j) != '\''))
           fail(s"Unquoted attribute value in element $name")
-        val q = inner.charAt(j)
-        val vEnd = inner.indexOf(q, j + 1)
-        if (vEnd < 0) fail(s"Unterminated attribute value in element $name")
-        val rawValue = inner.substring(j + 1, vEnd)
+        val q = buf.charAt(j)
+        val vEnd = buf.indexOf(q, j + 1)
+        if (vEnd < 0 || vEnd >= end) fail(s"Unterminated attribute value in element $name")
+        val rawValue = buf.substring(j + 1, vEnd)
         var d = 0
         while (d < rawAttrNames.length) {
           if (rawAttrNames(d) == aname) fail(s"Duplicate attribute: $aname")
@@ -412,7 +417,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     val attrs = scala.collection.immutable.ArraySeq.unsafeWrapArray(attrsArr)
 
     scopes = scope :: scopes
-    openNames += name
+    openNames.addLast(name)
     handler(OpenTag(name, ePrefix, eLocal, eUri, attrs, selfClosing))
     if (selfClosing) {
       popElement(name)
@@ -421,12 +426,12 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
 
   private def onCloseTag(name: String): Unit = {
     if (openNames.isEmpty) fail(s"Unexpected closing tag: $name")
-    if (openNames.last != name) fail(s"Mismatched closing tag: $name (expected ${openNames.last})")
+    if (openNames.peekLast != name) fail(s"Mismatched closing tag: $name (expected ${openNames.peekLast})")
     popElement(name)
   }
 
   private def popElement(name: String): Unit = {
-    openNames.remove(openNames.length - 1)
+    openNames.removeLast()
     scopes = scopes.tail
     handler(CloseTag(name))
     if (openNames.isEmpty) closedRoot = true

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rdf.{ParserOptions, RdfXmlParser, Relabeler, TripleColumns}
+import graft.rdf.{ParserOptions, Relabeler, TripleColumns}
 
 /** `spark.read.format("rdfxml")` — a DataSource V2 batch source that parses
   * RDF/XML files into triple rows, re-expressing the reference's primary
@@ -26,10 +26,21 @@ import graft.rdf.{ParserOptions, RdfXmlParser, Relabeler, TripleColumns}
   * Shape: one RDF/XML document per file; files are unsplittable (a document
   * is one parser state machine), so parallelism = file count, bin-packed
   * into partitions by size. Schema: the `path` lineage column, then the
-  * columns of [[graft.rdf.TripleColumns]], so a malformed document becomes
+  * columns of [[graft.rdf.TripleColumns]], so a malformed document ends in
   * one error row, never a task failure (R28), and blank nodes are prefixed
   * by [[graft.rdf.Relabeler.forPath]]. Column pruning is pushed into the
   * reader (`SupportsPushDownRequiredColumns`).
+  *
+  * Reads stream ([[RdfXmlPartitionReader]]): a file is decoded and parsed
+  * in fixed chunks, and the triples of a chunk leave as rows before the
+  * next chunk is read, so neither the file text nor its triples are ever
+  * held whole and files over 2 GB read like any other. A file that fails
+  * partway gives the triples pushed before the failing event, then its one
+  * error row ([[graft.rdf.TripleColumns.Document]]); `parseTurns` follows
+  * the same rule. Two structures still grow with a file: the
+  * [[graft.rdf.Relabeler]] map, one entry per distinct blank node, and the
+  * parser's set of `rdf:ID` values kept for the duplicate check (empty
+  * under `allowDuplicateRdfIds`).
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
   * the file URI), `validateUri`, `allowDuplicateRdfIds`.
@@ -445,6 +456,11 @@ case class RdfXmlReaderFactory(
       hadoopConf)
 }
 
+/** Streams each file of its partition through the parser: the file is
+  * decoded as UTF-8 and written to the parser in [[RdfXmlPartitionReader.ChunkChars]]
+  * chunks, and [[next]] drains the rows each chunk made ready before it
+  * reads the next one. [[get]] returns one row object, refilled on every
+  * `next()`; the scan copies it into an `UnsafeRow` before asking again. */
 final class RdfXmlPartitionReader(
     files: Array[String], fieldNames: Array[String],
     baseIRI: String, validateUri: Boolean, allowDup: Boolean,
@@ -453,8 +469,11 @@ final class RdfXmlPartitionReader(
 
   private val fs = files.headOption.map(f => new Path(f).getFileSystem(hadoopConf.value))
   private var fileIdx = 0
-  private var rows: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
+  private var in: java.io.Reader = _ // the open file, null between files
+  private var doc: TripleColumns.Document = _
+  private var filePath: String = _
+  private val chunk = new Array[Char](RdfXmlPartitionReader.ChunkChars)
+  private val row = new GenericInternalRow(fieldNames.length)
 
   /** Hadoop codec detection by extension (.gz, .bz2, …) — real RDF dumps
     * ship compressed; whole-file documents stay unsplittable either way, so
@@ -462,37 +481,70 @@ final class RdfXmlPartitionReader(
   @transient private lazy val codecs =
     new org.apache.hadoop.io.compress.CompressionCodecFactory(hadoopConf.value)
 
-  private def readFile(path: String): String = {
+  private def open(path: String): Unit = {
     val p = new Path(path)
     val raw = fs.get.open(p)
-    val in: java.io.InputStream =
-      Option(codecs.getCodec(p)).map(c => c.createInputStream(raw): java.io.InputStream).getOrElse(raw)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
+    val bytes: java.io.InputStream =
+      try Option(codecs.getCodec(p)).map(c => c.createInputStream(raw): java.io.InputStream).getOrElse(raw)
+      catch { case e: Throwable => raw.close(); throw e }
+    in = new java.io.InputStreamReader(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    val base = if (baseIRI.contains("{path}")) baseIRI.replace("{path}", path) else baseIRI
+    doc = new TripleColumns.Document(
+      ParserOptions(baseIRI = base, validateUri = validateUri, allowDuplicateRdfIds = allowDup),
+      Relabeler.forPath(path))
+    filePath = path
   }
+
+  /** Fills [[chunk]] up to its length, so chunk edges fall at fixed
+    * offsets; 0 means the file is exhausted. */
+  private def readChunk(): Int = {
+    var n = 0
+    var r = 0
+    while (n < chunk.length && { r = in.read(chunk, n, chunk.length - n); r >= 0 }) n += r
+    n
+  }
+
+  private def closeFile(): Unit = if (in != null) { in.close(); in = null }
 
   /** Per output column, its index in [[TripleColumns.Names]]; -1 is `path`. */
   private val ordinals = fieldNames.map(n => TripleColumns.Names.indexOf(n))
 
-  private def toRow(path: UTF8String, values: Array[String]): InternalRow =
-    new GenericInternalRow(ordinals.map(o => (if (o < 0) path else UTF8String.fromString(values(o))): Any))
+  /** Per output column, the last value and its encoding. Consecutive rows
+    * often hold the very same `String` (the path, a subject shared by a
+    * resource's triples, the `obj_type` constants), which is then not
+    * encoded again. */
+  private val lastText = new Array[String](ordinals.length)
+  private val lastUtf8 = new Array[UTF8String](ordinals.length)
 
-  private def parseNext(): Boolean = {
-    while (!rows.hasNext && fileIdx < files.length) {
-      val path = files(fileIdx)
-      fileIdx += 1
-      val base = if (baseIRI.contains("{path}")) baseIRI.replace("{path}", path) else baseIRI
-      val opts = ParserOptions(baseIRI = base, validateUri = validateUri, allowDuplicateRdfIds = allowDup)
-      val pathUtf8 = UTF8String.fromString(path)
-      rows = TripleColumns.rows(RdfXmlParser.parse(readFile(path), opts), Relabeler.forPath(path))
-        .map(v => toRow(pathUtf8, v))
+  override def next(): Boolean = {
+    while (doc == null || !doc.next()) {
+      if (in != null) {
+        val n = if (doc.failed) 0 else readChunk()
+        if (n > 0) doc.write(new String(chunk, 0, n))
+        else { closeFile(); doc.end() }
+      } else if (fileIdx < files.length) {
+        open(files(fileIdx))
+        fileIdx += 1
+      } else return false
     }
-    rows.hasNext
+    var k = 0
+    while (k < ordinals.length) {
+      val o = ordinals(k)
+      val v = if (o < 0) filePath else doc.value(o)
+      if (!(v eq lastText(k))) { lastText(k) = v; lastUtf8(k) = UTF8String.fromString(v) }
+      row.update(k, lastUtf8(k))
+      k += 1
+    }
+    true
   }
 
-  override def next(): Boolean =
-    if (parseNext()) { current = rows.next(); true } else false
+  override def get(): InternalRow = row
+  override def close(): Unit = closeFile()
+}
 
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+object RdfXmlPartitionReader {
+  /** Characters written to the parser per call. A file is never held
+    * whole; only this chunk, an incomplete construct carried into the next
+    * one, and the rows one chunk made ready are. */
+  val ChunkChars: Int = 64 * 1024
 }

@@ -302,17 +302,23 @@ class PlanSpec extends SparkSuite {
     // bounded codebook; coarse assignment may additionally keep the
     // SinglePartition collect of the ≤ nCells codebook rows, but no
     // hash-partitioned exchange may consume the embeddings scan.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val pp = plan(graft.ops.Similarity.pqCodes(e, dim = 64))
-    assert(!pp.contains("+- Exchange") && !pp.contains(": Exchange"), pp) // broadcast-only
+    val pq = graft.ops.Similarity.pqCodes(e, dim = 64)
+    val pp = plan(pq)
+    // broadcast-only: no shuffle anywhere in the executed plan, including
+    // inside adaptive plans, broadcast builds and subqueries
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val shuffles = aqe.collectWithSubqueries(pq.queryExecution.executedPlan) { case x: ShuffleExchangeLike => x }
+    assert(shuffles.isEmpty, pp)
     assert(pp.contains("argminsql2") || pp.contains("argmin_sql2"), pp)
     val en = graft.ops.Similarity.withNorms(e)
     val pa = plan(graft.ops.Similarity.coarseAssign(
       en, graft.ops.Similarity.coarseCodebook(en, 16)))
     // the corpus side: Scan parquet must reach the BroadcastNestedLoopJoin
     // (the 1-row codebook attach) without an Exchange above it
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val sp = graft.ops.Similarity.coarseAssign(
       en, graft.ops.Similarity.coarseCodebook(en, 16)).queryExecution.sparkPlan
     val bnl = sp.collect { case j: BroadcastNestedLoopJoinExec => j }

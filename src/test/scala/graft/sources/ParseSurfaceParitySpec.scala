@@ -40,6 +40,9 @@ class ParseSurfaceParitySpec extends SparkSuite {
       |</rdf:Description></rdf:RDF>""".stripMargin,
     "malformed" -> s"""$Head
       |<rdf:Description rdf:about="http://e.org/a"><ex:p>never closed""".stripMargin,
+    "partway" -> s"""$Head
+      |<rdf:Description rdf:about="http://e.org/a"><ex:p>kept</ex:p></rdf:Description>
+      |<rdf:Description rdf:about="http://e.org/b"><ex:p>never closed""".stripMargin,
   )
 
   private val cols = TripleColumns.Names
@@ -80,6 +83,12 @@ class ParseSurfaceParitySpec extends SparkSuite {
       r("obj") == "<<( _:b0 <http://e.org/p> \"inner\" )>>" && r("obj_type") == "triple"))
     val Seq(err) = rowsOf("malformed")
     assert(err("obj_type") == "error" && err("error") != null && err("subj") == null)
+    // A document that fails partway keeps the triples pushed before the
+    // failure, then gives exactly one error row, on both surfaces.
+    val (partErr, partKept) = rowsOf("partway").partition(_("obj_type") == "error")
+    assert(partKept.map(r => (r("subj"), r("pred"), r("obj"))) ==
+      Seq(("<http://e.org/a>", "<http://e.org/p>", "\"kept\"")), partKept)
+    assert(partErr.length == 1 && partErr.head("error").endsWith("Unclosed tag: ex:p"), partErr)
   }
 
   test("TripleRow carries its lineage, then exactly the shared columns in order") {
