@@ -341,17 +341,16 @@ object SparkEntry {
       // measured slower.
       val occ = Ner.mentions(t).localCheckpoint(false)
       val universe = occ.select("mention").distinct().localCheckpoint(true)
-      val hotConvs = occ.select("conv_id", "mention").distinct()
-        .groupBy("conv_id").agg(count(lit(1)).as("k"))
-        .filter(col("k") > graft.ops.GraphAnalytics.DefaultMaxPerGroup)
+      // The two shared-key caps count the hot set the operators drop.
+      val hotConvs = Linking.hotKeys(occ.select("conv_id", "mention").distinct(),
+          "conv_id", graft.ops.GraphAnalytics.DefaultMaxPerGroup)
         .agg(count(lit(1)).as("n")).select(lit("cooccur_group").as("cap"), col("n"))
       val hotBuckets = Linking.lshBuckets(universe)
         .groupBy("band", "bandKey").agg(count(lit(1)).as("k"))
         .filter(col("k") > Linking.DefaultMaxBucketSize)
         .agg(count(lit(1)).as("n")).select(lit("lsh_bucket").as("cap"), col("n"))
-      val hotShingles = Linking.mentionShingles(universe)
-        .groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > Linking.DefaultMaxShingleDf)
+      val hotShingles = Linking.hotKeys(Linking.mentionShingles(universe),
+          "shingle", Linking.DefaultMaxShingleDf)
         .agg(count(lit(1)).as("n")).select(lit("shingle_df").as("cap"), col("n"))
       val hotMids = graft.ops.GraphAnalytics.nodeEdges(ParseStage.parsedTranscripts(s, dir).toDF())
         .groupBy("src").agg(count(lit(1)).as("outdeg"))

@@ -2,7 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -287,16 +290,18 @@ object ExprHelpers {
     * vector×codebook cross join (the DuckDB oracles replay that form):
     * same dot fold, same `n * cn` multiply-then-divide, and the comparison
     * replicates Spark's struct order exactly —
-    *  - a ZERO divisor makes the score NULL (Spark's non-ANSI Divide;
-    *    under ANSI the defining form refuses the row at runtime, a state
-    *    the gated corpus never reaches — no zero norms), as does a null
-    *    centroid / length-mismatched dot;
+    *  - a ZERO divisor under a non-null dot makes the score NULL (Spark's
+    *    non-ANSI Divide); under ANSI (the session default) it raises
+    *    DIVIDE_BY_ZERO, as the defining form's Divide does — the flag is
+    *    read only on that branch; a null centroid / length-mismatched dot
+    *    makes the score NULL;
     *  - null scores sort FIRST, so a null entry only wins when EVERY score
     *    is null, where the smallest cell wins (the struct tie falls to
     *    max(-cell));
     *  - among real scores NaN sits above every value, `-0.0 = 0.0` (Java
     *    primitive `>` agrees), and ties keep the FIRST (smallest) index.
-    * Null only for an empty codebook. ExpressionFuzzSpec pins all of this
+    * Null only for an empty codebook; a null embedding or norm is
+    * [[argmaxCosNull]]. ExpressionFuzzSpec pins all of this
     * against the defining aggregate. Replacing the `groupBy(vec_id)`
     * argmax removes the per-assignment exchange that carried the full
     * embedding column — at corpus scale a corpus-sized shuffle per k-means
@@ -315,7 +320,10 @@ object ExprHelpers {
       if (!cents.isNullAt(i) && !cnorms.isNullAt(i)) {
         val div = n * cnorms.getDouble(i)
         val d = dotF64(emb, cents.getArray(i), embKind, centKind)
-        if (d != null && div != 0.0) { s = d.doubleValue() / div; sNull = false }
+        if (d != null) {
+          if (div != 0.0) { s = d.doubleValue() / div; sNull = false }
+          else if (SQLConf.get.ansiEnabled) throw org.apache.spark.sql.GraftSqlBridge.divideByZeroError()
+        }
       }
       val better =
         if (best < 0) true
@@ -328,6 +336,14 @@ object ExprHelpers {
     if (best < 0) null else Integer.valueOf(best)
   }
 
+  /** [[argmaxCos]] of a null embedding or norm: every score of the
+    * defining aggregate is null there, so its smallest cell wins — index 0
+    * (null for an empty or mismatched codebook, as in [[argmaxCos]]). */
+  def argmaxCosNull(cents: ArrayData, cnorms: ArrayData): java.lang.Integer = {
+    val k = cents.numElements()
+    if (k == 0 || cnorms.numElements() != k) null else Integer.valueOf(0)
+  }
+
   /** Index (0-based) of the codebook centroid minimizing
     * `sqL2F64(v, cents(j))` — the map-side form of the PQ code argmin,
     * row-identical to the defining `min(struct(dist, j))` aggregate over
@@ -336,7 +352,8 @@ object ExprHelpers {
     * length-mismatched fold) sort FIRST and therefore WIN the min (first
     * such index on ties); among real distances NaN sits above every value
     * (never displaces a valid one), `-0.0 = 0.0`, first (smallest) index
-    * on ties. Null only for an empty codebook. */
+    * on ties. Null only for an empty codebook; a null vector is
+    * [[argminSqL2Null]]. */
   def argminSqL2(v: ArrayData, cents: ArrayData,
                  vKind: Int, centKind: Int): java.lang.Integer = {
     val k = cents.numElements()
@@ -361,6 +378,12 @@ object ExprHelpers {
     }
     if (best < 0) null else Integer.valueOf(best)
   }
+
+  /** [[argminSqL2]] of a null vector: every distance is null, and the
+    * first null distance wins the min — index 0 (null for an empty
+    * codebook). */
+  def argminSqL2Null(cents: ArrayData): java.lang.Integer =
+    if (cents.numElements() == 0) null else Integer.valueOf(0)
 
   @inline private def elem(arr: ArrayData, i: Int, kind: Int): Double = kind match {
     case KindDouble => arr.getDouble(i)
@@ -602,7 +625,9 @@ private[functions] object NestedArrayKind {
   * [[ExprHelpers.argmaxCos]] for the exact tie/NaN order contract — it is
   * Spark's `max(struct(score, -index))`). The map-side IVF assignment
   * kernel: one call per row replaces a nCells-way explode + groupBy argmax,
-  * so the assignment never shuffles the embedding column (r7). */
+  * so the assignment never shuffles the embedding column (r7). A null
+  * codebook gives null; a null embedding or norm gives the defining
+  * aggregate's answer ([[ExprHelpers.argmaxCosNull]]). */
 case class ArgMaxCos(first: Expression, second: Expression,
                      third: Expression, fourth: Expression)
   extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
@@ -623,18 +648,33 @@ case class ArgMaxCos(first: Expression, second: Expression,
   }
   @transient private lazy val embKind = NestedArrayKind.kindOf(first.dataType)
   @transient private lazy val centKind = NestedArrayKind.innerKindOf(third.dataType)
-  override protected def nullSafeEval(e: Any, n: Any, c: Any, cn: Any): Any =
-    ExprHelpers.argmaxCos(e.asInstanceOf[ArrayData], n.asInstanceOf[Double],
-      c.asInstanceOf[ArrayData], cn.asInstanceOf[ArrayData], embKind, centKind)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (e, n, c, cn) => {
-      val r = ctx.freshName("argmaxRes")
-      s"""
-         |java.lang.Integer $r = graft.functions.ExprHelpers.argmaxCos($e, $n, $c, $cn, $embKind, $centKind);
-         |${ev.isNull} = $r == null;
-         |${ev.value} = ${ev.isNull} ? -1 : $r.intValue();
-       """.stripMargin
-    })
+  override def eval(input: InternalRow): Any = {
+    val e = first.eval(input)
+    val n = second.eval(input)
+    val c = third.eval(input).asInstanceOf[ArrayData]
+    val cn = fourth.eval(input).asInstanceOf[ArrayData]
+    if (c == null || cn == null) null
+    else if (e == null || n == null) ExprHelpers.argmaxCosNull(c, cn)
+    else ExprHelpers.argmaxCos(e.asInstanceOf[ArrayData], n.asInstanceOf[Double], c, cn, embKind, centKind)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val Seq(e, n, c, cn) = children.map(_.genCode(ctx))
+    val r = ctx.freshName("argmaxRes")
+    ev.copy(code = code"""
+      |${e.code}
+      |${n.code}
+      |${c.code}
+      |${cn.code}
+      |boolean ${ev.isNull} = true;
+      |int ${ev.value} = -1;
+      |if (!${c.isNull} && !${cn.isNull}) {
+      |  java.lang.Integer $r = ${e.isNull} || ${n.isNull}
+      |    ? graft.functions.ExprHelpers.argmaxCosNull(${c.value}, ${cn.value})
+      |    : graft.functions.ExprHelpers.argmaxCos(${e.value}, ${n.value}, ${c.value}, ${cn.value}, $embKind, $centKind);
+      |  ${ev.isNull} = $r == null;
+      |  ${ev.value} = ${ev.isNull} ? -1 : $r.intValue();
+      |}""".stripMargin)
+  }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): ArgMaxCos =
     copy(first = f, second = s, third = t, fourth = q)
@@ -644,7 +684,9 @@ case class ArgMaxCos(first: Expression, second: Expression,
   * the minimal squared-L2 distance `sq_l2_f64(vsub, cents[j])` (see
   * [[ExprHelpers.argminSqL2]] — exactly Spark's `min(struct(dist, index))`).
   * The map-side PQ code-assignment kernel: replaces the k-way explode +
-  * groupBy argmin, so PQ encoding is a pure projection (r7). */
+  * groupBy argmin, so PQ encoding is a pure projection (r7). A null
+  * codebook gives null; a null vector gives the defining aggregate's
+  * answer ([[ExprHelpers.argminSqL2Null]]). */
 case class ArgMinSqL2(left: Expression, right: Expression) extends BinaryExpression {
   import org.apache.spark.sql.types.IntegerType
   override def dataType: DataType = IntegerType
@@ -660,17 +702,30 @@ case class ArgMinSqL2(left: Expression, right: Expression) extends BinaryExpress
   }
   @transient private lazy val vKind = NestedArrayKind.kindOf(left.dataType)
   @transient private lazy val centKind = NestedArrayKind.innerKindOf(right.dataType)
-  override protected def nullSafeEval(v: Any, c: Any): Any =
-    ExprHelpers.argminSqL2(v.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], vKind, centKind)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, c) => {
-      val r = ctx.freshName("argminRes")
-      s"""
-         |java.lang.Integer $r = graft.functions.ExprHelpers.argminSqL2($v, $c, $vKind, $centKind);
-         |${ev.isNull} = $r == null;
-         |${ev.value} = ${ev.isNull} ? -1 : $r.intValue();
-       """.stripMargin
-    })
+  override def eval(input: InternalRow): Any = {
+    val v = left.eval(input)
+    val c = right.eval(input).asInstanceOf[ArrayData]
+    if (c == null) null
+    else if (v == null) ExprHelpers.argminSqL2Null(c)
+    else ExprHelpers.argminSqL2(v.asInstanceOf[ArrayData], c, vKind, centKind)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = left.genCode(ctx)
+    val c = right.genCode(ctx)
+    val r = ctx.freshName("argminRes")
+    ev.copy(code = code"""
+      |${v.code}
+      |${c.code}
+      |boolean ${ev.isNull} = true;
+      |int ${ev.value} = -1;
+      |if (!${c.isNull}) {
+      |  java.lang.Integer $r = ${v.isNull}
+      |    ? graft.functions.ExprHelpers.argminSqL2Null(${c.value})
+      |    : graft.functions.ExprHelpers.argminSqL2(${v.value}, ${c.value}, $vKind, $centKind);
+      |  ${ev.isNull} = $r == null;
+      |  ${ev.value} = ${ev.isNull} ? -1 : $r.intValue();
+      |}""".stripMargin)
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ArgMinSqL2 =
     copy(left = l, right = r)
 }

@@ -73,8 +73,9 @@ object Dedup {
             THEN array_distinct(transform(sequence(1, size(__w) - ${n - 1}), i -> concat_ws(' ', slice(__w, i, $n))))
             ELSE cast(array() AS array<string>) END""").as("shingles"))
 
-  /** Near-dup candidate pairs by exact word-shingle Jaccard >= threshold,
-    * blocked by the shared-shingle inverted index (no O(n²) enumeration).
+  /** Near-dup candidate pairs by exact word-shingle Jaccard >= threshold
+    * ([[Linking.jaccardPairs]]: the capped shared-shingle join, no O(n²)
+    * enumeration).
     *
     * Shingle identity is the 64-bit fnv1a64 gram hash, not the gram string
     * (r7 optimization; guide §2.3 "narrower types"): the inverted index —
@@ -88,27 +89,11 @@ object Dedup {
     * gram universe; a 100 TB deployment widens the hash, not the plan). */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
                         maxShingleDf: Long = Linking.DefaultMaxShingleDf): DataFrame = {
-    // Same one-cut rule as Linking.jaccardEdges: the capped shingle frame
-    // is consumed THREE times (sizes + both self-join sides) — without the
-    // cut each consumer re-derives the explode + DF-cap anti-join. Lazy
-    // checkpoint: same lineage cut and one materialization, without the
-    // eager variant's separate up-front job (r7).
     val hashedShingles = docs.filter(hasMinTokens(col("text"), 5))
       .select(col("doc_id"),
         explode(array_distinct(
           graft.functions.GraftFunctions.word_gram_hashes(col("text"), 5))).as("shingle"))
-    val sh = Linking.capShingleDf(hashedShingles, maxShingleDf)
-      .localCheckpoint(false)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("x").join(sh.as("y"), col("x.shingle") === col("y.shingle"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .agg(count(lit(1)).as("cnt"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
-      .filter(col("cnt") * lit(1.0) / (col("sza") + col("szb") - col("cnt")) >= threshold)
-      .select("a", "b")
+    Linking.jaccardPairs(hashedShingles, "doc_id", "shingle", threshold, maxShingleDf)
   }
 
   /** MinHash-LSH near-dup clusters (scale path): shingle → signature
@@ -188,26 +173,21 @@ object Dedup {
     * Data" primitive): documents sharing >= `minShared` sampled k-token-gram
     * anchors. Scale shape: content-defined sampling divides the exploded
     * index by 2^bits; anchors above the document-frequency cap (corpus
-    * boilerplate) are dropped by the same anti-join-against-the-hot-set
-    * shape as [[Linking.capShingleDf]]; the candidate join is an equi-join
-    * on the anchor hash — never O(n²). Returns (a, b, shared), a < b. */
+    * boilerplate) are dropped and the candidates counted by the shared-key
+    * pair join ([[Linking.sharedKeyPairs]]) — an equi-join on the anchor
+    * hash, never O(n²). Returns (a, b, shared), a < b. */
   def substringDupPairs(docs: DataFrame, k: Int = 8,
                         mask: Long = DefaultAnchorMask,
                         maxAnchorDf: Long = Linking.DefaultMaxShingleDf,
                         minShared: Long = 2L): DataFrame = {
     // One cut: the anchor explode + distinct is consumed three times (the
-    // hot-set derivation and both self-join sides); the anti-join below is
+    // hot-set derivation and both self-join sides); the cap's anti-join is
     // cheap against the checkpointed frame (AQE broadcasts the hot side).
     // Lazy checkpoint: same cut, no separate up-front job (r7).
     val perDoc = substringAnchorRows(docs.select(col("doc_id"), col("text")), k, mask)
       .select("doc_id", "h").distinct().localCheckpoint(false)
-    val hot = perDoc.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxAnchorDf).select("h")
-    val capped = perDoc.join(hot, Seq("h"), "left_anti")
-    capped.as("x").join(capped.as("y"), Seq("h"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .agg(count(lit(1)).as("shared"))
+    Linking.sharedKeyPairs(perDoc, "doc_id", "h", maxAnchorDf)
+      .select(col("a"), col("b"), col("n").as("shared"))
       .filter(col("shared") >= minShared)
   }
 

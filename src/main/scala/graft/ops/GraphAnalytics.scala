@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.Linking
 
 /** Downstream graph analytics over the constructed knowledge graph — the
   * queries a KG consumer runs once materialization lands: degree
@@ -157,24 +158,19 @@ object GraphAnalytics {
     * mentions are excluded outright — the celebrity cut for pair
     * explosion; a 10⁵-mention mega-thread would otherwise contribute
     * 10¹⁰ pairs on its own. With the cut, join output is bounded by
-    * |groups| × maxPerGroup². The distinct, the cap aggregate, and both
-    * join sides share the group key, so the exchange is reused. The `<`
-    * canonical order makes each pair counted once per group. */
+    * |groups| × maxPerGroup². The cut and the pair count are the
+    * shared-key pair join ([[Linking.sharedKeyPairs]]) with the group as
+    * the key and the mention as the id: `n_convs` is its shared-key count,
+    * and the `<` canonical order counts each pair once per group. */
   def cooccurrence(mentionOcc: DataFrame, maxPerGroup: Int = DefaultMaxPerGroup): DataFrame = {
     // One cut for the thrice-consumed distinct frame (cap aggregate + both
     // self-join sides): without it the pair self-join planned the whole
     // upstream occurrence derivation once per consumer — 8 scans of the
-    // corpus in the gated query's plan (r7; the jaccardEdges lesson).
+    // corpus in the gated query's plan (r7).
     // Eager: the consumers run concurrently in the final action.
     val m = mentionOcc.select("conv_id", "mention").distinct().localCheckpoint(true)
-    val ok = m.groupBy("conv_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxPerGroup)
-      .select("conv_id")
-    val mm = m.join(ok, "conv_id")
-    mm.as("x").join(mm.as("y"),
-        col("x.conv_id") === col("y.conv_id") && col("x.mention") < col("y.mention"))
-      .groupBy(col("x.mention").as("a"), col("y.mention").as("b"))
-      .agg(count(lit(1)).as("n_convs"))
+    Linking.sharedKeyPairs(m, "mention", "conv_id", maxPerGroup)
+      .withColumnRenamed("n", "n_convs")
   }
 
   /** Fixed-point integer PageRank: every node starts with `scale` units of

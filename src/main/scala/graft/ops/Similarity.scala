@@ -290,7 +290,10 @@ object Similarity {
     * exactly the aggregate form's `max(struct(s, -cell))` (see
     * [[graft.functions.ExprHelpers.argmaxCos]]);
     * [[coarseAssignByAgg]] is kept as the defining formulation and
-    * RestructureEquivalenceSpec pins row-equality of the two. */
+    * RestructureEquivalenceSpec pins row-equality of the two. The kernel
+    * follows it off the usual path too: a null embedding gets the
+    * smallest cell, and a zero norm raises DIVIDE_BY_ZERO under ANSI
+    * (ExpressionFuzzSpec). */
   private[graft] def coarseAssign(e: DataFrame, codebook: DataFrame): DataFrame =
     e.crossJoin(broadcast(codebookRow(codebook)))
       .select(col("vec_id"), col("embedding"), col("n"),
@@ -487,7 +490,8 @@ object Similarity {
     // old argmin exchange carried n·m rows — corpus-sized, however narrow).
     // Tie/NaN order is exactly the aggregate form's `min(struct(d, j))`
     // (ExprHelpers.argminSqL2); pqCodesByAgg is the defining formulation
-    // RestructureEquivalenceSpec pins row-equality against.
+    // RestructureEquivalenceSpec pins row-equality against. A null
+    // embedding has no subspace rows (posexplode of null), in both forms.
     vsubs.join(broadcast(pqCodebookRows(codebook)), Seq("subspace"))
       .select(col("vec_id"), col("subspace"),
         element_at(col("cb_js"),

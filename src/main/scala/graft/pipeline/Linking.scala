@@ -5,6 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** P6/P7: entity-linking blocking and scoring.
   *
+  * The blocking step is [[sharedKeyPairs]], SparkER's token blocking in one
+  * join: block purging (every key held by more than a cap of ids is
+  * dropped, [[capShingleDf]]) plus the shared-block count of each candidate
+  * pair, `(a, b, n)`. Exact n-gram Jaccard here and in
+  * `Dedup.ngramJaccardPairs` ([[jaccardPairs]]), `Dedup.substringDupPairs`
+  * and `GraphAnalytics.cooccurrence` all block through it.
+  *
   * Two blocking paths over mention character shingles:
   *   - exact n-gram Jaccard (DuckDB-oracle-able, the correctness gate);
   *   - MinHash-LSH (the scale path: per-row native signature, band-bucket
@@ -39,16 +46,62 @@ object Linking {
     * exact-hash dedup pass upstream removes anyway. */
   val DefaultMaxBucketSize = 1024
 
-  /** Keep only shingles whose document frequency is <= cap (see
+  /** The hot set of a distinct (id, key) frame: every key held by more
+    * than `cap` ids. The caps-fire evidence query (`kg_cap_fired`) counts
+    * exactly this frame, so the evidence cannot drift from the cap. */
+  def hotKeys(rows: DataFrame, key: String, cap: Long): DataFrame =
+    rows.groupBy(key).agg(count(lit(1)).as("df")).filter(col("df") > cap).select(key)
+
+  /** Keep only keys whose document frequency is <= cap (see
     * [[DefaultMaxShingleDf]]). Shaped as an ANTI-join against the HOT set
-    * (shingles above the cap): hot shingles are by construction a tiny
-    * fraction of the distinct-shingle universe, so AQE broadcasts the anti
-    * side at runtime and the big (id, shingle) frame is never re-shuffled —
-    * a semi-join against the keep set would shuffle everything twice. */
-  def capShingleDf(sh: DataFrame, cap: Long): DataFrame = {
-    val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select("shingle")
-    sh.join(hot, Seq("shingle"), "left_anti")
+    * (keys above the cap): hot keys are by construction a tiny fraction of
+    * the distinct-key universe, so AQE broadcasts the anti side at runtime
+    * and the big (id, key) frame is never re-shuffled — a semi-join against
+    * the keep set would shuffle everything twice. */
+  def capShingleDf(sh: DataFrame, cap: Long, key: String = "shingle"): DataFrame =
+    sh.join(hotKeys(sh, key, cap), Seq(key), "left_anti")
+
+  /** Shared-key pair join over distinct (id, key) rows: keys held by more
+    * than `cap` ids are dropped ([[capShingleDf]]), the rest self-join on
+    * the key, and each pair (a, b), a < b, that shares at least one kept
+    * key comes back once with `n`, the number of kept keys it shares. The
+    * self-join IS the blocking (an inverted index, never an O(n²) pair
+    * enumeration); the cap bounds its output by |keys| × cap². Callers
+    * cut the input's lineage themselves when they consume it again. */
+  def sharedKeyPairs(rows: DataFrame, id: String, key: String, cap: Long): DataFrame =
+    pairCounts(capShingleDf(rows, cap, key), id, key)
+
+  private def pairCounts(capped: DataFrame, id: String, key: String): DataFrame =
+    capped.as("x").join(capped.as("y"), col(s"x.$key") === col(s"y.$key"))
+      .filter(col(s"x.$id") < col(s"y.$id"))
+      .groupBy(col(s"x.$id").as("a"), col(s"y.$id").as("b"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Pairs (a, b), a < b, of exact key-set Jaccard >= threshold over
+    * distinct (id, key) rows: the shared-key pair join plus set sizes, both
+    * taken from the capped rows — a hot key leaves the intersection AND
+    * the sizes, so the score stays a true Jaccard over the discriminating
+    * keys.
+    *
+    * The capped frame is consumed THREE times (set sizes + both sides of
+    * the self-join); without a cut, each consumer re-derives the whole
+    * upstream (transcript window + regex extract + distinct — r2 bench
+    * showed kg_canonical paying that 3×). One localCheckpoint materializes
+    * it once; it is O(distinct ids × keys/id) — orders of magnitude below
+    * the corpus, and localCheckpoint spills block-wise to executor-local
+    * disk, so the cut holds at cluster scale too. LAZY (r7, A/B-measured):
+    * same cut, no separate up-front count job; the self-join's two sides
+    * share one exchange, so the first touch materializes the cache for
+    * everyone. */
+  def jaccardPairs(rows: DataFrame, id: String, key: String,
+                   threshold: Double, cap: Long): DataFrame = {
+    val sh = capShingleDf(rows, cap, key).localCheckpoint(false)
+    val sizes = sh.groupBy(id).agg(count(lit(1)).as("sz"))
+    pairCounts(sh, id, key)
+      .join(sizes.withColumnRenamed(id, "a").withColumnRenamed("sz", "sza"), "a")
+      .join(sizes.withColumnRenamed(id, "b").withColumnRenamed("sz", "szb"), "b")
+      .filter(col("n") * lit(1.0) / (col("sza") + col("szb") - col("n")) >= threshold)
+      .select("a", "b")
   }
 
   /** Character n-gram shingle set of the lowercased mention, as a column of
@@ -77,35 +130,12 @@ object Linking {
   def mentionShingles(mentions: DataFrame): DataFrame =
     mentions.select(col("mention"), explode(shinglesCol("mention")).as("shingle"))
 
-  /** Exact pairwise n-gram Jaccard over all candidate pairs that share at
-    * least one shingle (shingle-inverted-index blocking: the shared-shingle
-    * self-join IS the blocking step — no O(n²) pair enumeration). Returns
-    * pairs (a, b), a < b, with jaccard >= threshold.
-    */
+  /** Exact pairwise char-n-gram Jaccard of the mentions ([[jaccardPairs]]
+    * over [[mentionShingles]]). Returns pairs (a, b), a < b, with
+    * jaccard >= threshold. */
   def jaccardEdges(mentions: DataFrame, threshold: Double,
-                   maxShingleDf: Long = DefaultMaxShingleDf): DataFrame = {
-    // The capped shingle frame is consumed THREE times (set sizes + both
-    // sides of the shared-shingle self-join); without a cut, each consumer
-    // re-derives the whole upstream (transcript window + regex extract +
-    // distinct — r2 bench showed kg_canonical paying that 3×). One
-    // localCheckpoint materializes it once; it is O(distinct mentions ×
-    // shingles/mention) — orders of magnitude below the corpus, and
-    // localCheckpoint spills block-wise to executor-local disk, so the cut
-    // holds at cluster scale too. LAZY (r7, A/B-measured): same cut, no
-    // separate up-front count job; the self-join's two sides share one
-    // exchange, so the first touch materializes the cache for everyone.
-    val sh = capShingleDf(mentionShingles(mentions), maxShingleDf).localCheckpoint(false)
-    val sizes = sh.groupBy("mention").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("x").join(sh.as("y"), col("x.shingle") === col("y.shingle"))
-      .filter(col("x.mention") < col("y.mention"))
-      .groupBy(col("x.mention").as("a"), col("y.mention").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("mention", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("mention", "b").withColumnRenamed("sz", "szb"), "b")
-      .filter(col("inter") * lit(1.0) / (col("sza") + col("szb") - col("inter")) >= threshold)
-      .select("a", "b")
-  }
+                   maxShingleDf: Long = DefaultMaxShingleDf): DataFrame =
+    jaccardPairs(mentionShingles(mentions), "mention", "shingle", threshold, maxShingleDf)
 
   // ---------------------------------------------------------------- MinHash
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -193,6 +193,22 @@ object Transcripts {
   // 2026-01-01T00:00:00Z epoch seconds; cast(bigint as timestamp) is UTC.
   private val epoch = lit(1767225600L)
 
+  /** The even payload turn's five columns, over a [[withConv]] row. */
+  private def payloadCols: Seq[Column] = Seq(
+    (col("rn") * 2).cast("int").as("turn_idx"),
+    rdfRole.as("role"),
+    rdfXmlText.as("text"),
+    when(col("doc_id") % 3 === 2, "kg-extractor").otherwise(null).as("tool"),
+    (epoch + col("doc_id") * 2).cast("timestamp").as("ts"))
+
+  /** The odd prose turn's five columns, in the same order. */
+  private def proseCols: Seq[Column] = Seq(
+    (col("rn") * 2 + 1).cast("int").as("turn_idx"),
+    lit("tool").as("role"),
+    proseText.as("text"),
+    lit("search").as("tool"),
+    (epoch + col("doc_id") * 2 + 1).cast("timestamp").as("ts"))
+
   /** The even-turn RDF/XML payloads — EXACTLY
     * `transcripts(...).filter(turn_idx % 2 = 0)` by construction
     * (turn_idx = 2·rn is structurally even, the prose turn 2·rn+1 odd, for
@@ -201,27 +217,15 @@ object Transcripts {
     * the prose turns it would discard, and (via `needText = false`) the
     * scan + shuffle of the raw text column those turns embed. */
   def payloadTurns(spark: SparkSession, sfDir: String): DataFrame =
-    withConv(spark, sfDir, needText = false).select(
-      col("conv_id"),
-      (col("rn") * 2).cast("int").as("turn_idx"),
-      rdfRole.as("role"),
-      rdfXmlText.as("text"),
-      when(col("doc_id") % 3 === 2, "kg-extractor").otherwise(null).as("tool"),
-      (epoch + col("doc_id") * 2).cast("timestamp").as("ts"),
-      col("doc_id"))
+    withConv(spark, sfDir, needText = false)
+      .select((col("conv_id") +: payloadCols) :+ col("doc_id"): _*)
 
   /** The odd-turn prose mirror of [[payloadTurns]] — exactly
     * `transcripts(...).filter(turn_idx % 2 = 1)` (same structural parity
     * argument, same spec pin). */
   def proseTurns(spark: SparkSession, sfDir: String): DataFrame =
-    withConv(spark, sfDir, needText = true).select(
-      col("conv_id"),
-      (col("rn") * 2 + 1).cast("int").as("turn_idx"),
-      lit("tool").as("role"),
-      proseText.as("text"),
-      lit("search").as("tool"),
-      (epoch + col("doc_id") * 2 + 1).cast("timestamp").as("ts"),
-      col("doc_id"))
+    withConv(spark, sfDir, needText = true)
+      .select((col("conv_id") +: proseCols) :+ col("doc_id"): _*)
 
   /** The transcript table. Deterministic; schema matches input_hint.
     * Both turns of a document are generated from ONE base row via a 2-way
@@ -229,24 +233,9 @@ object Transcripts {
     * two full scan + rank-window subtrees (the documents scan and the
     * conversation-rank exchange both ran twice per consumer); the explode
     * keeps one scan and one window at identical output rows. */
-  def transcripts(spark: SparkSession, sfDir: String): DataFrame = {
-    val turns = array(
-      struct(
-        (col("rn") * 2).cast("int").as("turn_idx"),
-        rdfRole.as("role"),
-        rdfXmlText.as("text"),
-        when(col("doc_id") % 3 === 2, "kg-extractor").otherwise(null).as("tool"),
-        (epoch + col("doc_id") * 2).cast("timestamp").as("ts")),
-      struct(
-        (col("rn") * 2 + 1).cast("int").as("turn_idx"),
-        lit("tool").as("role"),
-        proseText.as("text"),
-        lit("search").as("tool"),
-        (epoch + col("doc_id") * 2 + 1).cast("timestamp").as("ts")))
+  def transcripts(spark: SparkSession, sfDir: String): DataFrame =
     withConv(spark, sfDir, needText = true)
-      .select(col("conv_id"), col("doc_id"), explode(turns).as("t"))
-      .select(col("conv_id"), col("t.turn_idx").as("turn_idx"), col("t.role").as("role"),
-        col("t.text").as("text"), col("t.tool").as("tool"), col("t.ts").as("ts"),
-        col("doc_id"))
-  }
+      .select(col("conv_id"), col("doc_id"),
+        explode(array(struct(payloadCols: _*), struct(proseCols: _*))).as("t"))
+      .select(col("conv_id"), col("t.*"), col("doc_id"))
 }

@@ -21,7 +21,11 @@ final case class ParserOptions(
     // reference's `dataFactory.blankNode()` with no argument
     // (`lib/RdfXmlParser.ts:409-419`): called with a per-document counter
     // (0, 1, 2, …) each time the grammar needs an anonymous node. null =
-    // the default "b<counter>" labels.
+    // the default labels, the counter's digits ("0", "1", …). rdf:nodeID
+    // labels pass through unchanged and are always NCNames, which never
+    // start with a digit, so the two sources cannot name the same node.
+    // The hook must not return NCNames either: one would merge with an
+    // rdf:nodeID of the same name in the document.
     blankNodeLabel: Int => String = null,
 ) {
   def effectiveIriValidation: IriValidation =
@@ -143,7 +147,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
 
   private def freshBNode(): BNode = {
     val label =
-      if (opts.blankNodeLabel ne null) opts.blankNodeLabel(bnodeCounter) else "b" + bnodeCounter
+      if (opts.blankNodeLabel ne null) opts.blankNodeLabel(bnodeCounter) else bnodeCounter.toString
     bnodeCounter += 1
     BNode(label)
   }

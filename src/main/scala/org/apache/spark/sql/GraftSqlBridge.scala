@@ -21,6 +21,11 @@ object GraftSqlBridge {
   def hadoopConfWithOptions(spark: SparkSession, options: Map[String, String]): org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConfWithOptions(options)
 
+  /** Spark's DIVIDE_BY_ZERO error, as ANSI `Divide` raises it
+    * (`QueryExecutionErrors` is `private[sql]`). */
+  def divideByZeroError(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Apply an extensions object's injected functions to a registry clone —
     * lets tests exercise the `SparkSessionExtensions` path without booting a
     * second SparkContext (`registerFunctions` is `private[sql]`). */

@@ -157,34 +157,58 @@ class ExpressionFuzzSpec extends SparkSuite {
     def mkCb(cents: Seq[Array[Float]]) =
       cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
         .select(col("cell"), col("centroid"), Similarity.norm(col("centroid")).as("cn"))
-    def mkVecs(withZero: Boolean) = ((0 until 300).map { i =>
+    // A null embedding (id 301) scores null against every cell.
+    def mkVecs(withZero: Boolean, withNull: Boolean = false) = ((0 until 300).map { i =>
       (i.toLong, Array.fill(dim)(rnd.nextFloat() * 2 - 1))
-    } ++ (if (withZero) Seq((300L, Array.fill(dim)(0.0f))) else Nil)).toDF("vec_id", "embedding")
+    } ++ (if (withZero) Seq((300L, Array.fill(dim)(0.0f))) else Nil)
+      ++ (if (withNull) Seq((301L, null: Array[Float])) else Nil)).toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), Similarity.norm(col("embedding")).as("n"))
     val sortedCb = array_sort(collect_list(struct(col("cell"), col("centroid"), col("cn"))))
-    def compare(cb: org.apache.spark.sql.DataFrame, vecs: org.apache.spark.sql.DataFrame): Unit = {
+    def nativeCells(cb: org.apache.spark.sql.DataFrame, vecs: org.apache.spark.sql.DataFrame) = {
       val cbRow = cb.agg(sortedCb.as("cb"))
         .select(transform(col("cb"), c => c.getField("cell")).as("cells"),
           transform(col("cb"), c => c.getField("centroid")).as("cents"),
           transform(col("cb"), c => c.getField("cn")).as("cnorms"))
-      val native = vecs.crossJoin(broadcast(cbRow))
+      vecs.crossJoin(broadcast(cbRow))
         .select(col("vec_id"), element_at(col("cells"),
           F.argmax_cos(col("embedding"), col("n"), col("cents"), col("cnorms")) + 1).as("cell"))
         .as[(Long, Int)].collect().toMap
-      val defining = vecs.crossJoin(broadcast(cb))
+    }
+    def definingCells(cb: org.apache.spark.sql.DataFrame, vecs: org.apache.spark.sql.DataFrame) =
+      vecs.crossJoin(broadcast(cb))
         .select(col("vec_id"),
           struct((Similarity.dot(col("embedding"), col("centroid")) / (col("n") * col("cn"))).as("s"),
             (-col("cell")).as("negc")).as("sc"))
         .groupBy("vec_id").agg(max(col("sc")).as("best"))
         .select(col("vec_id"), (-col("best.negc")).cast("int").as("cell"))
         .as[(Long, Int)].collect().toMap
-      assert(native == defining)
+    def compare(cb: org.apache.spark.sql.DataFrame, vecs: org.apache.spark.sql.DataFrame): Unit =
+      assert(nativeCells(cb, vecs) == definingCells(cb, vecs))
+    def divideByZero(f: => Any): Boolean = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO"))
     }
-    // Real-score + exact-tie coverage under the session's ANSI default
-    // (the gated corpus has no zero norms — under ANSI the DEFINING
-    // formulation would refuse a 0 divisor outright, so the kernel can
-    // never silently diverge from it on gated data).
+    // Real-score + exact-tie coverage under the session's ANSI default.
     compare(mkCb(normalCents), mkVecs(withZero = false))
+    // A null embedding: both forms give the smallest cell, with and
+    // without whole-stage codegen (the interpreted path is the kernel's
+    // `eval`).
+    val withNull = mkVecs(withZero = false, withNull = true)
+    assert(nativeCells(mkCb(normalCents), withNull)(301L) == 0)
+    compare(mkCb(normalCents), withNull)
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try compare(mkCb(normalCents), withNull)
+    finally { spark.conf.unset("spark.sql.codegen.factoryMode"); spark.conf.unset("spark.sql.codegen.wholeStage") }
+    // A zero norm under ANSI: the defining Divide refuses the row, and so
+    // does the kernel — a zero vector, then a zero centroid.
+    val zeroCb = mkCb(normalCents :+ Array.fill(dim)(0.0f))
+    Seq(mkCb(normalCents) -> mkVecs(withZero = true), zeroCb -> mkVecs(withZero = false)).foreach {
+      case (cb, vecs) =>
+        assert(divideByZero(definingCells(cb, vecs)))
+        assert(divideByZero(nativeCells(cb, vecs)))
+    }
     // NaN-ordering coverage (zero vector → all scores NaN; zero centroid →
     // its score NaN for every vector, and NaN sits ABOVE every real score
     // in Spark's total order): ANSI off, where `/ 0` yields the IEEE
@@ -193,12 +217,13 @@ class ExpressionFuzzSpec extends SparkSuite {
     try {
       compare(mkCb(normalCents), mkVecs(withZero = true))
       compare(mkCb(normalCents :+ Array.fill(dim)(0.0f)), mkVecs(withZero = true))
+      compare(mkCb(normalCents :+ Array.fill(dim)(0.0f)), mkVecs(withZero = true, withNull = true))
     } finally spark.conf.unset("spark.sql.ansi.enabled")
 
     // argmin: sq_l2 has no division — zero vectors/centroids are exact-tie
     // (not NaN) coverage, safe under ANSI.
     val cb = mkCb(normalCents :+ Array.fill(dim)(0.0f))
-    val vecs = mkVecs(withZero = true)
+    val vecs = mkVecs(withZero = true, withNull = true)
     val cbMinRow = cb.agg(sortedCb.as("cb"))
       .select(transform(col("cb"), c => c.getField("cell")).as("cells"),
         transform(col("cb"), c => c.getField("centroid")).as("cents"))
@@ -213,6 +238,7 @@ class ExpressionFuzzSpec extends SparkSuite {
       .select(col("vec_id"), col("best.j").as("cell"))
       .as[(Long, Int)].collect().toMap
     assert(nativeMin == definingMin)
+    assert(nativeMin(301L) == 0)
   }
 
   test("property: repetitionStats fold == plain-Scala mirror on adversarial text") {
