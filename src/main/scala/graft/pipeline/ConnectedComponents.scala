@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** P8: connected components over an undirected edge list — the
@@ -61,8 +61,8 @@ object ConnectedComponents {
     val input = edges.select(col("a").cast("string").as("u"), col("b").cast("string").as("v"))
       .filter(col("u") =!= col("v"))
 
-    // Canonical direction: big → small. Lazy checkpoint: the g.count()
-    // guard below materializes it in the same job (the eager variant ran
+    // Canonical direction: big → small. Lazy checkpoint: the bounded
+    // collect below materializes it in the same job (the eager variant ran
     // its own count first, doubling the up-front pass — r7).
     var g = input
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
@@ -76,7 +76,14 @@ object ConnectedComponents {
     val allNodes = g.select(col("u").as("node"))
       .unionAll(g.select(col("v").as("node"))).distinct()
 
-    if (g.count() <= driverEdgeLimit) return driverUnionFind(g)
+    // One bounded collect decides the path and, on the driver path, is its
+    // input: at most driverEdgeLimit + 1 rows reach the driver, and more
+    // than driverEdgeLimit of them means the graph is too large for it.
+    val spark = g.sparkSession
+    import spark.implicits._
+    val firstEdges = g.as[(String, String)]
+      .limit(math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt + 1).collect()
+    if (firstEdges.length <= driverEdgeLimit) return driverUnionFind(spark, firstEdges)
 
     var iter = 0
     var converged = false
@@ -173,15 +180,12 @@ object ConnectedComponents {
     ab.length < bb.length
   }
 
-  /** Driver-side union-find over an already-deduplicated, bounded edge
-    * frame (see [[run]]'s `driverEdgeLimit` guard). Path compression +
+  /** Driver-side union-find over the already-deduplicated, bounded edges
+    * `es` (see [[run]]'s `driverEdgeLimit` guard). Path compression +
     * union by attaching the UTF-8-byte-order larger root under the
     * smaller, so the root IS the component's min label (same order as the
     * distributed path and the SQL oracles — see [[utf8Less]]). */
-  private def driverUnionFind(g: DataFrame): DataFrame = {
-    val spark = g.sparkSession
-    import spark.implicits._
-    val es = g.as[(String, String)].collect()
+  private def driverUnionFind(spark: SparkSession, es: Array[(String, String)]): DataFrame = {
     val parent = new java.util.HashMap[String, String]()
     def find(x0: String): String = {
       var x = x0

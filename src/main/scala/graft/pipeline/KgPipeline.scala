@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The end-to-end KG-construction job (north_star): transcripts → windowed
@@ -8,6 +12,17 @@ import org.apache.spark.sql.functions._
   * linking → canonicalization → materialized graph, with every stage a
   * resumable snapshot (P10). This is the unit `Bench` times and
   * `spark-submit` would run on a cluster.
+  *
+  * The stages form a DAG, and [[run]] runs the stages that do not read each
+  * other side by side, two at a time:
+  * {{{
+  *   documents ─┬─ parse ────────────────────┬─ triples_all ─┬─ graph (triples)
+  *              └─ mentions ── canonical ────┘               └─ adjacency
+  * }}}
+  * `parse` overlaps `mentions` → `canonical`; `triples_all` waits for both
+  * and then the triple table overlaps the adjacency table. Each stage is
+  * still one snapshot with its own manifest, so a branch that fails leaves
+  * the other branch's committed stages for the next run to reuse.
   */
 object KgPipeline {
 
@@ -42,28 +57,60 @@ object KgPipeline {
       reusedStages: Int,
   )
 
+  /** Run `a` on this thread and `b` on a second one, and return both
+    * results once both are done. `b` is forked with the caller's active
+    * session and local properties (job groups, scheduler and listener
+    * keys), so its Spark jobs look as if this thread had run them. When a
+    * branch fails, the other one still runs to the end; then the first
+    * failure is thrown, with the other one, if any, attached as suppressed. */
+  private def both[A, B](spark: SparkSession)(a: => A)(b: => B): (A, B) = {
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    def guarded[T](f: => T): Option[T] =
+      try Some(f) catch { case NonFatal(e) => failures.add(e); None }
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val forked = SQLExecution.withThreadLocalCaptured(ClassicConversions.castToImpl(spark), pool)(guarded(b))
+      val ra = guarded(a)
+      (ra, forked.join()) match {
+        case (Some(x), Some(y)) => (x, y)
+        case _ =>
+          val first = failures.poll()
+          failures.forEach(first.addSuppressed(_))
+          throw first
+      }
+    } finally pool.shutdown()
+  }
+
   def run(spark: SparkSession, sfDir: String, outDir: String,
           canonicalBroadcastMaxRows: Long = CanonicalBroadcastMaxRows): PipelineStats = {
-    // P1-P3: scan + parse (shuffle-free; each turn self-contained).
-    val (parsed, parse) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse",
-        Seq("parse_errors" -> count(col("error"))), inputCounters = Seq("turns_in")) { in =>
-      ParseStage.parseTurns(in.count(Transcripts.payloadTurns(spark, sfDir), "turns_in")).toDF()
-    }
+    // Every stage derives from the documents alone: one fingerprint of
+    // their files marks every manifest, so a changed input recomputes all.
+    val input = Materialize.inputFingerprint(s"$sfDir/documents.parquet")
 
-    // P5: mentions from the prose turns.
-    val (mentions, ner) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions",
-        inputCounters = Seq("turns_in")) { in =>
-      Ner.mentions(in.count(Transcripts.proseTurns(spark, sfDir), "turns_in"))
-    }
-
-    // P6-P8: universe → LSH candidates → verified edges → components. Each
-    // component's representative (its minimum) maps to itself, so the
-    // entity count is the number of rows with node = component.
-    val (canonical, canon) = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical",
-        Seq("entities" -> count(when(col("node") === col("component"), 1)))) { _ =>
-      val universe = mentions.select("mention").distinct()
-      val edges = Linking.jaccardEdges(universe, 0.5)
-      ConnectedComponents.run(edges)
+    // The branches are defined here, inside `run`, on purpose: a stage's
+    // Spark call site then holds a `KgPipeline` frame on either thread.
+    val ((parsed, parse), ((mentions, ner), (canonical, canon))) = both(spark) {
+      // P1-P3: scan + parse (shuffle-free; each turn self-contained).
+      Materialize.snapshotStage(spark, "parse", s"$outDir/parse", input,
+          Seq("parse_errors" -> count(col("error"))), inputCounters = Seq("turns_in")) { in =>
+        ParseStage.parseTurns(in.count(Transcripts.payloadTurns(spark, sfDir), "turns_in")).toDF()
+      }
+    } {
+      // P5: mentions from the prose turns.
+      val (mentions, ner) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions", input,
+          inputCounters = Seq("turns_in")) { in =>
+        Ner.mentions(in.count(Transcripts.proseTurns(spark, sfDir), "turns_in"))
+      }
+      // P6-P8: universe → LSH candidates → verified edges → components. Each
+      // component's representative (its minimum) maps to itself, so the
+      // entity count is the number of rows with node = component.
+      val canonical = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical", input,
+          Seq("entities" -> count(when(col("node") === col("component"), 1)))) { _ =>
+        val universe = mentions.select("mention").distinct()
+        val edges = Linking.jaccardEdges(universe, 0.5)
+        ConnectedComponents.run(edges)
+      }
+      ((mentions, ner), canonical)
     }
 
     // Canonical entity triples: mention → its component representative,
@@ -71,7 +118,7 @@ object KgPipeline {
     // usually small (distinct mentions) → broadcast join; size-guarded so a
     // corpus whose mention universe outgrows broadcast limits degrades to a
     // shuffle join instead of failing (see [[CanonicalBroadcastMaxRows]]).
-    val (allTriples, all) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all",
+    val (allTriples, all) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all", input,
         Seq("subjects_approx" -> approx_count_distinct("subj", 0.02))) { _ =>
       val mentionTriples = joinCanonical(mentions, canonical, canon.rows, canonicalBroadcastMaxRows)
         .select(
@@ -85,10 +132,12 @@ object KgPipeline {
     }
 
     // P9: bucketed, pred-partitioned triple table + subject adjacency table.
-    val graph = Materialize.triples(
-      allTriples.withColumn("error", lit(null: String)), s"$outDir/graph")
-    val adjacency = Materialize.adjacency(
-      allTriples.withColumn("error", lit(null: String)), s"$outDir/adjacency")
+    val triples = allTriples.withColumn("error", lit(null: String))
+    val (graph, adjacency) = both(spark) {
+      Materialize.triples(triples, s"$outDir/graph", input)
+    } {
+      Materialize.adjacency(triples, s"$outDir/adjacency", input)
+    }
 
     PipelineStats(
       turns = parse.counters("turns_in") + ner.counters("turns_in"),

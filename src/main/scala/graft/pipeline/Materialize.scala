@@ -1,11 +1,15 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import java.security.MessageDigest
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession, functions}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -23,6 +27,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * carries a `Dataset.observe` of `count(1)` plus the stage's own counters,
   * so nothing is read back to be counted. The manifest is one JSON object:
   *   - `stage`: the stage name;
+  *   - `input`: the fingerprint of the files the stage derives from (see
+  *     [[inputFingerprint]]);
   *   - `rows`: rows written;
   *   - `counters`: name → value of every other observed aggregate (the
   *     stage's counters over its written rows, and the row counts of its
@@ -32,10 +38,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   - `files`: `{path, bytes}` of every data file under `data/`, from a
   *     filesystem listing.
   * It is committed by temp file + rename, after the data. A manifest that is
-  * missing, does not parse, lists a file that is absent or has another
-  * size, or lacks a counter the stage now records marks the stage as not
-  * done, and the stage is recomputed. A resume
-  * therefore reads only manifests and launches no Spark job.
+  * missing, does not parse, was built from another input, lists a file that
+  * is absent or has another size, or lacks a counter the stage now records
+  * marks the stage as not done, and the stage is recomputed. A resume
+  * therefore reads only manifests and a listing of the input, and launches
+  * no Spark job.
   *
   * Triple layout for scale: partitioned by `pred_bucket` (16-way — predicate
   * sets are small and skewed, bucketing by hash keeps partition counts
@@ -76,10 +83,11 @@ object Materialize {
 
   /** The committed manifest of the stage at `dir` as (result, written
     * schema), or None when the stage must be (re)computed: also when the
-    * manifest lacks one of the `expected` counters, e.g. one written before
-    * the stage gained a counter. */
-  private def committed(dir: String, expected: Seq[String]): Option[(StageResult, StructType)] = Try {
+    * manifest was built from another `input`, or lacks one of the `expected`
+    * counters, e.g. one written before the stage gained a counter. */
+  private def committed(dir: String, expected: Seq[String], input: String): Option[(StageResult, StructType)] = Try {
     val m = Json.readTree(Files.readString(manifestPath(dir)))
+    require(m.required("input").asText() == input)
     val files = m.required("files").elements().asScala.toSeq
     require(files.forall { f =>
       val p = Paths.get(dataDir(dir), f.required("path").asText())
@@ -92,13 +100,27 @@ object Materialize {
     (StageResult(dir, m.required("rows").asLong(), reused = true, counters), schema)
   }.toOption
 
-  /** Every data file under `data/` as (relative path, bytes), sorted;
-    * hidden and `_`-prefixed files (checksums, `_SUCCESS`) are not data. */
-  private def dataFiles(dir: String): Seq[(String, Long)] = {
-    val root = Paths.get(dataDir(dir))
+  /** Every data file under `root` (a directory, or one file) with its
+    * attributes, sorted by relative path; hidden and `_`-prefixed files
+    * (checksums, `_SUCCESS`) are not data. */
+  private def dataFiles(root: Path): Seq[(String, BasicFileAttributes)] = {
     def isData(p: Path) = Files.isRegularFile(p) && !p.getFileName.toString.matches("[._].*")
     Using.resource(Files.walk(root))(_.iterator.asScala.filter(isData).toList)
-      .map(p => root.relativize(p).toString -> Files.size(p)).sorted
+      .map(p => root.relativize(p).toString -> Files.readAttributes(p, classOf[BasicFileAttributes]))
+      .sortBy(_._1)
+  }
+
+  /** The fingerprint of the input at `path`, a directory or one file: the
+    * SHA-256 of the sorted (relative path, bytes, mtime) of its data files.
+    * It comes from a filesystem listing, so it launches no Spark job. A
+    * stage records it in its manifest and is reused only under the same
+    * one. */
+  def inputFingerprint(path: String): String = {
+    val listing = dataFiles(Paths.get(path)).map { case (p, a) =>
+      s"$p\t${a.size}\t${a.lastModifiedTime.toMillis}\n"
+    }.mkString
+    MessageDigest.getInstance("SHA-256").digest(listing.getBytes(StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** The one stage writer: `rows` is `df` with `count(1)` and the named
@@ -111,7 +133,7 @@ object Materialize {
     * schema and the file listing in the manifest. The save stays in each
     * stage's own method because the benchmark's per-layer trace keys on the
     * call site Spark records for the write. */
-  private final class StageWrite(name: String, dir: String, df: DataFrame,
+  private final class StageWrite(name: String, dir: String, input: String, df: DataFrame,
                                  counters: Seq[(String, Column)], inputs: StageInputs) {
     private val out = Observation()
     val rows: DataFrame =
@@ -124,12 +146,12 @@ object Materialize {
       val missing = inputs.declared.filterNot(observed.contains)
       require(missing.isEmpty, s"stage $name never counted its inputs ${missing.mkString(", ")}")
       val counters = (observed - "rows").toSeq.sorted
-      val m = Json.createObjectNode().put("stage", name).put("rows", observed("rows"))
+      val m = Json.createObjectNode().put("stage", name).put("input", input).put("rows", observed("rows"))
       val cs = m.putObject("counters")
       counters.foreach { case (k, v) => cs.put(k, v) }
       m.set("schema", Json.readTree(rows.schema.json))
       val fs = m.putArray("files")
-      dataFiles(dir).foreach { case (p, n) => fs.addObject().put("path", p).put("bytes", n) }
+      dataFiles(Paths.get(dataDir(dir))).foreach { case (p, a) => fs.addObject().put("path", p).put("bytes", a.size) }
       val target = manifestPath(dir)
       Files.createDirectories(target.getParent)
       val tmp = target.resolveSibling(".manifest.json.tmp")
@@ -141,25 +163,26 @@ object Materialize {
 
   /** Start a stage write: the stale manifest goes first, so it cannot
     * outlive the data the save overwrites. */
-  private def beginWrite(name: String, dir: String, df: DataFrame, counters: Seq[(String, Column)],
+  private def beginWrite(name: String, dir: String, input: String, df: DataFrame, counters: Seq[(String, Column)],
                          inputs: StageInputs = new StageInputs(Nil)): StageWrite = {
     Files.deleteIfExists(manifestPath(dir))
-    new StageWrite(name, dir, df, counters, inputs)
+    new StageWrite(name, dir, input, df, counters, inputs)
   }
 
   /** Run `compute` as a resumable snapshot stage: skip + re-read when the
-    * stage's manifest is committed. The returned frame reads the snapshot
-    * with the manifest's schema. `counters` are named aggregates over the
-    * written rows; `compute` may count its inputs through the given
-    * [[StageInputs]] under the names in `inputCounters`. */
-  def snapshotStage(spark: SparkSession, name: String, dir: String,
+    * stage's manifest is committed under the same `input` fingerprint. The
+    * returned frame reads the snapshot with the manifest's schema.
+    * `counters` are named aggregates over the written rows; `compute` may
+    * count its inputs through the given [[StageInputs]] under the names in
+    * `inputCounters`. */
+  def snapshotStage(spark: SparkSession, name: String, dir: String, input: String,
                     counters: Seq[(String, Column)] = Nil, inputCounters: Seq[String] = Nil)(
       compute: StageInputs => DataFrame): (DataFrame, StageResult) =
-    committed(dir, counters.map(_._1) ++ inputCounters) match {
+    committed(dir, counters.map(_._1) ++ inputCounters, input) match {
       case Some((res, schema)) => (spark.read.schema(schema).parquet(dataDir(dir)), res)
       case None =>
         val inputs = new StageInputs(inputCounters)
-        val w = beginWrite(name, dir, compute(inputs), counters, inputs)
+        val w = beginWrite(name, dir, input, compute(inputs), counters, inputs)
         w.rows.write.mode("overwrite").parquet(dataDir(dir))
         (spark.read.schema(w.rows.schema).parquet(dataDir(dir)), w.commit())
     }
@@ -170,29 +193,38 @@ object Materialize {
     * hot entities — a 10⁸-degree subject must not become a 10⁸-element array
     * in one row; consumers needing the full fan-out read the triple table,
     * which is bucketed for exactly that. Degree stays exact (count, not
-    * list size). */
-  def adjacency(rows: DataFrame, dir: String, maxFanout: Int = 1024, subjBuckets: Int = 64): StageResult = {
-    val done = committed(dir, Nil)
+    * list size).
+    *
+    * The plan has one exchange: the rows are hash-partitioned by
+    * `subj_hash` first, and everything after it is keyed by
+    * `(subj_hash, subj)`, which that partitioning already satisfies:
+    *   - a window over the subject's rows ordered by `(pred, obj)` gives
+    *     `row_number`, and one ordered by `pred` gives `dense_rank`;
+    *   - one aggregate gives `degree = count(1)`,
+    *     `n_pred = max(dense_rank)` (the distinct predicates) and
+    *     `edges = sort_array(collect_list(struct(pred, obj)))` over the rows
+    *     with `row_number <= maxFanout` only — the cap applies BEFORE the
+    *     collect, so a hot subject's aggregation buffer holds at most
+    *     `maxFanout` entries (`slice(collect_list(...))` would buffer the
+    *     full fan-out and OOM on a 10⁸-degree entity);
+    *   - a sort within each partition by `subj`. */
+  def adjacency(rows: DataFrame, dir: String, input: String, maxFanout: Int = 1024,
+                subjBuckets: Int = 64): StageResult = {
+    val done = committed(dir, Nil, input)
     if (done.isDefined) return done.get._1
-    val triples = rows.filter(col("error").isNull)
-    // Degree/n_pred: plain aggregates — map-side partial, skew-safe.
-    val degrees = triples.groupBy("subj")
-      .agg(count(lit(1)).as("degree"), countDistinct(col("pred")).as("n_pred"))
-    // Edge list: cap BEFORE collect_list — slice(collect_list(...)) would
-    // still buffer the full fan-out per subject in the aggregation buffer,
-    // which OOMs on a 10⁸-degree hot entity. The window keeps at most
-    // maxFanout rows per subject flowing into the collect.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("subj").orderBy("pred", "obj")
-    val capped = triples.select(col("subj"), col("pred"), col("obj"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxFanout)
-      .groupBy("subj")
-      .agg(sort_array(collect_list(struct(col("pred"), col("obj")))).as("edges"))
-    val adj = degrees.join(capped, "subj")
-      .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    val stage = beginWrite("adjacency", dir,
-      adj.repartition(col("subj_hash")).sortWithinPartitions("subj"), Nil)
+    val bySubj = Window.partitionBy("subj_hash", "subj")
+    // rows without a subject have no adjacency row
+    val adj = rows.filter(col("error").isNull && col("subj").isNotNull)
+      .select(col("subj"), col("pred"), col("obj"),
+        pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int").as("subj_hash"))
+      .repartition(col("subj_hash"))
+      .withColumn("rn", row_number().over(bySubj.orderBy("pred", "obj")))
+      .withColumn("pred_rank", dense_rank().over(bySubj.orderBy("pred")))
+      .groupBy("subj_hash", "subj")
+      .agg(count(lit(1)).as("degree"), max(col("pred_rank")).cast("long").as("n_pred"),
+        sort_array(collect_list(when(col("rn") <= maxFanout, struct(col("pred"), col("obj"))))).as("edges"))
+      .select("subj", "degree", "n_pred", "edges", "subj_hash")
+    val stage = beginWrite("adjacency", dir, input, adj.sortWithinPartitions("subj"), Nil)
     stage.rows.write.mode("overwrite").parquet(dataDir(dir))
     stage.commit()
   }
@@ -285,16 +317,16 @@ object Materialize {
   /** Materialize the triple table: pred_bucket partitions on disk, rows
     * co-located and sorted by subject within files. Counters: the row count
     * of each predicate bucket, `pred_bucket_0` … `pred_bucket_15`. */
-  def triples(rows: DataFrame, dir: String, subjBuckets: Int = 64): StageResult = {
+  def triples(rows: DataFrame, dir: String, input: String, subjBuckets: Int = 64): StageResult = {
     val bucketCounts = (0 until PredBuckets).map(b =>
       s"pred_bucket_$b" -> count(when(col("pred_bucket") === b, 1)))
-    val done = committed(dir, bucketCounts.map(_._1))
+    val done = committed(dir, bucketCounts.map(_._1), input)
     if (done.isDefined) return done.get._1
     val keyed = rows
       .filter(col("error").isNull)
       .withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(PredBuckets)).cast("int"))
       .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    val stage = beginWrite("triples", dir,
+    val stage = beginWrite("triples", dir, input,
       keyed.repartition(col("subj_hash")).sortWithinPartitions("subj", "pred"), bucketCounts)
     stage.rows.write.mode("overwrite")
       .partitionBy("pred_bucket")

@@ -146,14 +146,14 @@ class ExpressionFuzzSpec extends SparkSuite {
     val dim = 8
     // Codebook with a DUPLICATED centroid (exact score tie → smallest index
     // must win, the max(struct(s, -cell)) rule) and a ZERO centroid (cn = 0
-    // → score NaN/Inf — Spark's total order must be replicated exactly).
+    // → a zero divisor: a NULL score with ANSI off, DIVIDE_BY_ZERO under
+    // ANSI — Spark's Divide semantics must be replicated exactly).
     val dup = Array.fill(dim)(rnd.nextFloat() * 2 - 1)
     val normalCents: Seq[Array[Float]] =
       Seq(dup) ++ (0 until 5).map(_ => Array.fill(dim)(rnd.nextFloat() * 2 - 1)) ++ Seq(dup)
-    // With a zero centroid every score against it is NaN (0/0), which
-    // Spark's order places ABOVE every real score — the all-NaN codebook
-    // exercises exactly that branch; the normal one exercises real scores
-    // plus the duplicated-centroid exact tie.
+    // The normal codebook exercises real scores plus the
+    // duplicated-centroid exact tie; NaN scores come from NaN and infinite
+    // components (the last block below), never from a zero divisor.
     def mkCb(cents: Seq[Array[Float]]) =
       cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
         .select(col("cell"), col("centroid"), Similarity.norm(col("centroid")).as("cn"))
@@ -209,10 +209,10 @@ class ExpressionFuzzSpec extends SparkSuite {
         assert(divideByZero(definingCells(cb, vecs)))
         assert(divideByZero(nativeCells(cb, vecs)))
     }
-    // NaN-ordering coverage (zero vector → all scores NaN; zero centroid →
-    // its score NaN for every vector, and NaN sits ABOVE every real score
-    // in Spark's total order): ANSI off, where `/ 0` yields the IEEE
-    // NaN/Inf the kernel's Java arithmetic always produces.
+    // Null-score coverage with ANSI off, where Spark's Divide turns a zero
+    // divisor into NULL (not NaN): a zero vector → every score null, so the
+    // smallest cell wins; a zero centroid → its score null for every
+    // vector, so it never wins over a real score.
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
       compare(mkCb(normalCents), mkVecs(withZero = true))
@@ -239,6 +239,38 @@ class ExpressionFuzzSpec extends SparkSuite {
       .as[(Long, Int)].collect().toMap
     assert(nativeMin == definingMin)
     assert(nativeMin(301L) == 0)
+
+    // NaN scores, which Spark's order places ABOVE every real score. A NaN
+    // component makes every dot and norm it enters NaN; an infinite one
+    // makes the norm infinite, so every score over it is ±Inf/Inf or
+    // NaN·x/Inf, NaN. Vector 302 (a NaN component) and vector 303 (+Inf
+    // and −Inf components) score NaN against every cell: the all-NaN tie,
+    // where the smallest cell wins. The centroid with a NaN component
+    // (cell 3) and the one with ±Inf components (the last cell) score NaN
+    // against every vector, so a real best score meets a NaN one at cell 3
+    // (the kernel's `isNaN(s) && !isNaN(bestS)` branch) and the NaN wins;
+    // the later NaN at the last cell ties and loses to the smaller cell.
+    def withSpecial(f: Float) = Array.tabulate(dim)(i =>
+      if (i == 1) f else if (i == 2) -f else rnd.nextFloat() * 2 - 1)
+    val nanCb = mkCb(normalCents.take(3) ++ Seq(withSpecial(Float.NaN)) ++ normalCents.drop(3) ++
+      Seq(withSpecial(Float.PositiveInfinity)))
+    val nanVecs = mkVecs(withZero = false).unionByName(
+      Seq((302L, withSpecial(Float.NaN)), (303L, withSpecial(Float.PositiveInfinity)))
+        .toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding"), Similarity.norm(col("embedding")).as("n")))
+    val nanCells = nativeCells(nanCb, nanVecs)
+    assert(nanCells.size == 302 && nanCells(302L) == 0 && nanCells(303L) == 0)
+    assert(nanCells.filter(_._1 < 300).values.forall(_ == 3))
+    // under the session's ANSI default (no zero divisor, so nothing
+    // raises), without whole-stage codegen, and with ANSI off
+    compare(nanCb, nanVecs)
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try compare(nanCb, nanVecs)
+    finally { spark.conf.unset("spark.sql.codegen.factoryMode"); spark.conf.unset("spark.sql.codegen.wholeStage") }
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try compare(nanCb, nanVecs)
+    finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
   test("property: repetitionStats fold == plain-Scala mirror on adversarial text") {

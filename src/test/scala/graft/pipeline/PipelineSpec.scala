@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSuite {
@@ -58,9 +60,9 @@ class PipelineSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_snap").toString
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val (df1, r1) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (df1, r1) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(!r1.reused && r1.rows == 2 && computes == 1)
-    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(r2.reused && computes == 1)
     assert(df2.collect().map(_.getInt(0)).sorted sameElements Array(1, 2))
     assert(Files.readString(java.nio.file.Paths.get(dir, "_meta", "manifest.json")).contains("\"rows\":2"))
@@ -95,6 +97,9 @@ class PipelineSpec extends SparkSuite {
     val r = adj.selectExpr("max(degree)", "max(size(edges))", "min(size(edges))").head()
     assert(r.getLong(0) >= r.getInt(1) && r.getInt(2) >= 1)
   }
+
+  /** Spark jobs of a fresh `KgPipeline.run` over sf0.001 in this session. */
+  private val FreshJobs = 22
 
   /** Spark jobs `f` launches, counted by a listener. A sentinel job closes
     * the window: the listener bus is FIFO, so once the sentinel's JobStart
@@ -138,9 +143,142 @@ class PipelineSpec extends SparkSuite {
     assert(jobs == 0, s"a resumed KgPipeline.run launched $jobs Spark job(s)")
     assert(resumed == stats.copy(reusedStages = 6))
     // the triple table's per-bucket counters add up to its rows
-    val graph = Materialize.triples(spark.emptyDataFrame, s"$out/graph")
+    val graph = Materialize.triples(spark.emptyDataFrame, s"$out/graph",
+      Materialize.inputFingerprint(s"$sfDir/documents.parquet"))
     assert(graph.reused && graph.counters.size == Materialize.PredBuckets &&
       graph.counters.values.sum == graph.rows && graph.rows == stats.triples)
+  }
+
+  test("a fresh KgPipeline.run launches a pinned number of Spark jobs") {
+    val out = Files.createTempDirectory("graft_kg_jobs").toString
+    val (stats, jobs) = jobsOf(KgPipeline.run(spark, sfDir, out))
+    assert(stats.reusedStages == 0)
+    assert(jobs == FreshJobs, s"a fresh KgPipeline.run launched $jobs Spark job(s)")
+  }
+
+  test("a changed input recomputes every stage; the same input again reuses all six") {
+    val base = Files.createTempDirectory("graft_kg_inputs")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def input(name: String, keep: org.apache.spark.sql.Column): String = {
+      val dir = base.resolve(name).toString
+      docs.filter(keep).write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val a = input("a", col("doc_id") < 300)
+    val b = input("b", col("doc_id") < 200)
+    val out = base.resolve("out").toString
+    val onA = KgPipeline.run(spark, a, out)
+    val onB = KgPipeline.run(spark, b, out)
+    val freshB = KgPipeline.run(spark, b, base.resolve("fresh_b").toString)
+    assert(onA.reusedStages == 0 && onA.turns == 600 && freshB.turns == 400)
+    assert(onB == freshB, "the second input must not reuse the first input's snapshots")
+    val (again, jobs) = jobsOf(KgPipeline.run(spark, b, out))
+    assert(again == freshB.copy(reusedStages = 6) && jobs == 0)
+  }
+
+  test("a stage that fails in one branch: the other branch runs to the end and is reused next time") {
+    val fresh = KgPipeline.run(spark, sfDir, Files.createTempDirectory("graft_kg_ref").toString)
+    def manifest(out: String, stage: String) = java.nio.file.Paths.get(out, stage, "_meta", "manifest.json")
+    // A directory where a stage's manifest temp file goes: the stage writes
+    // its data, then its commit fails, as a crash before the rename would.
+    def block(out: String, stage: String) =
+      Files.createDirectories(java.nio.file.Paths.get(out, stage, "_meta", ".manifest.json.tmp", "blocker"))
+    def unblock(out: String, stage: String) = {
+      val tmp = java.nio.file.Paths.get(out, stage, "_meta", ".manifest.json.tmp")
+      Files.delete(tmp.resolve("blocker")); Files.delete(tmp)
+    }
+
+    // parse, on the calling thread, fails; mentions → canonical still commit
+    val one = Files.createTempDirectory("graft_kg_fail1").toString
+    block(one, "parse")
+    val e1 = intercept[java.io.IOException](KgPipeline.run(spark, sfDir, one))
+    assert(e1.getMessage.contains("parse/_meta") && e1.getSuppressed.isEmpty, e1)
+    assert(!Files.exists(manifest(one, "parse")))
+    assert(Files.exists(manifest(one, "mentions")) && Files.exists(manifest(one, "canonical")))
+    assert(!Files.exists(java.nio.file.Paths.get(one, "triples_all")))
+    unblock(one, "parse")
+    assert(KgPipeline.run(spark, sfDir, one) == fresh.copy(reusedStages = 2))
+
+    // both branches fail: the first failure is thrown, the other suppressed
+    val two = Files.createTempDirectory("graft_kg_fail2").toString
+    block(two, "parse")
+    block(two, "canonical")
+    val e2 = intercept[java.io.IOException](KgPipeline.run(spark, sfDir, two))
+    val failures = (e2 +: e2.getSuppressed.toSeq).map(_.getMessage)
+    assert(failures.size == 2 && failures.exists(_.contains("parse/_meta")) &&
+      failures.exists(_.contains("canonical/_meta")), failures)
+    assert(!Files.exists(manifest(two, "parse")) && !Files.exists(manifest(two, "canonical")))
+    assert(Files.exists(manifest(two, "mentions")))
+    unblock(two, "parse")
+    unblock(two, "canonical")
+    assert(KgPipeline.run(spark, sfDir, two) == fresh.copy(reusedStages = 1))
+  }
+
+  /** The adjacency formulation the one-exchange plan replaced: a
+    * `groupBy(subj)`, a window on `subj`, a join and a `repartition`. */
+  private def referenceAdjacency(rows: DataFrame, maxFanout: Int, subjBuckets: Int = 64): DataFrame = {
+    val triples = rows.filter(col("error").isNull)
+    val degrees = triples.groupBy("subj")
+      .agg(count(lit(1)).as("degree"), countDistinct(col("pred")).as("n_pred"))
+    val w = Window.partitionBy("subj").orderBy("pred", "obj")
+    val capped = triples.select(col("subj"), col("pred"), col("obj"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= maxFanout)
+      .groupBy("subj")
+      .agg(sort_array(collect_list(struct(col("pred"), col("obj")))).as("edges"))
+    degrees.join(capped, "subj")
+      .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
+      .repartition(col("subj_hash")).sortWithinPartitions("subj")
+  }
+
+  private def bag(df: DataFrame): Map[Row, Int] =
+    df.select("subj", "degree", "n_pred", "edges", "subj_hash").collect().toSeq
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  test("adjacency: the one-exchange table equals the four-exchange formulation, also over maxFanout") {
+    import spark.implicits._
+    val parsed = ParseStage.parsedTranscripts(spark, sfDir).toDF()
+    // duplicate (pred, obj) rows, an error row, and subjects over a small cap
+    val small = Seq(
+      ("<s1>", "<p1>", "<o1>", null: String), ("<s1>", "<p1>", "<o1>", null), ("<s1>", "<p2>", "<o0>", null),
+      ("<s1>", "<p0>", "<o9>", null), ("<s1>", "<p2>", "<o3>", "bad"), ("<s2>", "<p1>", "<o1>", null),
+      ("<s3>", "<p3>", "\"x\"", null), ("<s3>", "<p3>", "\"y\"", null), ("<s3>", "<p3>", "\"z\"", null),
+    ).toDF("subj", "pred", "obj", "error")
+    for ((rows, fanout) <- Seq(parsed -> 1024, parsed -> 3, small -> 2)) {
+      val dir = Files.createTempDirectory("graft_adj").toString
+      Materialize.adjacency(rows, dir, "", maxFanout = fanout)
+      val got = spark.read.parquet(s"$dir/data")
+      // a subject whose fan-out is over the cap (the hub: 1030 > 1024)
+      assert(got.filter(col("degree") > fanout && size(col("edges")) === fanout).count() > 0)
+      assert(bag(got) == bag(referenceAdjacency(rows, fanout)), s"maxFanout $fanout")
+    }
+  }
+
+  test("the adjacency write plans exactly one shuffle exchange") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_adj_plan").toString
+    // the rows come from a parquet scan, as triples_all does in the pipeline,
+    // so every exchange in the plan is the adjacency's own
+    ParseStage.parsedTranscripts(spark, sfDir).write.parquet(s"$dir/in")
+    val rows = spark.read.parquet(s"$dir/in")
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains(s"$dir/data")) writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val write = try {
+      Materialize.adjacency(rows, dir, "")
+      writes.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(write != null, "the adjacency write was not seen")
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val shuffles = aqe.collectWithSubqueries(write.executedPlan) { case x: ShuffleExchangeLike => x }
+    assert(shuffles.size == 1, write.executedPlan)
   }
 
   test("a truncated or missing manifest, a missing counter or a missing data file forces a recompute") {
@@ -149,34 +287,34 @@ class PipelineSpec extends SparkSuite {
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v") }
     val manifest = java.nio.file.Paths.get(dir, "_meta", "manifest.json")
-    val (_, r1) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (_, r1) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(!r1.reused && r1.rows == 3 && computes == 1)
     val text = Files.readString(manifest)
     Files.writeString(manifest, text.take(text.length / 2))
-    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(!r2.reused && r2.rows == 3 && computes == 2)
     assert(df2.count() == 3)
     Files.delete(manifest)
-    val (_, r3) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (_, r3) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(!r3.reused && computes == 3)
-    val (df4, r4) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (df4, r4) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(r4.reused && r4.rows == 3 && computes == 3)
     // the resumed frame reads with the recorded schema, as inference would
     assert(df4.schema == spark.read.parquet(s"$dir/data").schema)
     // the stage gained a counter the manifest lacks: recompute, then reuse
     val nB = Seq("n_b" -> count(when(col("v") === "b", 1)))
-    val (_, r4b) = Materialize.snapshotStage(spark, "s", dir, nB)(_ => compute)
+    val (_, r4b) = Materialize.snapshotStage(spark, "s", dir, "", nB)(_ => compute)
     assert(!r4b.reused && r4b.counters == Map("n_b" -> 1L) && computes == 4)
-    val (_, r4c) = Materialize.snapshotStage(spark, "s", dir, nB)(_ => compute)
+    val (_, r4c) = Materialize.snapshotStage(spark, "s", dir, "", nB)(_ => compute)
     assert(r4c.reused && r4c.counters == Map("n_b" -> 1L) && computes == 4)
-    val (_, r4d) = Materialize.snapshotStage(spark, "s", dir, inputCounters = Seq("rows_in")) { in =>
+    val (_, r4d) = Materialize.snapshotStage(spark, "s", dir, "", inputCounters = Seq("rows_in")) { in =>
       in.count(compute, "rows_in")
     }
     assert(!r4d.reused && r4d.counters == Map("rows_in" -> 3L) && computes == 5)
     // a data file the manifest lists is gone: recompute, not a short read
     Files.list(java.nio.file.Paths.get(dir, "data")).filter(_.getFileName.toString.startsWith("part-"))
       .findFirst().ifPresent(p => Files.delete(p))
-    val (df5, r5) = Materialize.snapshotStage(spark, "s", dir)(_ => compute)
+    val (df5, r5) = Materialize.snapshotStage(spark, "s", dir, "")(_ => compute)
     assert(!r5.reused && computes == 6 && df5.count() == 3)
     assert(!Files.list(manifest.getParent).anyMatch(_.getFileName.toString.endsWith(".tmp")))
   }

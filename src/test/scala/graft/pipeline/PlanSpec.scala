@@ -118,7 +118,7 @@ class PlanSpec extends SparkSuite {
       ("c1", 0, "<s1>", "<p1>", "<o1>", null: String),
       ("c1", 0, "<s2>", "<p2>", "<o2>", null: String),
     ).toDF("conv_id", "turn_idx", "subj", "pred", "obj", "error")
-    Materialize.triples(rows, dir)
+    Materialize.triples(rows, dir, "")
     val back = spark.read.parquet(s"$dir/data").filter($"pred_bucket" === 3)
     val p = plan(back)
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
