@@ -251,11 +251,11 @@ object SparkEntry {
         s.read.parquet(s"$dir/customer.parquet"),
         s.read.parquet(s"$dir/supplier.parquet"))),
 
-    // P8: canonicalization — connected components (large-star/small-star)
-    // over the Jaccard edges; component = lexicographic min mention
+    // P8: canonicalization — connected components over the Jaccard edges
+    // (on the driver for a small universe, else large-star/small-star);
+    // component = lexicographic min mention
     "kg_canonical" -> ((s, dir) =>
-      ConnectedComponents.run(
-        Linking.jaccardEdges(Ner.mentionUniverse(Transcripts.transcripts(s, dir)), 0.5))),
+      Linking.components(Ner.mentionUniverse(Transcripts.transcripts(s, dir)), 0.5)),
 
     // P9 shape check: per-subject adjacency stats of the triple table
     "kg_adjacency" -> ((s, dir) =>

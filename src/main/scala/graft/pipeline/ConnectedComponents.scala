@@ -184,8 +184,9 @@ object ConnectedComponents {
     * `es` (see [[run]]'s `driverEdgeLimit` guard). Path compression +
     * union by attaching the UTF-8-byte-order larger root under the
     * smaller, so the root IS the component's min label (same order as the
-    * distributed path and the SQL oracles — see [[utf8Less]]). */
-  private def driverUnionFind(spark: SparkSession, es: Array[(String, String)]): DataFrame = {
+    * distributed path and the SQL oracles — see [[utf8Less]]). Also the
+    * clustering step of `Linking.components`' driver path. */
+  private[pipeline] def driverUnionFind(spark: SparkSession, es: Array[(String, String)]): DataFrame = {
     val parent = new java.util.HashMap[String, String]()
     def find(x0: String): String = {
       var x = x0

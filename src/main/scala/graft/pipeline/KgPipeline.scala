@@ -86,6 +86,9 @@ object KgPipeline {
     // Every stage derives from the documents alone: one fingerprint of
     // their files marks every manifest, so a changed input recomputes all.
     val input = Materialize.inputFingerprint(s"$sfDir/documents.parquet")
+    // One read, so one schema-inference job, feeds both transcript surfaces.
+    // Lazy: a run that reuses both stages reads no documents at all.
+    lazy val docs = Transcripts.documents(spark, sfDir)
 
     // The branches are defined here, inside `run`, on purpose: a stage's
     // Spark call site then holds a `KgPipeline` frame on either thread.
@@ -93,22 +96,20 @@ object KgPipeline {
       // P1-P3: scan + parse (shuffle-free; each turn self-contained).
       Materialize.snapshotStage(spark, "parse", s"$outDir/parse", input,
           Seq("parse_errors" -> count(col("error"))), inputCounters = Seq("turns_in")) { in =>
-        ParseStage.parseTurns(in.count(Transcripts.payloadTurns(spark, sfDir), "turns_in")).toDF()
+        ParseStage.parseTurns(in.count(Transcripts.payloadTurns(docs), "turns_in")).toDF()
       }
     } {
       // P5: mentions from the prose turns.
       val (mentions, ner) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions", input,
           inputCounters = Seq("turns_in")) { in =>
-        Ner.mentions(in.count(Transcripts.proseTurns(spark, sfDir), "turns_in"))
+        Ner.mentions(in.count(Transcripts.proseTurns(docs), "turns_in"))
       }
-      // P6-P8: universe → LSH candidates → verified edges → components. Each
-      // component's representative (its minimum) maps to itself, so the
-      // entity count is the number of rows with node = component.
+      // P6-P8: universe → Jaccard edges → components. Each component's
+      // representative (its minimum) maps to itself, so the entity count is
+      // the number of rows with node = component.
       val canonical = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical", input,
           Seq("entities" -> count(when(col("node") === col("component"), 1)))) { _ =>
-        val universe = mentions.select("mention").distinct()
-        val edges = Linking.jaccardEdges(universe, 0.5)
-        ConnectedComponents.run(edges)
+        Linking.components(mentions, 0.5)
       }
       ((mentions, ner), canonical)
     }

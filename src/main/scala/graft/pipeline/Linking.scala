@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -136,6 +137,64 @@ object Linking {
   def jaccardEdges(mentions: DataFrame, threshold: Double,
                    maxShingleDf: Long = DefaultMaxShingleDf): DataFrame =
     jaccardPairs(mentionShingles(mentions), "mention", "shingle", threshold, maxShingleDf)
+
+  /** Canonicalization of the mentions in a `mention` column, which may
+    * repeat: `(node, component)` for every mention with a [[jaccardEdges]]
+    * edge in the distinct mention universe, labelled as
+    * [[ConnectedComponents.run]] labels it (component = the UTF-8-order
+    * minimum). SparkER's blocking → matching → clustering chain, run on the
+    * driver when the universe is small: one bounded collect of
+    * [[mentionShingles]] (at most `driverLimit + 1` rows) decides the path,
+    * and when both the rows and the pair work are at most `driverLimit`
+    * ([[driverJaccardPairs]]), the capped Jaccard rule and the union-find
+    * run in driver memory, repeats dropped there too. That is one Spark
+    * job without a shuffle instead of about ten, and it leaves the KG build
+    * few enough generated classes to stay inside Spark's codegen cache.
+    * Otherwise, and at cluster scale, it is exactly
+    * `ConnectedComponents.run(jaccardEdges(universe, threshold,
+    * maxShingleDf))` over the distinct mentions. The shingles always come
+    * from Spark's `char_shingles`.
+    * @param driverLimit test hook, like `ConnectedComponents.run`'s
+    *        `driverEdgeLimit`. */
+  def components(mentions: DataFrame, threshold: Double,
+                 maxShingleDf: Long = DefaultMaxShingleDf,
+                 driverLimit: Long = ConnectedComponents.DriverEdgeLimit): DataFrame = {
+    val spark = mentions.sparkSession
+    import spark.implicits._
+    val rows = mentionShingles(mentions).as[(String, String)]
+      .limit(math.min(driverLimit, Int.MaxValue - 1L).toInt + 1).collect()
+    driverJaccardPairs(rows, threshold, maxShingleDf, driverLimit) match {
+      case Some(pairs) => ConnectedComponents.driverUnionFind(spark, pairs)
+      case None =>
+        ConnectedComponents.run(jaccardEdges(mentions.select("mention").distinct(), threshold, maxShingleDf))
+    }
+  }
+
+  /** [[jaccardPairs]] in driver memory over the distinct (mention,
+    * shingle) rows: every shingle held by more than `cap` mentions is
+    * dropped (the [[hotKeys]] rule), each pair `a < b` (UTF-8 byte order, as Spark
+    * compares) counts the kept shingles it shares, and a pair is kept when
+    * its Jaccard over the kept shingles, the same double expression, is at
+    * least `threshold`. None when the rows or the pair work — Σ C(df, 2)
+    * over the kept shingles, counted before any pair is made — exceed
+    * `limit`: the caller then takes the distributed path. `rows` may
+    * repeat, as the shingles of a repeated mention do. */
+  private[pipeline] def driverJaccardPairs(rows: Array[(String, String)], threshold: Double,
+                                           cap: Long, limit: Long): Option[Array[(String, String)]] = {
+    if (rows.length > limit) return None
+    val holders = rows.distinct.groupMap(_._2)(_._1).values.filter(_.length <= cap).toSeq
+    if (holders.map(h => h.length.toLong * (h.length - 1) / 2).sum > limit) return None
+    val sizes = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+    val shared = mutable.HashMap.empty[(String, String), Long].withDefaultValue(0L)
+    holders.foreach { h =>
+      h.foreach(m => sizes(m) += 1)
+      for (i <- h.indices; j <- i + 1 until h.length)
+        shared(if (ConnectedComponents.utf8Less(h(i), h(j))) (h(i), h(j)) else (h(j), h(i))) += 1
+    }
+    Some(shared.iterator.collect {
+      case (pair @ (a, b), n) if n * 1.0 / (sizes(a) + sizes(b) - n) >= threshold => pair
+    }.toArray)
+  }
 
   // ---------------------------------------------------------------- MinHash
 

@@ -8,10 +8,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession, functions}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession, functions}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** P9/P10: graph materialization and resumable snapshot stages.
   *
@@ -196,37 +195,61 @@ object Materialize {
     * list size).
     *
     * The plan has one exchange: the rows are hash-partitioned by
-    * `subj_hash` first, and everything after it is keyed by
-    * `(subj_hash, subj)`, which that partitioning already satisfies:
-    *   - a window over the subject's rows ordered by `(pred, obj)` gives
-    *     `row_number`, and one ordered by `pred` gives `dense_rank`;
-    *   - one aggregate gives `degree = count(1)`,
-    *     `n_pred = max(dense_rank)` (the distinct predicates) and
-    *     `edges = sort_array(collect_list(struct(pred, obj)))` over the rows
-    *     with `row_number <= maxFanout` only — the cap applies BEFORE the
-    *     collect, so a hot subject's aggregation buffer holds at most
-    *     `maxFanout` entries (`slice(collect_list(...))` would buffer the
-    *     full fan-out and OOM on a 10⁸-degree entity);
-    *   - a sort within each partition by `subj`. */
+    * `subj_hash`, sorted within each partition by `(subj, pred, obj)`, and
+    * one pass over each partition ([[adjacencyRows]]) turns every run of
+    * equal `subj` into its row: `degree` counts the run, `n_pred` counts
+    * its distinct predicates (the changes of `pred` along the sorted run)
+    * and `edges` keeps its first `maxFanout` `(pred, obj)` pairs in that
+    * order. The pass holds at most `maxFanout` pairs, so a 10⁸-degree
+    * entity never buffers its full fan-out; the rows leave sorted by
+    * `subj`. A pass, not windows and an object aggregate: those generate
+    * about 20 more codegen classes, and the whole KG build must fit in
+    * Spark's 100-entry codegen cache (see PipelineSpec). */
   def adjacency(rows: DataFrame, dir: String, input: String, maxFanout: Int = 1024,
                 subjBuckets: Int = 64): StageResult = {
     val done = committed(dir, Nil, input)
     if (done.isDefined) return done.get._1
-    val bySubj = Window.partitionBy("subj_hash", "subj")
     // rows without a subject have no adjacency row
     val adj = rows.filter(col("error").isNull && col("subj").isNotNull)
       .select(col("subj"), col("pred"), col("obj"),
         pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int").as("subj_hash"))
       .repartition(col("subj_hash"))
-      .withColumn("rn", row_number().over(bySubj.orderBy("pred", "obj")))
-      .withColumn("pred_rank", dense_rank().over(bySubj.orderBy("pred")))
-      .groupBy("subj_hash", "subj")
-      .agg(count(lit(1)).as("degree"), max(col("pred_rank")).cast("long").as("n_pred"),
-        sort_array(collect_list(when(col("rn") <= maxFanout, struct(col("pred"), col("obj"))))).as("edges"))
-      .select("subj", "degree", "n_pred", "edges", "subj_hash")
-    val stage = beginWrite("adjacency", dir, input, adj.sortWithinPartitions("subj"), Nil)
+      .sortWithinPartitions("subj", "pred", "obj")
+      .mapPartitions((it: Iterator[Row]) => adjacencyRows(it.buffered, maxFanout))(Encoders.row(AdjacencySchema))
+    val stage = beginWrite("adjacency", dir, input, adj, Nil)
     stage.rows.write.mode("overwrite").parquet(dataDir(dir))
     stage.commit()
+  }
+
+  private val AdjacencySchema = StructType(Seq(
+    StructField("subj", StringType),
+    StructField("degree", LongType, nullable = false),
+    StructField("n_pred", LongType, nullable = false),
+    StructField("edges", ArrayType(StructType(Seq(StructField("pred", StringType), StructField("obj", StringType))),
+      containsNull = false), nullable = false),
+    StructField("subj_hash", IntegerType, nullable = false)))
+
+  /** One adjacency row per run of equal `subj` in (subj, pred, obj,
+    * subj_hash) rows sorted by `(subj, pred, obj)`; see [[adjacency]]. */
+  private def adjacencyRows(in: scala.collection.BufferedIterator[Row], maxFanout: Int): Iterator[Row] = new Iterator[Row] {
+    def hasNext: Boolean = in.hasNext
+    def next(): Row = {
+      val subj = in.head.getString(0)
+      val subjHash = in.head.getInt(3)
+      val edges = mutable.ArrayBuffer[Row]()
+      var degree = 0L
+      var nPred = 0L
+      var lastPred: String = null
+      while (in.hasNext && in.head.getString(0) == subj) {
+        val r = in.next()
+        val pred = r.getString(1)
+        if (degree == 0 || pred != lastPred) nPred += 1
+        lastPred = pred
+        if (degree < maxFanout) edges += Row(pred, r.getString(2))
+        degree += 1
+      }
+      Row(subj, degree, nPred, edges.toSeq, subjHash)
+    }
   }
 
   /** Catalog-bucketed triple table (`bucketBy` + `saveAsTable`): subject-hash

@@ -175,11 +175,11 @@ object Transcripts {
     * shrinks) nor shuffle it through the window — the optimization guide's
     * "shuffle keys and metadata instead of payloads" applied to the
     * corpus's one wide column. */
-  private def withConv(spark: SparkSession, sfDir: String, needText: Boolean): DataFrame = {
+  private def withConv(docs: DataFrame, needText: Boolean): DataFrame = {
     val cols =
       if (needText) Seq("doc_id", "text", "lang", "source", "n_chars")
       else Seq("doc_id", "lang", "source", "n_chars")
-    documents(spark, sfDir)
+    docs
       .select(cols.map(col): _*)
       .withColumn("conv_id", concat(lit("conv-"), (col("doc_id") % Convs).cast("string")))
       .withColumn("rn",
@@ -217,14 +217,24 @@ object Transcripts {
     * the prose turns it would discard, and (via `needText = false`) the
     * scan + shuffle of the raw text column those turns embed. */
   def payloadTurns(spark: SparkSession, sfDir: String): DataFrame =
-    withConv(spark, sfDir, needText = false)
+    payloadTurns(documents(spark, sfDir))
+
+  /** [[payloadTurns]] over an already-read [[documents]] frame: a caller
+    * that derives both surfaces from one frame infers the parquet schema
+    * once (each `spark.read.parquet` runs its own schema-inference job). */
+  def payloadTurns(docs: DataFrame): DataFrame =
+    withConv(docs, needText = false)
       .select((col("conv_id") +: payloadCols) :+ col("doc_id"): _*)
 
   /** The odd-turn prose mirror of [[payloadTurns]] — exactly
     * `transcripts(...).filter(turn_idx % 2 = 1)` (same structural parity
     * argument, same spec pin). */
   def proseTurns(spark: SparkSession, sfDir: String): DataFrame =
-    withConv(spark, sfDir, needText = true)
+    proseTurns(documents(spark, sfDir))
+
+  /** [[proseTurns]] over an already-read [[documents]] frame. */
+  def proseTurns(docs: DataFrame): DataFrame =
+    withConv(docs, needText = true)
       .select((col("conv_id") +: proseCols) :+ col("doc_id"): _*)
 
   /** The transcript table. Deterministic; schema matches input_hint.
@@ -234,7 +244,7 @@ object Transcripts {
     * conversation-rank exchange both ran twice per consumer); the explode
     * keeps one scan and one window at identical output rows. */
   def transcripts(spark: SparkSession, sfDir: String): DataFrame =
-    withConv(spark, sfDir, needText = true)
+    withConv(documents(spark, sfDir), needText = true)
       .select(col("conv_id"), col("doc_id"),
         explode(array(struct(payloadCols: _*), struct(proseCols: _*))).as("t"))
       .select(col("conv_id"), col("t.*"), col("doc_id"))
