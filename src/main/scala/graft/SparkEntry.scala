@@ -825,17 +825,17 @@ expected AS (
   UNION ALL SELECT conv_id, turn_idx, '<$Base#st' || doc_id || '>', '<${RdfNs}subject>', '<${Base}d' || doc_id || '>' FROM d WHERE doc_id % 4 = 1
   UNION ALL SELECT conv_id, turn_idx, '<$Base#st' || doc_id || '>', '<${RdfNs}predicate>', '<${Voc}src>' FROM d WHERE doc_id % 4 = 1
   UNION ALL SELECT conv_id, turn_idx, '<$Base#st' || doc_id || '>', '<${RdfNs}object>', '<${Base}corpus/' || source || '>' FROM d WHERE doc_id % 4 = 1
-  -- v2: parseType=Resource nested blank node (deterministic relabel _:conv_turn_b0)
-  UNION ALL SELECT conv_id, turn_idx, '<${Base}d' || doc_id || '>', '<${Voc}meta>', '_:' || conv_id || '_' || turn_idx || '_b0' FROM d WHERE doc_id % 4 = 2
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b0', '<${Voc}chars>', '"' || n_chars || '"' FROM d WHERE doc_id % 4 = 2
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b0', '<${Voc}source>', '"' || source || '"' FROM d WHERE doc_id % 4 = 2
-  -- v3: parseType=Collection rdf:List chain (_:b0, _:b1); the hub doc is
+  -- v2: parseType=Resource nested blank node (fresh label _:conv_turn_1; the root rdf:RDF frame takes counter 0)
+  UNION ALL SELECT conv_id, turn_idx, '<${Base}d' || doc_id || '>', '<${Voc}meta>', '_:' || conv_id || '_' || turn_idx || '_1' FROM d WHERE doc_id % 4 = 2
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_1', '<${Voc}chars>', '"' || n_chars || '"' FROM d WHERE doc_id % 4 = 2
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_1', '<${Voc}source>', '"' || source || '"' FROM d WHERE doc_id % 4 = 2
+  -- v3: parseType=Collection rdf:List chain (_:conv_turn_1, _:conv_turn_2); the hub doc is
   -- carved out (11 % 4 = 3 would otherwise route it here)
-  UNION ALL SELECT conv_id, turn_idx, '<${Base}d' || doc_id || '>', '<${Voc}tags>', '_:' || conv_id || '_' || turn_idx || '_b0' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b0', '<${RdfNs}first>', '<${Base}t/' || lang || '>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b0', '<${RdfNs}rest>', '_:' || conv_id || '_' || turn_idx || '_b1' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b1', '<${RdfNs}first>', '<${Base}t/' || source || '>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
-  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_b1', '<${RdfNs}rest>', '<${RdfNs}nil>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
+  UNION ALL SELECT conv_id, turn_idx, '<${Base}d' || doc_id || '>', '<${Voc}tags>', '_:' || conv_id || '_' || turn_idx || '_1' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_1', '<${RdfNs}first>', '<${Base}t/' || lang || '>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_1', '<${RdfNs}rest>', '_:' || conv_id || '_' || turn_idx || '_2' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_2', '<${RdfNs}first>', '<${Base}t/' || source || '>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
+  UNION ALL SELECT conv_id, turn_idx, '_:' || conv_id || '_' || turn_idx || '_2', '<${RdfNs}rest>', '<${RdfNs}nil>' FROM d WHERE doc_id % 4 = 3 AND doc_id <> $HubDoc
   -- celebrity hub (doc $HubDoc, Transcripts.HubDoc): d11 → hub, plus
   -- $HubFanout hub → h/i out-edges — one node above the 2-hop mid cap
   UNION ALL SELECT conv_id, turn_idx, '<${Base}d' || doc_id || '>', '<${Voc}hub>', '<${Base}hub>' FROM d WHERE doc_id = $HubDoc

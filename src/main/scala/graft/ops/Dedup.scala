@@ -239,7 +239,7 @@ object Dedup {
     * offsets, drop covered tokens and re-emit. Null text passes through
     * null with null `n_cut` (mirrors the oracle's CASE). */
   private[graft] def cutSpans(docs: DataFrame, cuts: DataFrame, k: Int): DataFrame = {
-    val out = docs.columns.map {
+    val out = docs.columns.toSeq.map {
       case "text" => array_join(col("kept"), " ").as("text")
       case c => col(c)
     } :+ (size(col("toks")) - size(col("kept"))).cast("long").as("n_cut")

@@ -64,25 +64,4 @@ object Multimodal {
       }
     }
   }
-
-  final case class Frame(doc_id: Long, frame_idx: Int, offset: Int, frame_checksum: Long)
-
-  /** Frame sampling for the `video` kind: every `stride`-th fixed-size slice
-    * of the payload stands in for a decoded frame (1 row → N rows, the
-    * `flatMap`/generator shape a real ffmpeg sampler would have; stub is the
-    * slicing, the fan-out plumbing is real). */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int = 256, stride: Int = 4): Dataset[Frame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "video").mapPartitions { it =>
-      it.flatMap { m =>
-        val nFrames = math.max(1, m.payload.length / frameBytes)
-        (0 until nFrames by stride).iterator.map { f =>
-          val off = f * frameBytes
-          val slice = java.util.Arrays.copyOfRange(m.payload, off, math.min(off + frameBytes, m.payload.length))
-          Frame(m.doc_id, f, off, StubCodec.checksum(slice))
-        }
-      }
-    }
-  }
 }

@@ -252,20 +252,6 @@ object Materialize {
     }
   }
 
-  /** Catalog-bucketed triple table (`bucketBy` + `saveAsTable`): subject-hash
-    * buckets the planner understands, so subject-keyed self-joins and
-    * adjacency aggregations read both sides pre-co-located — zero Exchange
-    * (PlanSpec pins it). This is the deploy-time layout on a real catalog;
-    * [[triples]] is the path-based Iceberg-shaped equivalent. */
-  def bucketedTriples(rows: DataFrame, table: String, subjBuckets: Int = 64): Unit =
-    rows.filter(col("error").isNull)
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .write.mode("overwrite")
-      .bucketBy(subjBuckets, "subj")
-      .sortBy("subj", "pred")
-      .format("parquet")
-      .saveAsTable(table)
-
   // ------------------------------------------------- dictionary encoding
 
   /** Dictionary-encoded term materialization — the shuffle-width win at
@@ -374,9 +360,4 @@ object Skew {
     val s = small.withColumn("_salt", explode(sequence(lit(0), lit(salts - 1))))
     b.join(s, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Top-k hot keys by frequency — the candidates for salting/special-casing
-    * (`groupBy(key).count.orderBy(desc).limit(k)`). */
-  def hotKeys(df: DataFrame, key: String, k: Int): DataFrame =
-    df.groupBy(key).agg(count(lit(1)).as("n")).orderBy(desc("n"), col(key)).limit(k)
 }

@@ -7,11 +7,11 @@ import graft.rdf._
 
 /** One parsed-triple output row: the `(conv_id, turn_idx)` lineage, then
   * the columns of [[graft.rdf.TripleColumns]] (term text, the decomposed
-  * object and the per-document error channel). Blank nodes are renumbered
-  * per turn and prefixed by [[graft.rdf.Relabeler.forTurn]], e.g.
-  * `_:c1_0_b0` (P4): per-document isomorphism is preserved while labels
-  * become globally unique, which is what lets downstream stages treat
-  * triples as plain strings.
+  * object and the per-document error channel). Blank nodes are named by
+  * [[graft.rdf.BlankNodeLabels.forTurn]] as the parser creates them, e.g.
+  * `_:c1_0_1` for the first anonymous node of turn 0 of `c1` (P4): labels
+  * are globally unique, which is what lets downstream stages treat triples
+  * as plain strings.
   */
 final case class TripleRow(
     conv_id: String,
@@ -45,7 +45,7 @@ object ParseStage {
   /** One turn's rows: its whole text is one write, so every row is ready
     * once the document has ended. */
   private def toRows(conv: String, turn: Int, text: String, opts: ParserOptions): Iterator[TripleRow] = {
-    val doc = new TripleColumns.Document(opts, Relabeler.forTurn(conv, turn))
+    val doc = new TripleColumns.Document(opts.copy(blankNodeLabel = BlankNodeLabels.forTurn(conv, turn)))
     doc.write(text)
     doc.end()
     Iterator.continually(doc).takeWhile(_.next()).map(d =>

@@ -17,16 +17,15 @@ final case class ParserOptions(
     // Constant per parse, so the Spark side attaches it as a literal column
     // (ParseStage.parseQuads) instead of widening every kernel Triple.
     defaultGraph: String = "",
-    // Fresh blank-node label allocation, the factory-controlled part of the
-    // reference's `dataFactory.blankNode()` with no argument
-    // (`lib/RdfXmlParser.ts:409-419`): called with a per-document counter
-    // (0, 1, 2, …) each time the grammar needs an anonymous node. null =
-    // the default labels, the counter's digits ("0", "1", …). rdf:nodeID
-    // labels pass through unchanged and are always NCNames, which never
-    // start with a digit, so the two sources cannot name the same node.
-    // The hook must not return NCNames either: one would merge with an
-    // rdf:nodeID of the same name in the document.
-    blankNodeLabel: Int => String = null,
+    // Blank-node naming, the factory-controlled part of the reference's
+    // `dataFactory.blankNode(label?)` (`lib/RdfXmlParser.ts:409-419`):
+    // called once each time the parser creates a blank node, with the raw
+    // label, which is a per-document counter's digits ("0", "1", …) for an
+    // anonymous node or the `rdf:nodeID` / `rdf:annotationNodeID` value.
+    // null = raw labels. `rdf:nodeID` values are NCNames, which never start
+    // with a digit, so raw fresh and nodeID labels cannot name the same
+    // node; a hook must keep the two apart too (BlankNodeLabels does).
+    blankNodeLabel: String => String = null,
 ) {
   def effectiveIriValidation: IriValidation =
     if (iriValidation != null) iriValidation
@@ -146,11 +145,14 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   private def attrBuffer[A]: mutable.ArrayBuffer[A] = new mutable.ArrayBuffer[A](2)
 
   private def freshBNode(): BNode = {
-    val label =
-      if (opts.blankNodeLabel ne null) opts.blankNodeLabel(bnodeCounter) else bnodeCounter.toString
+    val node = bnode(bnodeCounter.toString)
     bnodeCounter += 1
-    BNode(label)
+    node
   }
+
+  /** Every blank node the parser creates is named here, once. */
+  private def bnode(raw: String): BNode =
+    BNode(if (opts.blankNodeLabel ne null) opts.blankNodeLabel(raw) else raw)
 
   /** `valueToUri` (`lib/RdfXmlParser.ts:161-163`). */
   private def valueToUri(value: String, tag: ActiveTag): Iri =
@@ -385,7 +387,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
 
     if (activeSubjectValue != null) {
       activeTag.subject =
-        if (subjectValueBlank) BNode(activeSubjectValue)
+        if (subjectValueBlank) bnode(activeSubjectValue)
         else valueToUri(activeSubjectValue, activeTag)
       if (claimSubjectNodeId) claimNodeId(activeTag.subject)
     }
@@ -553,7 +555,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
           case "annotation" =>
             activeTag.reifier = Iri(attribute.value)
           case "annotationNodeID" =>
-            activeTag.reifier = BNode(attribute.value)
+            activeTag.reifier = bnode(attribute.value)
           case _ => handled = false
         }
       } else if (attribute.uri == XML && attribute.local == "lang") {
@@ -585,7 +587,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
       // rdf:resource / rdf:nodeID object shortcut (`:706-732`).
       val subjectParent = activeTag.subject
       activeTag.subject =
-        if (subSubjectValueBlank) BNode(activeSubSubjectValue)
+        if (subSubjectValueBlank) bnode(activeSubSubjectValue)
         else valueToUri(activeSubSubjectValue, activeTag)
       emitTriple(subjectParent, activeTag.predicate, activeTag.subject,
         activeTag.reifiedStatementId, activeTag.childrenTripleTerms, activeTag.reifier)
@@ -727,8 +729,8 @@ object RdfXmlParser {
   /** Batch parse through a custom [[TermFactory]] — the reference's
     * `dataFactory` surface (`lib/RdfXmlParser.ts:85-93`): every term in the
     * result, including nested triple-term components, is built by `factory`.
-    * Combine with [[ParserOptions.blankNodeLabel]] to also control fresh
-    * blank-node allocation. */
+    * Combine with [[ParserOptions.blankNodeLabel]] to also control blank-node
+    * labels. */
   def parseWith[N](text: String, factory: TermFactory[N],
       opts: ParserOptions = ParserOptions()): Either[ParseError, Vector[(N, N, N)]] = {
     val out = Vector.newBuilder[(N, N, N)]

@@ -11,9 +11,10 @@ package graft.rdf
   * megamorph the emit path), so the factory is applied at the emit boundary —
   * each pushed triple is converted just before the consumer sees it. The
   * observable contract matches the reference: consumers receive only
-  * factory-built terms, and fresh blank-node labels are factory-controlled
-  * via [[ParserOptions.blankNodeLabel]] (the reference's argument-less
-  * `dataFactory.blankNode()`, `lib/RdfXmlParser.ts:409-419`).
+  * factory-built terms, and blank-node labels are caller-controlled via
+  * [[ParserOptions.blankNodeLabel]], which the parser calls once per blank
+  * node it creates (the reference's `dataFactory.blankNode(label?)`,
+  * `lib/RdfXmlParser.ts:409-419`).
   */
 trait TermFactory[N] {
   def namedNode(iri: String): N

@@ -81,8 +81,22 @@ object Lit {
 /** RDF 1.2 triple term (quoted triple) in the object position.
   * Reference: `lib/RdfXmlParser.ts:658-663`, `:857-873`, `:767-769`. */
 final case class TripleTerm(t: Triple) extends Term {
-  def ntriples: String =
-    "<<( " + t.subj.ntriples + " " + t.pred.ntriples + " " + t.obj.ntriples + " )>>"
+  /** One walk down the object chain, the only position a triple term nests
+    * in, so a deep nest neither recurses nor copies inner text per level. */
+  def ntriples: String = {
+    val sb = new java.lang.StringBuilder
+    var depth = 0
+    var o: Term = this
+    while (o.isInstanceOf[TripleTerm]) {
+      val inner = o.asInstanceOf[TripleTerm].t
+      sb.append("<<( ").append(inner.subj.ntriples).append(' ').append(inner.pred.ntriples).append(' ')
+      depth += 1
+      o = inner.obj
+    }
+    sb.append(o.ntriples)
+    while (depth > 0) { sb.append(" )>>"); depth -= 1 }
+    sb.toString
+  }
 }
 
 /** One emitted triple (the default graph is implicit — the reference only
@@ -91,48 +105,56 @@ final case class Triple(subj: Term, pred: Term, obj: Term) {
   def ntriples: String = subj.ntriples + " " + pred.ntriples + " " + obj.ntriples + " ."
 }
 
-/** Canonical blank-node relabeling shared by every parse surface (pipeline
-  * stage P4 and the DSv2 source): bnodes are renumbered `b0, b1, …` in order
-  * of first appearance in the emitted stream — deterministic for a
-  * deterministic document and independent of internal counter details — then
-  * prefixed with the document's lineage ([[Relabeler.forTurn]] /
-  * [[Relabeler.forPath]]), making labels globally unique across the corpus.
-  * Recurses into RDF 1.2 triple terms. One instance per document.
+/** The blank-node labels of the row surfaces (pipeline stage P4 and the
+  * DSv2 source), handed to the parser as [[ParserOptions.blankNodeLabel]]:
+  * each node is named once, where the parser creates it, as
+  * `{prefix}{escape(raw)}`. `raw` is the parser's counter digits for a fresh
+  * node or the `rdf:nodeID` / `rdf:annotationNodeID` value. The label is a
+  * pure function of (document, raw label), so no per-document map grows and
+  * no emitted triple is walked again.
   *
-  * One implementation on purpose: the pipeline and the source each had a
-  * private copy, and the two diverged once (the truncated-MD5-prefix
-  * collision bug) before being re-unified here.
+  * Fresh labels start with a digit and escaped `rdf:nodeID` values
+  * (NCNames) with a letter or `-`, so the two never name the same node.
+  * [[escape]] never emits `_`, so the last `_` ends the document's prefix
+  * and labels stay unique across documents; its output holds only
+  * N-Triples label characters and never ends in `.`.
   */
-final class Relabeler private (prefix: String) {
-  private val seen = scala.collection.mutable.HashMap.empty[String, String]
-  /** Returns `t` itself when it holds no blank node. */
-  def apply(t: Term): Term = t match {
-    case BNode(l) => BNode(seen.getOrElseUpdate(l, prefix + "b" + seen.size))
-    case TripleTerm(tr) =>
-      val r = apply(tr)
-      if (r eq tr) t else TripleTerm(r)
-    case other => other
-  }
+object BlankNodeLabels {
+  /** A transcript turn's labels: `{conv}_{turn}_{escape(raw)}`. */
+  def forTurn(conv: String, turn: Int): String => String = prefixed(s"${conv}_${turn}_")
 
-  /** Returns `t` itself when it holds no blank node. */
-  def apply(t: Triple): Triple = {
-    val s = apply(t.subj)
-    val p = apply(t.pred)
-    val o = apply(t.obj)
-    if ((s eq t.subj) && (p eq t.pred) && (o eq t.obj)) t else Triple(s, p, o)
-  }
-}
-
-object Relabeler {
-  /** A transcript turn's labels: `{conv}_{turn}_bN`. */
-  def forTurn(conv: String, turn: Int): Relabeler = new Relabeler(s"${conv}_${turn}_")
-
-  /** A file's labels: `{md5(path)}_bN` with the FULL 128-bit path MD5 — a
-    * truncated prefix is not collision-safe (32 bits birthday-collides at
-    * ~65k files, silently merging unrelated blank nodes across documents). */
-  def forPath(path: String): Relabeler = new Relabeler(
+  /** A file's labels: `{md5(path)}_{escape(raw)}` with the FULL 128-bit path
+    * MD5 — a truncated prefix is not collision-safe (32 bits
+    * birthday-collides at ~65k files, silently merging unrelated blank nodes
+    * across documents). */
+  def forPath(path: String): String => String = prefixed(
     java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_")
+
+  private def prefixed(prefix: String): String => String = raw => prefix + escape(raw)
+
+  /** Keeps ASCII letters and digits; writes every other UTF-16 unit as `-`
+    * and four lowercase hex digits. */
+  def escape(raw: String): String = {
+    var i = 0
+    while (i < raw.length && isKept(raw.charAt(i))) i += 1
+    if (i == raw.length) return raw // the common case: no copy
+    val sb = new java.lang.StringBuilder(raw.length + 16).append(raw, 0, i)
+    while (i < raw.length) {
+      val c = raw.charAt(i)
+      if (isKept(c)) sb.append(c)
+      else {
+        sb.append('-')
+        var shift = 12
+        while (shift >= 0) { sb.append(Character.forDigit((c >> shift) & 0xf, 16)); shift -= 4 }
+      }
+      i += 1
+    }
+    sb.toString
+  }
+
+  private def isKept(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 }
 
 object RdfVocab {

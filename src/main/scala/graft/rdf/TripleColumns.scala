@@ -51,11 +51,12 @@ object TripleColumns {
     * before the failing event, in push order, followed by exactly one error
     * row; the reference behaves the same (`lib/RdfXmlParser.ts:765`), and a
     * streaming surface could not take those triples back anyway. Input after
-    * the failure is ignored. Blank nodes are relabeled by `relabel`.
+    * the failure is ignored. Blank nodes carry the labels
+    * `opts.blankNodeLabel` gives them.
     */
-  final class Document(opts: ParserOptions, relabel: Relabeler) {
+  final class Document(opts: ParserOptions) {
     private val pending = new java.util.ArrayDeque[Triple]()
-    private val parser = RdfXmlParser.streaming(opts)(t => pending.addLast(relabel(t)))
+    private val parser = RdfXmlParser.streaming(opts)(pending.addLast)
     private var error: String = null
     private var errorTaken = false
     private var current: Triple = _

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rdf.{ParserOptions, Relabeler, TripleColumns}
+import graft.rdf.{BlankNodeLabels, ParserOptions, TripleColumns}
 
 /** `spark.read.format("rdfxml")` — a DataSource V2 batch source that parses
   * RDF/XML files into triple rows, re-expressing the reference's primary
@@ -27,8 +27,8 @@ import graft.rdf.{ParserOptions, Relabeler, TripleColumns}
   * is one parser state machine), so parallelism = file count, bin-packed
   * into partitions by size. Schema: the `path` lineage column, then the
   * columns of [[graft.rdf.TripleColumns]], so a malformed document ends in
-  * one error row, never a task failure (R28), and blank nodes are prefixed
-  * by [[graft.rdf.Relabeler.forPath]]. Column pruning is pushed into the
+  * one error row, never a task failure (R28), and blank nodes are named by
+  * [[graft.rdf.BlankNodeLabels.forPath]]. Column pruning is pushed into the
   * reader (`SupportsPushDownRequiredColumns`).
   *
   * Reads stream ([[RdfXmlPartitionReader]]): a file is decoded and parsed
@@ -37,10 +37,9 @@ import graft.rdf.{ParserOptions, Relabeler, TripleColumns}
   * held whole and files over 2 GB read like any other. A file that fails
   * partway gives the triples pushed before the failing event, then its one
   * error row ([[graft.rdf.TripleColumns.Document]]); `parseTurns` follows
-  * the same rule. Two structures still grow with a file: the
-  * [[graft.rdf.Relabeler]] map, one entry per distinct blank node, and the
-  * parser's set of `rdf:ID` values kept for the duplicate check (empty
-  * under `allowDuplicateRdfIds`).
+  * the same rule. One structure still grows with a file: the parser's set
+  * of `rdf:ID` values kept for the duplicate check (empty under
+  * `allowDuplicateRdfIds`).
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
   * the file URI), `validateUri`, `allowDuplicateRdfIds`.
@@ -489,9 +488,8 @@ final class RdfXmlPartitionReader(
       catch { case e: Throwable => raw.close(); throw e }
     in = new java.io.InputStreamReader(bytes, java.nio.charset.StandardCharsets.UTF_8)
     val base = if (baseIRI.contains("{path}")) baseIRI.replace("{path}", path) else baseIRI
-    doc = new TripleColumns.Document(
-      ParserOptions(baseIRI = base, validateUri = validateUri, allowDuplicateRdfIds = allowDup),
-      Relabeler.forPath(path))
+    doc = new TripleColumns.Document(ParserOptions(baseIRI = base, validateUri = validateUri,
+      allowDuplicateRdfIds = allowDup, blankNodeLabel = BlankNodeLabels.forPath(path)))
     filePath = path
   }
 

@@ -506,16 +506,6 @@ class OpsSpec extends SparkSuite {
     assert(out(4L) == ((4L, 3, 3, 1)))
   }
 
-  test("frame sampling fans out video payloads deterministically") {
-    val frames = Multimodal.sampleFrames(Multimodal.syntheticMedia(docs.limit(30))).collect()
-    assert(frames.nonEmpty)
-    assert(frames.forall(f => f.doc_id % 3 == 2), "only video rows sampled") // kind 'video' = doc_id%3==2
-    assert(frames.forall(f => f.frame_idx % 4 == 0 && f.offset == f.frame_idx * 256))
-    val again = Multimodal.sampleFrames(Multimodal.syntheticMedia(docs.limit(30))).collect()
-    assert(frames.map(f => (f.doc_id, f.frame_idx, f.frame_checksum)).toSet ==
-      again.map(f => (f.doc_id, f.frame_idx, f.frame_checksum)).toSet)
-  }
-
   test("as-of join: backward match, >= tie, NULL payload field, unmatched left") {
     import spark.implicits._
     val left = Seq(

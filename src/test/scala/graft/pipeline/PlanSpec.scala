@@ -125,25 +125,6 @@ class PlanSpec extends SparkSuite {
     assert(pf.contains("pred_bucket"), p)
   }
 
-  test("bucketed triple table: subject self-join is exchange-free (co-located buckets)") {
-    import org.apache.spark.sql.functions.col
-    val rows = ParseStage.parseTurns(
-      Transcripts.transcripts(spark, sfDir).filter(col("turn_idx") % 2 === 0).limit(50)).toDF()
-    Materialize.bucketedTriples(rows, "graft_bucketed_test", subjBuckets = 4)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t = spark.table("graft_bucketed_test")
-      val joined = t.as("x").join(t.as("y"), "subj")
-      val p = plan(joined)
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange"), p) // both sides come pre-bucketed
-      assert(joined.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_test")
-    }
-  }
-
   test("brute-force top-k broadcasts the query side") {
     val p = plan(q("sim_topk"))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)

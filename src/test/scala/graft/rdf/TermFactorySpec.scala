@@ -56,7 +56,7 @@ class TermFactorySpec extends AnyFunSuite {
   <rdf:Description><eg:p>v</eg:p></rdf:Description>
   <rdf:Description><eg:p>w</eg:p></rdf:Description>
 </rdf:RDF>"""
-    val opts = ParserOptions(blankNodeLabel = i => s"my$i")
+    val opts = ParserOptions(blankNodeLabel = raw => s"my$raw")
     // counter 0 is burned on the root frame (matching the default b1/b2
     // labels the reference corpus pins for this shape)
     val Right(ts) = RdfXmlParser.parse(doc, opts)

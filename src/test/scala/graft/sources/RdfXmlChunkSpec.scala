@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import graft.pipeline.SparkSuite
-import graft.rdf.{ParseError, RdfXmlParser, Relabeler, Triple, TripleColumns}
+import graft.rdf.{BlankNodeLabels, ParseError, ParserOptions, RdfXmlParser, TripleColumns}
 
 /** The `rdfxml` source feeds the parser in [[RdfXmlPartitionReader.ChunkChars]]
   * chunks; a document spanning several chunks must read exactly as the
@@ -48,10 +48,11 @@ class RdfXmlChunkSpec extends SparkSuite {
     (sb.append(Tail).toString, edges)
   }
 
-  /** The rows `TripleColumns` gives for the whole-text parse. */
-  private def expected(parsed: Seq[Triple], path: String): Seq[Seq[String]] = {
-    val relabel = Relabeler.forPath(path)
-    parsed.map(relabel(_)).map(t => TripleColumns.Names.indices.map(TripleColumns.value(t, _)))
+  /** The rows `TripleColumns` gives for the whole-text parse of `text`, with
+    * the file's blank-node labels. */
+  private def expected(text: String, path: String): Seq[Seq[String]] = {
+    val Right(parsed) = RdfXmlParser.parse(text, ParserOptions(blankNodeLabel = BlankNodeLabels.forPath(path)))
+    parsed.map(t => TripleColumns.Names.indices.map(TripleColumns.value(t, _)))
   }
 
   private def read(text: String): (String, Seq[Seq[String]]) = {
@@ -67,9 +68,8 @@ class RdfXmlChunkSpec extends SparkSuite {
     straddled.foreach { edge =>
       assert(Character.isHighSurrogate(doc.charAt(edge - 1)) && Character.isLowSurrogate(doc.charAt(edge)), edge)
     }
-    val Right(triples) = RdfXmlParser.parse(doc)
     val (path, rows) = read(doc)
-    assert(rows == expected(triples, path))
+    assert(rows == expected(doc, path))
     assert(rows.exists(_(0).startsWith("_:")) && rows.exists(_(2).startsWith("_:")))
     assert(rows.count(r => r(4) != null && r(4).endsWith(Emoji)) == straddled.length)
     assert(rows.exists(r => r(4) != null && r(4).contains("Ωμέγα")))
@@ -80,9 +80,8 @@ class RdfXmlChunkSpec extends SparkSuite {
       """<rdf:Description rdf:about="http://e.org/last"><ex:open>v</ex:shut></rdf:Description>""" + "\n" + Tail
     val Left(ParseError(message)) = RdfXmlParser.parse(bad)
     assert(message.matches("\\d+:\\d+: Mismatched closing tag: ex:shut .*"), message)
-    val Right(before) = RdfXmlParser.parse(doc)
     val (path, rows) = read(bad)
     assert(rows.last == Seq(null, null, null, TripleColumns.ErrorType, null, null, null, message))
-    assert(rows.init == expected(before, path))
+    assert(rows.init == expected(doc, path))
   }
 }

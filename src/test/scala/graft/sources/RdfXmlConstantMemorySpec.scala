@@ -11,9 +11,8 @@ import graft.pipeline.SparkSuite
 
 /** Reading a file through `format("rdfxml")` holds neither its text nor its
   * triples whole: the live heap stays flat while a 64 MB document streams
-  * into a `noop` sink. The document has no blank nodes and no `rdf:ID`, so
-  * nothing the parser keeps per document (the relabel map, the `rdf:ID`
-  * set) grows with it. */
+  * into a `noop` sink. The document has no `rdf:ID`, so nothing the parser
+  * keeps per document (the `rdf:ID` set) grows with it. */
 class RdfXmlConstantMemorySpec extends SparkSuite {
 
   private val FileBytes = 64L << 20

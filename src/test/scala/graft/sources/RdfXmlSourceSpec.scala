@@ -42,7 +42,7 @@ class RdfXmlSourceSpec extends SparkSuite {
     // bnode label is prefixed by the full 128-bit path MD5 (collision-safe
     // across millions of files, unlike a truncated prefix)
     val bn = ok.filter(_.getAs[String]("subj").startsWith("_:"))
-    assert(bn.length == 1 && bn.head.getAs[String]("subj").matches("_:[0-9a-f]{32}_b0"))
+    assert(bn.length == 1 && bn.head.getAs[String]("subj").matches("_:[0-9a-f]{32}_1"))
   }
 
   test("rdfxml scan: runtime path filters prune FILES (DPP analogue), stats report listed bytes") {

@@ -35,36 +35,6 @@ class StreamingSpec extends SparkSuite {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
-  test("stateful mapGroupsWithState accumulates per-conversation progress across micro-batches") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_stream3").toString
-    val input = s"$tmp/input"
-    // two separate files → two micro-batches (maxFilesPerTrigger=1), so the
-    // same conversation's state must carry across batches
-    Seq(("c1", 0), ("c1", 1), ("c2", 0)).toDF("conv_id", "turn_idx")
-      .withColumn("role", lit("user")).withColumn("text", lit("t"))
-      .withColumn("tool", lit(null: String)).withColumn("ts", current_timestamp())
-      .coalesce(1).write.parquet(s"$input/f1")
-    Seq(("c1", 2), ("c2", 5)).toDF("conv_id", "turn_idx")
-      .withColumn("role", lit("user")).withColumn("text", lit("t"))
-      .withColumn("tool", lit(null: String)).withColumn("ts", current_timestamp())
-      .coalesce(1).write.parquet(s"$input/f2")
-
-    val q = StreamingParse.conversationProgress(spark, s"$input/*")
-      .writeStream.format("memory").queryName("conv_progress")
-      .outputMode("update")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-
-    // the latest update per conversation reflects cumulative state
-    val rows = spark.table("conv_progress").as[(String, Long, Int)].collect()
-    val byConv = rows.groupBy(_._1)
-    assert(byConv("c1").map(_._2).max == 3 && byConv("c1").map(_._3).max == 2)
-    assert(byConv("c2").map(_._2).max == 2 && byConv("c2").map(_._3).max == 5)
-  }
-
   test("rdfxml DSv2 streaming read: two micro-batches equal the batch read; resume is exactly-once") {
     val tmp = Files.createTempDirectory("graft_stream_dsv2").toString
     val input = s"$tmp/input"
