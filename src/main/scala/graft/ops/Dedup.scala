@@ -37,17 +37,6 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(graft.functions.GraftFunctions.word_gram_hashes(col("text"), k)).as(Seq("pos", "h")))
 
-  /** Exploded (id, shingle) word-n-gram rows with the token array
-    * materialized ONCE per document: higher-order functions are interpreted
-    * (CodegenFallback), so a `split` inside the per-shingle lambda re-splits
-    * the full text for every shingle — O(tokens²) character work per doc.
-    * The sequence bound is also CASE-guarded (Spark's `sequence(1, 0)`
-    * counts DOWN and would fabricate a shingle for sub-n-gram docs where
-    * the DuckDB oracle's `generate_series(1, 0)` yields none). */
-  def wordShingleRows(docs: DataFrame, idCol: String, textCol: String, n: Int = 5): DataFrame =
-    wordShingleArrays(docs, idCol, textCol, n)
-      .select(col(idCol), explode(col("shingles")).as("shingle"))
-
   /** (id, shingles: array<string>) — the un-exploded form, one row per doc.
     * Feeds the per-row `minhash_sig` path, which needs the whole set in one
     * value. Sub-n-gram docs are dropped up front by an EXACT cheap predicate

@@ -38,10 +38,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k cosine neighbors for each query vector (queries = rows of
-    * `embeddings` with vec_id < nQueries — deterministic subset). The query
-    * side is broadcast; the big side streams. Output: (q, neighbor, rank).
-    */
   /** (vec_id, embedding, n) — norms precomputed ONCE per vector. Every
     * pair-scoring consumer divides a pair dot by `x.n * y.n` instead of
     * calling [[cosine]] per pair: that recomputes both norm folds O(pairs)
@@ -51,6 +47,10 @@ object Similarity {
   private[graft] def withNorms(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("n"))
 
+  /** Exact top-k cosine neighbors for each query vector (queries = rows of
+    * `embeddings` with vec_id < nQueries — deterministic subset). The query
+    * side is broadcast; the big side streams. Output: (q, neighbor, rank).
+    */
   def bruteTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val e = withNorms(embeddings)
     val queries = e.filter(col("vec_id") < nQueries)
@@ -92,29 +92,20 @@ object Similarity {
     Array.fill(nPlanes, dim)(rnd.nextGaussian())
   }
 
-  /** Multi-table random-hyperplane LSH: `tables` independent hash tables of
-    * `bitsPerTable` sign bits each; a pair is a candidate if it collides in
-    * ANY table (the OR-construction — a single wide bucket has near-zero
-    * recall on near-orthogonal data). The candidate join is an equi-join on
-    * (table, bucket) instead of a cross join — the scale path. Output
-    * matches [[bruteTopK]] (approximate; ScalaTest asserts recall). */
-  /** (vec_id, embedding, table, bucket) multi-table hyperplane bucket
-    * assignment — shared by [[lshTopK]] and [[lshNearDupPairs]]. A narrow
-    * projection (native dot against plane literals) plus a `tables`-way
-    * explode; no shuffle. */
-  /** The embedding dimensionality, WITHOUT running a Spark job when
-    * avoidable: an explicit `dim` parameter wins, then a `dim` key in the
-    * embedding column's schema metadata; only as a last resort is one row
-    * probed (`limit(1)` = an extra job per sim query, and a scan hazard on a
-    * corpus whose first partitions are empty-heavy — r3 verdict). Returns 0
-    * for an empty table (callers emit zero buckets). */
   /** Counts [[embeddingDim]] falls to the `limit(1)` probe — a dormant
     * tool-path that costs an extra Spark job (and a scan hazard on a table
     * whose leading partitions are empty-heavy). Exposed so OpsSpec can pin
     * that the registry queries never probe and that the fallback warns. */
   private[graft] val dimProbeCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** `probeCounter` is injectable so tests can assert exact probe deltas on
+  /** The embedding dimensionality, WITHOUT running a Spark job when
+    * avoidable: an explicit `dim` parameter wins, then a `dim` key in the
+    * embedding column's schema metadata; only as a last resort is one row
+    * probed (`limit(1)` = an extra job per sim query, and a scan hazard on a
+    * corpus whose first partitions are empty-heavy — r3 verdict). Returns 0
+    * for an empty table (callers emit zero buckets).
+    *
+    * `probeCounter` is injectable so tests can assert exact probe deltas on
     * a counter scoped to themselves — the process-global [[dimProbeCount]]
     * would make equality assertions flaky under parallel suites (r5
     * ADVICE). Production callers use the default. */
@@ -139,6 +130,10 @@ object Similarity {
     if (firstEmb.isEmpty) 0 else firstEmb.head.getSeq[Any](0).size
   }
 
+  /** (vec_id, embedding, table, bucket) multi-table hyperplane bucket
+    * assignment — shared by [[lshTopK]] and [[lshNearDupPairs]]. A narrow
+    * projection (native dot against plane literals) plus a `tables`-way
+    * explode; no shuffle. */
   private[graft] def hyperplaneBuckets(embeddings: DataFrame,
                                        tables: Int, bitsPerTable: Int, dim: Int = 0): DataFrame = {
     // An empty table (or a fully-filtered partition of the corpus) must mean
@@ -162,6 +157,12 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("n"), col("tb.table"), col("tb.bucket"))
   }
 
+  /** Multi-table random-hyperplane LSH: `tables` independent hash tables of
+    * `bitsPerTable` sign bits each; a pair is a candidate if it collides in
+    * ANY table (the OR-construction — a single wide bucket has near-zero
+    * recall on near-orthogonal data). The candidate join is an equi-join on
+    * (table, bucket) instead of a cross join — the scale path. Output
+    * matches [[bruteTopK]] (approximate; ScalaTest asserts recall). */
   def lshTopK(embeddings: DataFrame, nQueries: Int, k: Int,
               tables: Int = 8, bitsPerTable: Int = 4, dim: Int = 0): DataFrame = {
     val withBuckets = hyperplaneBuckets(embeddings, tables, bitsPerTable, dim)
@@ -184,22 +185,6 @@ object Similarity {
       .select("q", "neighbor", "rank")
   }
 
-  /** IVF (inverted-file) ANN — the second scale path besides [[lshTopK]]:
-    * a deterministic coarse codebook, each vector assigned to its nearest
-    * cell by cosine; queries probe their `nProbe` nearest cells and score
-    * only those cells' members. The candidate join is an equi-join on
-    * `cell` — at 100 TB this is the partition-pruning shape (cell =
-    * partition key), vs. LSH's multi-table union.
-    *
-    * The codebook is a broadcast TABLE (collapsed to one row of parallel
-    * arrays), not a bank of literal expressions: plan size and codegen stay
-    * O(1) as nCells grows to the 4k–64k cells a real 100 TB index needs (a
-    * 64k-branch literal expression is a plan-size cliff). Assignment = one
-    * native `argmax_cos` projection per vector against that broadcast row —
-    * map-only, no exchange on the corpus side at all (r7; previously a
-    * nCells-way candidate explode + groupBy(vec_id) argmax whose exchange
-    * carried the embedding column). Approximate; OpsSpec asserts recall vs
-    * [[bruteTopK]] and exhaustive equality when probing all cells. */
   /** Deterministic coarse codebook: the nCells lowest vec_ids
     * (data-independent choice; [[lloydRefine]] trains it in place when
     * `trainIters > 0`). The global (unpartitioned) window
@@ -328,6 +313,22 @@ object Similarity {
       .select(col("q"), col("qe"), col("qn"), col("cell"))
   }
 
+  /** IVF (inverted-file) ANN — the second scale path besides [[lshTopK]]:
+    * a deterministic coarse codebook, each vector assigned to its nearest
+    * cell by cosine; queries probe their `nProbe` nearest cells and score
+    * only those cells' members. The candidate join is an equi-join on
+    * `cell` — at 100 TB this is the partition-pruning shape (cell =
+    * partition key), vs. LSH's multi-table union.
+    *
+    * The codebook is a broadcast TABLE (collapsed to one row of parallel
+    * arrays), not a bank of literal expressions: plan size and codegen stay
+    * O(1) as nCells grows to the 4k–64k cells a real 100 TB index needs (a
+    * 64k-branch literal expression is a plan-size cliff). Assignment = one
+    * native `argmax_cos` projection per vector against that broadcast row —
+    * map-only, no exchange on the corpus side at all (r7; previously a
+    * nCells-way candidate explode + groupBy(vec_id) argmax whose exchange
+    * carried the embedding column). Approximate; OpsSpec asserts recall vs
+    * [[bruteTopK]] and exhaustive equality when probing all cells. */
   def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int,
               nCells: Int = 16, nProbe: Int = 4, trainIters: Int = 0): DataFrame = {
     val e = withNorms(embeddings)
@@ -386,25 +387,6 @@ object Similarity {
       .dropDuplicates("a", "b")
   }
 
-  /** Product-quantization codes — the vector-compression primitive under
-    * disk-resident ANN at corpus scale (a 64-dim float vector becomes `m`
-    * small ints; IVF-PQ is this composed with [[ivfTopK]]'s cell
-    * assignment). The embedding is split into `m` contiguous subspaces;
-    * each subvector is assigned the index of its nearest (squared-L2)
-    * centroid in that subspace's codebook. Codebook = the subvectors of
-    * the `k` lowest vec_ids (data-independent deterministic choice, same
-    * convention as [[ivfTopK]]'s codebook; [[lloydRefinePq]] trains it in
-    * place when `trainIters > 0`).
-    *
-    * Output is EXPLODED (vec_id, subspace, code) integer rows so the
-    * driver hash never sees a float. Scale shape: the codebook collapses
-    * to m broadcast rows of parallel arrays; the vector side is a narrow
-    * m-way explode; the code is one native `argmin_sql2` projection per
-    * (vec_id, subspace) row — the operator has NO exchange at all (r7;
-    * previously a k-way candidate explode + groupBy argmin whose exchange
-    * carried n·m rows). Distances are the same left-to-right double fold
-    * as [[dot]], so the DuckDB oracle replays the argmin bit-exactly; ties
-    * break to the smallest centroid index via lexicographic struct min. */
   /** The m contiguous subvector slices of an embedding column. */
   private def subSlices(c: Column, m: Int, sub: Int): Column =
     array((0 until m).map(s => slice(c, s * sub + 1, sub)): _*)
@@ -467,6 +449,25 @@ object Similarity {
     cb
   }
 
+  /** Product-quantization codes — the vector-compression primitive under
+    * disk-resident ANN at corpus scale (a 64-dim float vector becomes `m`
+    * small ints; IVF-PQ is this composed with [[ivfTopK]]'s cell
+    * assignment). The embedding is split into `m` contiguous subspaces;
+    * each subvector is assigned the index of its nearest (squared-L2)
+    * centroid in that subspace's codebook. Codebook = the subvectors of
+    * the `k` lowest vec_ids (data-independent deterministic choice, same
+    * convention as [[ivfTopK]]'s codebook; [[lloydRefinePq]] trains it in
+    * place when `trainIters > 0`).
+    *
+    * Output is EXPLODED (vec_id, subspace, code) integer rows so the
+    * driver hash never sees a float. Scale shape: the codebook collapses
+    * to m broadcast rows of parallel arrays; the vector side is a narrow
+    * m-way explode; the code is one native `argmin_sql2` projection per
+    * (vec_id, subspace) row — the operator has NO exchange at all (r7;
+    * previously a k-way candidate explode + groupBy argmin whose exchange
+    * carried n·m rows). Distances are the same left-to-right double fold
+    * as [[dot]], so the DuckDB oracle replays the argmin bit-exactly; ties
+    * break to the smallest centroid index via lexicographic struct min. */
   def pqCodes(embeddings: DataFrame, m: Int = 4, k: Int = 16, dim: Int = 0,
               trainIters: Int = 0): DataFrame = {
     val d = embeddingDim(embeddings, dim)

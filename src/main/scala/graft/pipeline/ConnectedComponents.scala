@@ -43,6 +43,9 @@ object ConnectedComponents {
     * path's per-round scheduling overhead stops dominating. */
   val DriverEdgeLimit = 1000000L
 
+  /** Star rounds the distributed path runs before it gives up. */
+  private val MaxIter = 25
+
   /** @param edges DataFrame with string columns (a, b); direction ignored.
     * @param driverEdgeLimit when the deduplicated edge count is at or below
     *        this, components are computed with a driver-side union-find —
@@ -53,11 +56,10 @@ object ConnectedComponents {
     * @return (node, component) for every node incident to an edge;
     *         component = lexicographic min node id of the component.
     * @throws IllegalStateException if the fixpoint is not reached within
-    *         maxIter — silently wrong canonical labels are worse than a
-    *         failed job at any scale.
+    *         [[MaxIter]] rounds — silently wrong canonical labels are worse
+    *         than a failed job at any scale.
     */
-  def run(edges: DataFrame, maxIter: Int = 25,
-          driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+  def run(edges: DataFrame, driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val input = edges.select(col("a").cast("string").as("u"), col("b").cast("string").as("v"))
       .filter(col("u") =!= col("v"))
 
@@ -88,7 +90,7 @@ object ConnectedComponents {
     var iter = 0
     var converged = false
     var prevFp = fingerprint(g)
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       // Large-star over the symmetric view: every neighbor v > u links to
       // m(u) = min(N(u) ∪ {u}).
       val sym = g.unionAll(g.select(col("v").as("u"), col("u").as("v")))
@@ -118,7 +120,7 @@ object ConnectedComponents {
       iter += 1
     }
     if (!converged)
-      throw new IllegalStateException(s"connected components did not converge in $maxIter iterations")
+      throw new IllegalStateException(s"connected components did not converge in $MaxIter iterations")
 
     val labels = g.groupBy("u").agg(min(col("v")).as("component"))
       .select(col("u").as("node"), col("component"))

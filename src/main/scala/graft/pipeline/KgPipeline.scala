@@ -81,8 +81,7 @@ object KgPipeline {
     } finally pool.shutdown()
   }
 
-  def run(spark: SparkSession, sfDir: String, outDir: String,
-          canonicalBroadcastMaxRows: Long = CanonicalBroadcastMaxRows): PipelineStats = {
+  def run(spark: SparkSession, sfDir: String, outDir: String): PipelineStats = {
     // Every stage derives from the documents alone: one fingerprint of
     // their files marks every manifest, so a changed input recomputes all.
     val input = Materialize.inputFingerprint(s"$sfDir/documents.parquet")
@@ -121,7 +120,7 @@ object KgPipeline {
     // shuffle join instead of failing (see [[CanonicalBroadcastMaxRows]]).
     val (allTriples, all) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all", input,
         Seq("subjects_approx" -> approx_count_distinct("subj", 0.02))) { _ =>
-      val mentionTriples = joinCanonical(mentions, canonical, canon.rows, canonicalBroadcastMaxRows)
+      val mentionTriples = joinCanonical(mentions, canonical, canon.rows, CanonicalBroadcastMaxRows)
         .select(
           concat(lit("<http://graft.dev/mention/"), col("mention"), lit(">")).as("subj"),
           lit("<http://graft.dev/voc#sameAs>").as("pred"),

@@ -239,33 +239,6 @@ object Linking {
     sig
   }
 
-  /** Typed UDAF computing the MinHash signature with map-side partial
-    * aggregation (SURVEY §2.2 P6: `Aggregator[IN, BUF, OUT]`). JVM long
-    * arithmetic wraps, so fmix64 needs no ANSI-mode escape hatches. */
-  object MinHashAgg extends org.apache.spark.sql.expressions.Aggregator[(String, Long), Array[Long], Array[Long]] {
-    def zero: Array[Long] = Array.fill(NumHashes)(Long.MaxValue)
-    def reduce(buf: Array[Long], in: (String, Long)): Array[Long] = {
-      val x = in._2
-      var i = 0
-      while (i < NumHashes) {
-        val v = fmix64(x ^ HashSeeds(i))
-        if (v < buf(i)) buf(i) = v
-        i += 1
-      }
-      buf
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < NumHashes) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    def finish(r: Array[Long]): Array[Long] = r
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
   /** MinHash signatures as a SHUFFLE-FREE narrow projection: the native
     * `minhash_sig` expression (graft.functions.MinHashSig — real codegen,
     * wrapping JVM long arithmetic, no ANSI escape hatches) computes the full
@@ -274,7 +247,7 @@ object Linking {
     * Rows whose shingle set is empty are dropped — identical to the exploded
     * path, where such rows simply contribute no (id, shingle) rows.
     * [[minhashSignaturesFrom]] (explode + 32 partial min-aggregates) and
-    * [[MinHashAgg]] (typed Aggregator) compute the identical signature;
+    * [[signatureOf]] (pure Scala) compute the identical signature;
     * LinkingSpec pins three-way equality. */
   def minhashSignatures(mentions: DataFrame): DataFrame =
     minhashSignaturesOf(
@@ -368,11 +341,6 @@ object Linking {
 
   // ------------------------------------------------------- dictionary stage
 
-  /** P7: broadcast-dictionary link scoring. The dictionary (customer +
-    * supplier names) is small by construction → explicit `broadcast()`
-    * keeps this a map-side join at any corpus scale. Match key: entity type
-    * + numeric id with leading zeros stripped, so short and padded surface
-    * forms resolve to the same canonical entity. */
   /** Numeric-id parse via try_cast: a surface form whose id part does not
     * fit a BIGINT gets a NULL id and simply never joins, instead of killing
     * the job under ANSI mode (Spark 4 default) — the seeded celebrity
@@ -382,6 +350,11 @@ object Linking {
   private def eidOf(name: Column): Column =
     split(name, "#").getItem(1).try_cast("long")
 
+  /** P7: broadcast-dictionary link scoring. The dictionary (customer +
+    * supplier names) is small by construction → explicit `broadcast()`
+    * keeps this a map-side join at any corpus scale. Match key: entity type
+    * + numeric id with leading zeros stripped, so short and padded surface
+    * forms resolve to the same canonical entity. */
   def linkToDictionary(mentions: DataFrame, customers: DataFrame, suppliers: DataFrame): DataFrame = {
     val dict = customers.select(col("c_name").as("entity_name"))
       .unionAll(suppliers.select(col("s_name").as("entity_name")))

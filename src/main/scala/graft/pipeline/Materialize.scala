@@ -74,6 +74,11 @@ object Materialize {
   /** Predicate buckets of the triple table. */
   val PredBuckets = 16
 
+  /** Subject-hash buckets. The triple table and the adjacency table both
+    * partition their rows by this hash, held in their `subj_hash` column. */
+  private val SubjBuckets = 64
+  private def subjHash: Column = pmod(xxhash64(col("subj")), lit(SubjBuckets)).cast("int")
+
   private val Json = new ObjectMapper()
 
   private def manifestPath(dir: String) = Paths.get(dir, "_meta", "manifest.json")
@@ -205,14 +210,12 @@ object Materialize {
     * `subj`. A pass, not windows and an object aggregate: those generate
     * about 20 more codegen classes, and the whole KG build must fit in
     * Spark's 100-entry codegen cache (see PipelineSpec). */
-  def adjacency(rows: DataFrame, dir: String, input: String, maxFanout: Int = 1024,
-                subjBuckets: Int = 64): StageResult = {
+  def adjacency(rows: DataFrame, dir: String, input: String, maxFanout: Int = 1024): StageResult = {
     val done = committed(dir, Nil, input)
     if (done.isDefined) return done.get._1
     // rows without a subject have no adjacency row
     val adj = rows.filter(col("error").isNull && col("subj").isNotNull)
-      .select(col("subj"), col("pred"), col("obj"),
-        pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int").as("subj_hash"))
+      .select(col("subj"), col("pred"), col("obj"), subjHash.as("subj_hash"))
       .repartition(col("subj_hash"))
       .sortWithinPartitions("subj", "pred", "obj")
       .mapPartitions((it: Iterator[Row]) => adjacencyRows(it.buffered, maxFanout))(Encoders.row(AdjacencySchema))
@@ -326,7 +329,7 @@ object Materialize {
   /** Materialize the triple table: pred_bucket partitions on disk, rows
     * co-located and sorted by subject within files. Counters: the row count
     * of each predicate bucket, `pred_bucket_0` … `pred_bucket_15`. */
-  def triples(rows: DataFrame, dir: String, input: String, subjBuckets: Int = 64): StageResult = {
+  def triples(rows: DataFrame, dir: String, input: String): StageResult = {
     val bucketCounts = (0 until PredBuckets).map(b =>
       s"pred_bucket_$b" -> count(when(col("pred_bucket") === b, 1)))
     val done = committed(dir, bucketCounts.map(_._1), input)
@@ -334,7 +337,7 @@ object Materialize {
     val keyed = rows
       .filter(col("error").isNull)
       .withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(PredBuckets)).cast("int"))
-      .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
+      .withColumn("subj_hash", subjHash)
     val stage = beginWrite("triples", dir, input,
       keyed.repartition(col("subj_hash")).sortWithinPartitions("subj", "pred"), bucketCounts)
     stage.rows.write.mode("overwrite")

@@ -555,6 +555,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
           case "annotation" =>
             activeTag.reifier = Iri(attribute.value)
           case "annotationNodeID" =>
+            validateNcname(attribute.value)
             activeTag.reifier = bnode(attribute.value)
           case _ => handled = false
         }

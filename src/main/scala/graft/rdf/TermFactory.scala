@@ -34,13 +34,22 @@ trait TermFactory[N] {
 
 object TermFactory {
 
-  /** Convert one kernel term through a factory, recursing through nested
-    * triple terms. */
-  def convert[N](t: Term, f: TermFactory[N]): N = t match {
-    case Iri(i)        => f.namedNode(i)
-    case BNode(l)      => f.blankNode(l)
-    case l: Lit        => f.literal(l.lexical, Option(l.datatype), Option(l.language), Option(l.direction))
-    case TripleTerm(q) => f.tripleTerm(convert(q.subj, f), convert(q.pred, f), convert(q.obj, f))
+  /** Convert one kernel term through a factory. Triple terms nest only in
+    * the object position, so one walk down the object chain converts each
+    * level's subject and predicate, then the innermost object, and folds
+    * back up through `tripleTerm`: a deep nest does not recurse per level,
+    * and the factory sees its calls in the order a recursive walk makes. */
+  def convert[N](t: Term, f: TermFactory[N]): N = {
+    def up(obj: N, levels: List[(N, N)]): N =
+      levels.foldLeft(obj) { case (o, (s, p)) => f.tripleTerm(s, p, o) }
+    @annotation.tailrec
+    def down(o: Term, levels: List[(N, N)]): N = o match { // levels: innermost first
+      case TripleTerm(q) => down(q.obj, (convert(q.subj, f), convert(q.pred, f)) :: levels)
+      case Iri(i)        => up(f.namedNode(i), levels)
+      case BNode(l)      => up(f.blankNode(l), levels)
+      case l: Lit        => up(f.literal(l.lexical, Option(l.datatype), Option(l.language), Option(l.direction)), levels)
+    }
+    down(t, Nil)
   }
 
   /** Identity factory: rebuilds the kernel ADT itself (so

@@ -20,14 +20,10 @@ import graft.rdf.TripleColumns.{BNodeType, ErrorType, IriType, LiteralType, Trip
   * Malformed lines go to the `error` column instead of killing the task
   * (same error-channel contract as the rdfxml source, reference R28).
   *
-  * Streaming ([[stream]]/[[streamQuads]]) deliberately reuses Spark's
-  * built-in text FileStreamSource rather than the rdfxml source's custom
-  * whole-file MicroBatchStream: RDF/XML documents are unsplittable (one
-  * parser state machine per file), so that source had to own its file-log —
-  * but N-Triples lines are independent, and the built-in source gives the
-  * same durable file-log / exactly-once / maxFilesPerTrigger semantics while
-  * KEEPING within-file split parallelism, which a whole-file stream would
-  * forfeit on a dump of a few huge files.
+  * Streaming ([[stream]]) reuses Spark's built-in text FileStreamSource:
+  * N-Triples lines are independent, so the built-in source gives a durable
+  * file log, exactly-once replay and `maxFilesPerTrigger` while keeping
+  * within-file split parallelism.
   */
 object NTriples {
 
@@ -65,18 +61,10 @@ object NTriples {
     * replay, `Trigger.AvailableNow` supported) feeding the same per-line
     * scanner as [[read]]. `maxFilesPerTrigger` > 0 bounds files admitted per
     * micro-batch (backlog drains in bounded batches). */
-  def stream(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0): DataFrame =
-    streamLines(spark, path, maxFilesPerTrigger, maxTerms = 3).drop("graph")
-
-  /** Streaming [[readQuads]] — see [[stream]]. */
-  def streamQuads(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0): DataFrame =
-    streamLines(spark, path, maxFilesPerTrigger, maxTerms = 4)
-
-  private def streamLines(spark: SparkSession, path: String,
-                          maxFilesPerTrigger: Int, maxTerms: Int): DataFrame = {
+  def stream(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0): DataFrame = {
     val reader = spark.readStream
     if (maxFilesPerTrigger > 0) reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    lines(reader.text(path), maxTerms)
+    lines(reader.text(path), maxTerms = 3).drop("graph")
   }
 
   /** Tokenize one line into its term texts. None = nothing to emit (blank or

@@ -43,6 +43,11 @@ import graft.rdf.{BlankNodeLabels, ParserOptions, TripleColumns}
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
   * the file URI), `validateUri`, `allowDuplicateRdfIds`.
+  *
+  * Batch reads only: the reference streams within a document, and so does
+  * this reader, but `spark.readStream.format("rdfxml")` is rejected by
+  * Spark as a source that does not support streamed reading. A directory
+  * of N-Triples dumps streams through [[NTriples.stream]].
   */
 class RdfXmlDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "rdfxml"
@@ -64,7 +69,7 @@ final class RdfXmlTable(options: CaseInsensitiveStringMap) extends Table with Su
   override def name(): String = s"rdfxml(${options.get("path")})"
   override def schema(): StructType = RdfXmlTable.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
     val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
     merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
@@ -113,9 +118,7 @@ object RdfXmlScan {
     }
 
   /** Recursive listing of data files under `dir` (hidden files skipped),
-    * filtered by any pushed `path` predicates, in deterministic path order.
-    * Shared by the batch scan and the micro-batch stream so both surfaces
-    * see the identical file universe. */
+    * filtered by any pushed `path` predicates, in deterministic path order. */
   private[sources] def listDataFiles(dir: String, conf: org.apache.hadoop.conf.Configuration,
                                      pathFilters: Array[Filter]): Seq[FileStatus] = {
     val fs = new Path(dir).getFileSystem(conf)
@@ -123,9 +126,7 @@ object RdfXmlScan {
     // Hidden names are filtered at EVERY path level (like Spark's own file
     // index/stream source), not just the leaf: a producer's in-flight
     // _temporary/.staging dirs contain part files whose leaf names look
-    // normal — listing those would ingest uncommitted data, and in the
-    // streaming path durably log paths the committer is about to rename
-    // away, wedging the exactly-once replay on a file that no longer exists.
+    // normal — listing those would ingest uncommitted data.
     def list(p: Path): Seq[FileStatus] = {
       val st = fs.getFileStatus(p)
       if (st.isDirectory)
@@ -244,206 +245,9 @@ final class RdfXmlScan(options: CaseInsensitiveStringMap, required: StructType,
     val allowDup = options.getBoolean("allowDuplicateRdfIds", false)
     RdfXmlReaderFactory(required.fieldNames, baseIRI, validateUri, allowDup, hadoopConf)
   }
-
-  /** `spark.readStream.format("rdfxml")` — completes the reference's primary
-    * streaming surface (reference `lib/RdfXmlParser.ts:122-141`: the parser
-    * IS a text stream transform) at the corpus level: files arriving in a
-    * directory are discovered per micro-batch, parsed by the same
-    * unsplittable-file partitions and reader as the batch scan, exactly once
-    * across restarts (file-log under the checkpoint). */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new RdfXmlMicroBatchStream(inputDir, targetBytes, pathFilters, hadoopConf,
-      checkpointLocation, () => createReaderFactory(),
-      // Admission control (FileStreamSource's maxFilesPerTrigger): bound the
-      // files logged per micro-batch so a backlogged directory drains in
-      // right-sized batches instead of one giant first batch. 0 = unbounded.
-      maxFilesPerTrigger = options.getInt("maxFilesPerTrigger", 0))
 }
 
 case class RdfXmlInputPartition(files: Array[String]) extends InputPartition
-
-/** Offset = id of the last file-log batch included (-1 = nothing yet). The
-  * batch → file-list mapping lives in the stream's own durable log, so the
-  * offset itself stays O(1) no matter how many files have streamed. */
-case class RdfXmlOffset(batchId: Long) extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = batchId.toString
-}
-
-/** File-listing micro-batch stream over a directory of RDF/XML documents.
-  *
-  * Exactly-once contract: each `latestOffset` call diffs the current listing
-  * against the union of all files already recorded in the durable file-log
-  * (`<checkpoint>/rdfxml-file-log/<batchId>`, one path per line, written
-  * atomically via temp + rename) and logs only the NEW files as the next
-  * batch. `planInputPartitions(start, end)` replays log entries — never the
-  * live listing — so a restarted query re-plans an uncommitted batch to the
-  * identical file set, and files committed before the crash are never
-  * re-parsed. Readers, partitioning (size bin-packing of unsplittable
-  * documents), and schema are shared with the batch scan.
-  *
-  * At cluster scale the log grows one small file per trigger with work
-  * proportional to new files. Entries are CACHED in the stream instance
-  * after first read: the steady-state per-trigger cost is one `listStatus`
-  * of the log dir plus opens for only the entries not yet cached (normally
-  * the one just written) — NOT one open per historical batch per trigger,
-  * which on an object store would mean O(stream-age) GETs per trigger. A
-  * restart pays one full log replay (same as Spark's FileStreamSource), and
-  * the per-trigger input-dir listing diff is the same O(files-in-dir) cost
-  * FileStreamSource pays.
-  */
-final class RdfXmlMicroBatchStream(
-    inputDir: String, targetBytes: Long, pathFilters: Array[Filter],
-    hadoopConf: SerializableConfiguration, checkpointLocation: String,
-    readerFactory: () => PartitionReaderFactory, maxFilesPerTrigger: Int = 0)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  /** Trigger.AvailableNow contract: snapshot the file universe at prepare
-    * time; latestOffset then drains exactly that snapshot (in
-    * maxFilesPerTrigger-bounded batches) and stops advancing — files
-    * arriving after prepare wait for the next query run. Without this,
-    * Spark's wrapper calls latestOffset once and a rate-limited backlog
-    * would only drain one batch per run. */
-  private var availableNowTarget: Seq[String] = null
-
-  override def prepareForTriggerAvailableNow(): Unit = synchronized {
-    refreshLogCache() // populate the seen-set cache from the durable log
-    availableNowTarget = listInputDiff()
-  }
-
-  /** Current input-dir listing minus everything already logged. */
-  private def listInputDiff(): Seq[String] = {
-    // An input dir that does not exist yet is "no files yet", not an error:
-    // streams routinely start before their producer creates the directory.
-    val listed =
-      try RdfXmlScan.listDataFiles(inputDir, hadoopConf.value, pathFilters)
-      catch { case _: java.io.FileNotFoundException => Seq.empty[FileStatus] }
-    listed.map(f => f.getPath.toString).filterNot(cachedSeen)
-  }
-
-  private val logDir = new Path(checkpointLocation, "rdfxml-file-log")
-  private def fs = logDir.getFileSystem(hadoopConf.value)
-
-  /** Committed log entries by batch id, accumulated across triggers (the
-    * driver-side stream instance lives for the whole query run). Only ids
-    * missing from the cache are opened; the log itself stays the durable
-    * source of truth. The seen-set holds one path String per file ever
-    * streamed — the floor for listing-diff correctness (FileStreamSource's
-    * SeenFilesMap grows the same way; its maxFileAge eviction is a
-    * semantics trade this source does not make). Neither structure is
-    * copied per trigger: callers read the TreeMap in place. */
-  private val cachedEntries = scala.collection.mutable.TreeMap.empty[Long, Seq[String]]
-  /** Union of all cached entry files (the `seen` set for listing diffs). */
-  private val cachedSeen = scala.collection.mutable.HashSet.empty[String]
-
-  /** Ingest log entries not yet cached (steady state: the one just written
-    * by the previous trigger, or none). */
-  private def refreshLogCache(): Unit = synchronized {
-    if (fs.exists(logDir)) {
-      fs.listStatus(logDir).toSeq
-        .flatMap(s => s.getPath.getName.toLongOption.map(_ -> s.getPath))
-        .filterNot { case (id, _) => cachedEntries.contains(id) }
-        .foreach { case (id, p) =>
-          val in = fs.open(p)
-          val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-          val files = text.split("\n").toSeq.filter(_.nonEmpty)
-          cachedEntries.put(id, files)
-          cachedSeen ++= files
-        }
-    }
-  }
-
-  private def writeEntry(batchId: Long, files: Seq[String]): Unit = {
-    fs.mkdirs(logDir)
-    val tmp = new Path(logDir, s".$batchId.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(logDir, batchId.toString)))
-      throw new java.io.IOException(s"could not commit rdfxml file-log entry $batchId")
-  }
-
-  override def initialOffset(): Offset = RdfXmlOffset(-1L)
-  override def deserializeOffset(json: String): Offset = RdfXmlOffset(json.trim.toLong)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit = {
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    if (maxFilesPerTrigger > 0) ReadLimit.maxFiles(maxFilesPerTrigger) else ReadLimit.allAvailable()
-  }
-
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = synchronized {
-    refreshLogCache()
-    val maxId = cachedEntries.lastOption.map(_._1).getOrElse(-1L)
-    val freshAll =
-      if (availableNowTarget != null) availableNowTarget.filterNot(cachedSeen)
-      else listInputDiff()
-    // Admission control: excess files stay unlogged and are picked up by
-    // subsequent triggers (deterministic path order, so drain order is
-    // stable). Under Trigger.AvailableNow the engine keeps triggering until
-    // the offset stops advancing, so a backlog drains fully in bounded
-    // batches rather than one giant first batch.
-    val fresh = limit match {
-      case mf: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        freshAll.take(mf.maxFiles())
-      case _ => freshAll
-    }
-    if (fresh.isEmpty) RdfXmlOffset(maxId)
-    else {
-      writeEntry(maxId + 1, fresh)
-      cachedEntries.put(maxId + 1, fresh)
-      cachedSeen ++= fresh
-      RdfXmlOffset(maxId + 1)
-    }
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[RdfXmlOffset].batchId
-    val e = end.asInstanceOf[RdfXmlOffset].batchId
-    val files = synchronized {
-      refreshLogCache()
-      // TreeMap.range is [from, until): ids in (s, e]
-      cachedEntries.range(s + 1, e + 1).values.flatten.toSeq
-    }
-    // Sizes re-fetched for bin-packing; a file deleted since logging fails
-    // the read (correct: the log is the source of truth, and silently
-    // skipping logged data would break exactly-once) — but it fails HERE at
-    // plan time, naming the log entry and the missing path, so an operator
-    // can tell producer-deleted input from a corrupt checkpoint instead of
-    // chasing an opaque task-level FileNotFoundException.
-    val sized = files.map { p =>
-      val path = new Path(p)
-      val dataFs = path.getFileSystem(hadoopConf.value) // data may live on a different FS than the checkpoint
-      val len =
-        try dataFs.getFileStatus(path).getLen
-        catch {
-          case _: java.io.FileNotFoundException =>
-            val entry = synchronized {
-              cachedEntries.range(s + 1, e + 1).collectFirst { case (id, fls) if fls.contains(p) => id }
-            }
-            throw new java.io.FileNotFoundException(
-              s"rdfxml stream: file '$p' is recorded in the durable file-log " +
-                s"($logDir${entry.map(id => s", entry $id").getOrElse("")}) for batches (${s + 1}..$e] " +
-                "but no longer exists on the data filesystem. The input was deleted after being " +
-                "logged (or the checkpoint references a different data location); exactly-once replay " +
-                "cannot skip logged data. Restore the file, or delete the checkpoint to re-stream from scratch.")
-        }
-      (p, len)
-    }
-    RdfXmlScan.binPack(sized, targetBytes)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory()
-  override def commit(end: Offset): Unit = () // the file-log is already durable
-  override def stop(): Unit = ()
-}
 
 case class RdfXmlReaderFactory(
     fieldNames: Array[String], baseIRI: String, validateUri: Boolean, allowDup: Boolean,

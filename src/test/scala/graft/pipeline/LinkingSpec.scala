@@ -61,7 +61,7 @@ class LinkingSpec extends SparkSuite {
     }
   }
 
-  test("Catalyst minhashSignatures == pure-Scala signatureOf == typed MinHashAgg") {
+  test("Catalyst minhashSignatures == signatureOf == minhashSignaturesFrom") {
     import spark.implicits._
     val univ = Seq("Supplier#000000003", "Supplier#3", "Customer#000000017", "abc").toDF("mention")
     val catalyst = Linking.minhashSignatures(univ)
@@ -71,14 +71,6 @@ class LinkingSpec extends SparkSuite {
       m.toLowerCase.sliding(Linking.ShingleLen).filter(_.length == Linking.ShingleLen).toSeq.distinct
     val pure = catalyst.keys.map(m => m -> Linking.signatureOf(shingles(m).map(Linking.fnv1a)).toSeq).toMap
     assert(catalyst == pure)
-
-    val viaAgg = Linking.mentionShingles(univ)
-      .as[(String, String)]
-      .map { case (m, s) => (m, Linking.fnv1a(s)) }
-      .groupByKey(_._1)
-      .agg(Linking.MinHashAgg.toColumn.name("sig"))
-      .collect().map { case (m, sig) => m -> sig.toSeq }.toMap
-    assert(catalyst == viaAgg)
 
     val viaExploded = Linking.minhashSignaturesFrom(Linking.mentionShingles(univ), "mention")
       .as[(String, Seq[Long])].collect().toMap

@@ -57,9 +57,11 @@ class PlanSpec extends SparkSuite {
     // ngramJaccardPairs it now sits behind the eager localCheckpoint cut
     // (the thrice-consumed frame is materialized once), so the composed
     // query's plan string no longer shows the pre-cut subplan.
+    import org.apache.spark.sql.functions.{col, explode}
     val docs = Transcripts.documents(spark, sfDir).select("doc_id", "text")
     val capped = Linking.capShingleDf(
-      graft.ops.Dedup.wordShingleRows(docs, "doc_id", "text"), Linking.DefaultMaxShingleDf)
+      graft.ops.Dedup.wordShingleArrays(docs, "doc_id", "text")
+        .select(col("doc_id"), explode(col("shingles")).as("shingle")), Linking.DefaultMaxShingleDf)
     assert(plan(capped).contains("LeftAnti"))
     assert(!plan(capped).contains("CartesianProduct"))
     // the substring ops' pre-cut frames are narrow projections — any Join

@@ -66,7 +66,8 @@ class RestructureEquivalenceSpec extends SparkSuite {
   test("hashed ngramJaccardPairs equals the defining string-shingle formulation") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sh = Linking.capShingleDf(
-      graft.ops.Dedup.wordShingleRows(docs, "doc_id", "text"), Linking.DefaultMaxShingleDf)
+      graft.ops.Dedup.wordShingleArrays(docs, "doc_id", "text")
+        .select(col("doc_id"), explode(col("shingles")).as("shingle")), Linking.DefaultMaxShingleDf)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = sh.as("x").join(sh.as("y"), col("x.shingle") === col("y.shingle"))
       .filter(col("x.doc_id") < col("y.doc_id"))

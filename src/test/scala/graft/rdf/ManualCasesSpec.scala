@@ -96,6 +96,14 @@ class ManualCasesSpec extends AnyFunSuite {
     assert(RdfXmlParser.parse(doc, ParserOptions(version = Some("1.2"))).isRight)
   }
 
+  test("rdf:annotationNodeID must be an NCName, as rdf:nodeID must") {
+    // "1" would otherwise name the same blank node as the parser's fresh node 1
+    val doc = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
+      <rdf:Description rdf:about="http://example.org/s">
+      <ex:p rdf:annotationNodeID="1">o</ex:p></rdf:Description></rdf:RDF>"""
+    assert(RdfXmlParser.parse(doc) == Left(ParseError("Not a valid NCName: 1")))
+  }
+
   test("incremental emission contract (chunk-by-chunk)") {
     val emitted = mutable.ArrayBuffer.empty[Triple]
     val p = RdfXmlParser.streaming(ParserOptions())(emitted += _)

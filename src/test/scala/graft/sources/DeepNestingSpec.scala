@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.pipeline.{ParseStage, SparkSuite}
-import graft.rdf.{RdfXmlParser, TripleColumns}
+import graft.rdf.{RdfXmlParser, TermFactory, TripleColumns}
 
 /** An outside document nesting RDF 1.2 triple terms thousands deep
   * (`rdf:parseType="Triple"` inside `rdf:parseType="Triple"`) gives its one
@@ -54,6 +54,26 @@ class DeepNestingSpec extends SparkSuite {
       assert(fromTurns.length == 1 && fromTurns.head.obj_type == TripleColumns.TripleType)
       assertNest(fromTurns.head.obj, depth)
       nextQueryRuns()
+    }
+  }
+
+  /** Reads a term as its triple-term depth. Each call is O(1), so the case
+    * below measures the walk, not the factory. */
+  private object Depth extends TermFactory[Int] {
+    def namedNode(iri: String): Int = 0
+    def blankNode(label: String): Int = 0
+    def literal(lexical: String, datatype: Option[String], language: Option[String],
+        direction: Option[String]): Int = 0
+    def tripleTerm(subj: Int, pred: Int, obj: Int): Int = obj + 1
+  }
+
+  Seq(5000, 20000).foreach { depth =>
+    test(s"parseWith converts triple terms nested $depth deep through a factory") {
+      val ts = RdfXmlParser.parseWith(nested(depth), Depth).fold(e => fail(e.toString), identity)
+      assert(ts.length == 1)
+      val (s, p, o) = ts.head
+      assert(s == 0 && p == 0)
+      assert(o == depth)
     }
   }
 }

@@ -124,26 +124,6 @@ class NTriplesSpec extends SparkSuite {
     assert(streamed.filter(col("path").endsWith("a.nt")).count() == 2)
   }
 
-  test("streaming quads: graph column + path lineage flow through streamQuads") {
-    val tmp = Files.createTempDirectory("graft_nq_stream").toString
-    val input = s"$tmp/input"
-    new java.io.File(input).mkdirs()
-    Files.write(java.nio.file.Paths.get(input, "g.nq"),
-      ("<http://e/s> <http://e/p> \"v\"@en <http://e/g> .\n" +
-        "<http://e/s> <http://e/p> _:b .\n").getBytes("UTF-8"))
-    val q = NTriples.streamQuads(spark, input)
-      .writeStream.format("memory").queryName("graft_nq_stream")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val rows = spark.sql("select * from graft_nq_stream")
-    assert(rows.count() == 2)
-    assert(rows.filter(col("graph") === "<http://e/g>" && col("lang") === "en").count() == 1)
-    assert(rows.filter(col("graph").isNull && col("obj_type") === "bnode").count() == 1)
-    assert(rows.filter(col("path").endsWith("g.nq")).count() == 2)
-  }
-
   test("nquads sink -> source round trip preserves the graph column") {
     import spark.implicits._
     val rows = Seq(

@@ -1,10 +1,24 @@
 package graft.streaming
 
 import java.nio.file.Files
-import graft.pipeline.{SparkSuite, Transcripts}
+import graft.pipeline.{ParseStage, SparkSuite, Transcripts}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 class StreamingSpec extends SparkSuite {
+
+  /** Parses a directory of transcript parquet files as a stream into an
+    * append-mode parquet sink under `out/data`, draining what is there. */
+  private def parseStream(input: String, out: String, ckpt: String): StreamingQuery =
+    ParseStage.parseTurns(spark.readStream
+      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
+      .parquet(input)).toDF()
+      .writeStream
+      .format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   test("streaming parse: file-source micro-batches produce the batch result") {
     val tmp = Files.createTempDirectory("graft_stream").toString
@@ -17,7 +31,7 @@ class StreamingSpec extends SparkSuite {
       .filter(col("turn_idx") % 2 === 0)
       .write.parquet(input)
 
-    val q = StreamingParse.run(spark, input, out, ckpt)
+    val q = parseStream(input, out, ckpt)
     q.awaitTermination(120000)
 
     val streamed = spark.read.parquet(s"$out/data")
@@ -27,7 +41,7 @@ class StreamingSpec extends SparkSuite {
       .filter(col("doc_id") % Transcripts.MalformedMod === Transcripts.MalformedRem).count()
     assert(expectedErrors > 0)
     assert(streamed.filter(col("error").isNotNull).count() == expectedErrors)
-    val batch = graft.pipeline.ParseStage.parsedTranscripts(spark, sfDir)
+    val batch = ParseStage.parsedTranscripts(spark, sfDir)
     assert(streamed.filter(col("error").isNull).count() == batch.filter(col("error").isNull).count())
     // exactness: same multiset of (subj, pred, obj)
     val a = streamed.select("subj", "pred", "obj")
@@ -35,136 +49,17 @@ class StreamingSpec extends SparkSuite {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
-  test("rdfxml DSv2 streaming read: two micro-batches equal the batch read; resume is exactly-once") {
-    val tmp = Files.createTempDirectory("graft_stream_dsv2").toString
-    val input = s"$tmp/input"
-    val ckpt = s"$tmp/ckpt"
-    new java.io.File(input).mkdirs()
-    def writeDoc(name: String, about: String): Unit = {
-      val xml = s"""<?xml version="1.0"?>
-        |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-        |  <rdf:Description rdf:about="http://example.org/$about">
-        |    <ex:name>$about</ex:name>
-        |    <ex:knows rdf:nodeID="x"/>
-        |  </rdf:Description>
-        |</rdf:RDF>""".stripMargin
-      Files.write(java.nio.file.Paths.get(input, name), xml.getBytes("UTF-8"))
-    }
-    val out = s"$tmp/out"
-    def runOnce(): Unit = {
-      // parquet sink: the one sink kind that supports checkpoint RESUME
-      // (memory sinks refuse recovery), which is exactly what this pins
-      val q = spark.readStream.format("rdfxml").load(input)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+  test("rdfxml is a batch source: readStream.format(\"rdfxml\") is refused") {
+    val tmp = Files.createTempDirectory("graft_stream_rdfxml").toString
+    val e = intercept[Exception] {
+      spark.readStream.format("rdfxml").load(tmp)
+        .writeStream.format("noop")
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(120000)
+        .awaitTermination(60000)
     }
-
-    writeDoc("d1.rdf", "alice")
-    runOnce()
-    assert(spark.read.parquet(out).count() == 2, "first micro-batch parses the first document")
-
-    // second file arrives; restart from the same checkpoint
-    writeDoc("d2.rdf", "bob")
-    runOnce()
-    val streamed = spark.read.parquet(out)
-    // resume replays only the NEW file — d1 was committed in the first run
-    assert(streamed.filter(col("path").endsWith("d1.rdf")).count() == 2,
-      "resume must not re-emit committed files")
-    assert(streamed.count() == 4)
-
-    // the streamed total equals the batch read (same source, same schema)
-    val batch = spark.read.format("rdfxml").load(input)
-    assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
-  }
-
-  test("rdfxml DSv2 streaming read: maxFilesPerTrigger drains a backlog in bounded batches") {
-    val tmp = Files.createTempDirectory("graft_stream_rate").toString
-    val input = s"$tmp/input"
-    new java.io.File(input).mkdirs()
-    for (i <- 1 to 5) {
-      val xml = s"""<?xml version="1.0"?>
-        |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-        |  <rdf:Description rdf:about="http://example.org/d$i"><ex:n>$i</ex:n></rdf:Description>
-        |</rdf:RDF>""".stripMargin
-      Files.write(java.nio.file.Paths.get(input, f"d$i%02d.rdf"), xml.getBytes("UTF-8"))
-    }
-    val q = spark.readStream.format("rdfxml").option("maxFilesPerTrigger", 2).load(input)
-      .writeStream.format("memory").queryName("graft_rate")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // the whole backlog drains (AvailableNow keeps triggering until the
-    // offset stops advancing), but in ≥ 3 bounded log batches, not one
-    assert(spark.sql("select * from graft_rate").count() == 5)
-    // the source checkpoint is nested (ckpt/sources/<i>); find the file-log
-    val logDir = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$tmp/ckpt"))
-      .filter(p => p.getFileName.toString == "rdfxml-file-log").findFirst().get().toFile
-    val logEntries = logDir.listFiles().filter(f => f.getName.forall(_.isDigit))
-    assert(logEntries.length >= 3, logEntries.map(_.getName).mkString(","))
-  }
-
-  test("rdfxml DSv2 streaming read: gzip documents decompress through the shared reader") {
-    val tmp = Files.createTempDirectory("graft_stream_gz").toString
-    val input = s"$tmp/input"
-    new java.io.File(input).mkdirs()
-    val xml = """<?xml version="1.0"?>
-      |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-      |  <rdf:Description rdf:about="http://example.org/z"><ex:name>z</ex:name></rdf:Description>
-      |</rdf:RDF>""".stripMargin
-    val out = new java.util.zip.GZIPOutputStream(
-      java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(input, "z.rdf.gz")))
-    out.write(xml.getBytes("UTF-8")); out.close()
-    val q = spark.readStream.format("rdfxml").load(input)
-      .writeStream.format("memory").queryName("graft_gz")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val rows = spark.sql("select subj, pred, obj from graft_gz").collect()
-    assert(rows.length == 1 && rows.head.getString(2) == "\"z\"")
-  }
-
-  test("rdfxml DSv2 streaming read: an input dir that does not exist yet is 'no files', not an error") {
-    val tmp = Files.createTempDirectory("graft_stream_nodir").toString
-    val input = s"$tmp/not_created_yet"
-    val q = spark.readStream.format("rdfxml").load(input)
-      .writeStream.format("memory").queryName("graft_nodir")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    assert(spark.sql("select * from graft_nodir").count() == 0)
-  }
-
-  test("rdfxml DSv2 streaming: a logged file deleted before replay fails at PLAN time naming log entry + path") {
-    val tmp = Files.createTempDirectory("graft_stream_gone").toString
-    val input = s"$tmp/input"
-    new java.io.File(input).mkdirs()
-    val doc = """<?xml version="1.0"?>
-      |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-      |  <rdf:Description rdf:about="http://example.org/a"><ex:n>1</ex:n></rdf:Description>
-      |</rdf:RDF>""".stripMargin
-    Files.write(java.nio.file.Paths.get(input, "d1.rdf"), doc.getBytes("UTF-8"))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.GraftSqlBridge.hadoopConfWithOptions(spark, Map.empty))
-    val stream = new graft.sources.RdfXmlMicroBatchStream(
-      input, 32L * 1024 * 1024, Array.empty, conf, s"$tmp/ckpt", () => null)
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val start = stream.initialOffset()
-    val end = stream.latestOffset(start, ReadLimit.allAvailable())
-    assert(new java.io.File(input, "d1.rdf").delete())
-    // Replay of the logged-but-vanished file must fail AT PLAN TIME with a
-    // message naming the file-log and the missing path — not as an opaque
-    // task-level FileNotFoundException (r3 ADVICE).
-    val e = intercept[java.io.FileNotFoundException](stream.planInputPartitions(start, end))
-    assert(e.getMessage.contains("d1.rdf"), e.getMessage)
-    assert(e.getMessage.contains("rdfxml-file-log"), e.getMessage)
-    assert(e.getMessage.contains("entry 0"), e.getMessage)
+    assert(e.getMessage.contains("does not support streamed reading"), e.getMessage)
   }
 
   test("streaming resume: restart from checkpoint does not duplicate output") {
@@ -176,10 +71,10 @@ class StreamingSpec extends SparkSuite {
       .filter(col("turn_idx") % 2 === 0).limit(50)
       .write.parquet(input)
 
-    StreamingParse.run(spark, input, out, ckpt).awaitTermination(120000)
+    parseStream(input, out, ckpt).awaitTermination(120000)
     val n1 = spark.read.parquet(s"$out/data").count()
     // Restart with the same checkpoint: AvailableNow sees no new files.
-    StreamingParse.run(spark, input, out, ckpt).awaitTermination(120000)
+    parseStream(input, out, ckpt).awaitTermination(120000)
     val n2 = spark.read.parquet(s"$out/data").count()
     assert(n1 == n2, "restart must be exactly-once, not re-emit")
   }
