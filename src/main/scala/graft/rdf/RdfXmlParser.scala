@@ -89,6 +89,30 @@ private[rdf] final class ActiveTag {
   var namespaces: mutable.ArrayBuffer[(String, String)] = _
 }
 
+/** Validated IRIs keyed by the two strings they were made from, at most
+  * [[RdfXmlParser.MaxCachedIris]] of them: past that, lookups of new pairs
+  * miss and the caller builds the IRI again. The caller stores no IRI longer
+  * than [[RdfXmlParser.MaxCachedIriChars]], so the table's size is bounded
+  * whatever the document. */
+private[rdf] final class IriTable {
+  private val byFirst = new java.util.HashMap[String, java.util.HashMap[String, Iri]]()
+  private var size = 0
+
+  /** The IRI stored for (`a`, `b`), or null. */
+  def get(a: String, b: String): Iri = {
+    val inner = byFirst.get(a)
+    if (inner == null) null else inner.get(b)
+  }
+
+  def put(a: String, b: String, iri: Iri): Unit =
+    if (size < RdfXmlParser.MaxCachedIris) {
+      var inner = byFirst.get(a)
+      if (inner == null) { inner = new java.util.HashMap[String, Iri](); byFirst.put(a, inner) }
+      inner.put(b, iri)
+      size += 1
+    }
+}
+
 /** Streaming RDF/XML → triples automaton. A from-scratch Scala
   * re-expression of the reference's event-driven state machine
   * (`lib/RdfXmlParser.ts`), preserving its observable semantics:
@@ -102,7 +126,22 @@ private[rdf] final class ActiveTag {
 final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   import RdfVocab._
 
-  val tokenizer = new XmlTokenizer(handleEvent)
+  val tokenizer = new XmlTokenizer(new XmlHandler {
+    def openTag(tag: OpenTag): Unit = onTag(tag)
+    def text(text: String): Unit = onText(text)
+    def closeTag(): Unit = onCloseTag()
+  })
+
+  private val iriValidation = opts.effectiveIriValidation
+  /** One validated [[Iri]] per distinct (namespace, local name) of an
+    * element or property attribute, and per distinct (base, value) of an
+    * `rdf:datatype`: a repeated one is then neither concatenated, validated
+    * nor allocated again, and its `ntriples` text is built once. Used only
+    * under the built-in validation strategies, so a `Custom` hook still sees
+    * every IRI. */
+  private val cachesIris = !iriValidation.isInstanceOf[IriValidation.Custom]
+  private val nameIris = new IriTable
+  private val datatypeIris = new IriTable
 
   private var mediaTypeVersionToCheck: Option[String] = opts.version
   private var bnodeCounter = 0
@@ -140,8 +179,9 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   private def isValidVersion(version: String): Boolean =
     opts.parseUnsupportedVersions || RdfXmlParser.SupportedVersions.contains(version)
 
-  /** A per-element list of property attributes or buffered sub-properties:
-    * nearly always empty or short, so it starts at two slots, not 16. */
+  /** A per-element list of property attributes or buffered sub-properties,
+    * made when its first entry is added (most elements have none): nearly always
+    * short, so it starts at two slots, not 16. */
   private def attrBuffer[A]: mutable.ArrayBuffer[A] = new mutable.ArrayBuffer[A](2)
 
   private def freshBNode(): BNode = {
@@ -158,9 +198,37 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   private def valueToUri(value: String, tag: ActiveTag): Iri =
     uriToNamedNode(IriResolver.resolve(value, tag.baseIRI))
 
+  /** Whether an IRI made of `a` and `b` may go into an [[IriTable]]. */
+  private def cacheable(a: String, b: String): Boolean =
+    cachesIris && (if (a == null) 0 else a.length) + b.length <= RdfXmlParser.MaxCachedIriChars
+
+  /** The IRI `namespace + local` of an element or attribute name. */
+  private def nameIri(namespace: String, local: String): Iri =
+    if (!cacheable(namespace, local)) uriToNamedNode(namespace + local)
+    else {
+      var iri = nameIris.get(namespace, local)
+      if (iri == null) {
+        iri = uriToNamedNode(namespace + local)
+        nameIris.put(namespace, local, iri)
+      }
+      iri
+    }
+
+  /** `valueToUri` of an `rdf:datatype` value. */
+  private def datatypeIri(value: String, tag: ActiveTag): Iri =
+    if (!cacheable(tag.baseIRI, value)) valueToUri(value, tag)
+    else {
+      var iri = datatypeIris.get(tag.baseIRI, value)
+      if (iri == null) {
+        iri = valueToUri(value, tag)
+        datatypeIris.put(tag.baseIRI, value, iri)
+      }
+      iri
+    }
+
   /** `uriToNamedNode` with pragmatic validation (`:173-180`). */
   private def uriToNamedNode(uri: String): Iri = {
-    opts.effectiveIriValidation match {
+    iriValidation match {
       case IriValidation.Pragmatic =>
         if (!IriValidator.pragmaticValid(uri))
           throw parseError(s"Invalid IRI according to RDF Turtle: '$uri'")
@@ -235,13 +303,6 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
 
   // ------------------------------------------------------------------ events
 
-  private def handleEvent(ev: XmlEvent): Unit = ev match {
-    case t: OpenTag    => onTag(t)
-    case TextEvent(s)  => onText(s)
-    case CloseTag(_)   => onCloseTag()
-    case DoctypeEvent(_) => // entities already registered by the tokenizer
-  }
-
   /** `onTag` (`:233-300`). */
   private def onTag(tag: OpenTag): Unit = {
     val parentTag: ActiveTag = if (stack.nonEmpty) stack.last else null
@@ -254,16 +315,20 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     // parseType=Literal string-capture mode (`:245-266`).
     if (parentTag != null && parentTag.childrenStringTags != null) {
       val sb = new StringBuilder
-      sb.append('<').append(tag.name)
+      sb.append('<').append(tag.name.qname)
       if (parentTag.namespaces != null)
         parentTag.namespaces.foreach { case (k, v) => sb.append(' ').append(k).append("=\"").append(v).append('"') }
-      tag.attributes.foreach { a => sb.append(' ').append(a.qname).append("=\"").append(a.value).append('"') }
+      var i = 0
+      while (i < tag.attrCount) {
+        sb.append(' ').append(tag.attrNames(i).qname).append("=\"").append(tag.attrValues(i)).append('"')
+        i += 1
+      }
       sb.append('>')
       parentTag.childrenStringTags += sb.toString
 
       val stringTag = new ActiveTag
       stringTag.childrenStringTags = parentTag.childrenStringTags
-      stringTag.childrenStringEmitClosingTag = s"</${tag.name}>"
+      stringTag.childrenStringEmitClosingTag = s"</${tag.name.qname}>"
       stack += stringTag
       return
     }
@@ -287,11 +352,14 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
 
     // Capture xmlns declarations for potential XMLLiteral serialization
     // (`:288-299`). Default xmlns follows the saxes key convention `xmlns:`.
-    tag.attributes.foreach { a =>
-      if (a.prefix == "xmlns") {
+    var i = 0
+    while (i < tag.attrCount) {
+      val name = tag.attrNames(i)
+      if (name.xmlnsPrefix != null) {
         if (activeTag.namespaces == null) activeTag.namespaces = mutable.ArrayBuffer.empty
-        activeTag.namespaces += ((s"${a.prefix}:${a.local}", a.value))
+        activeTag.namespaces += ((if (name.qname == "xmlns") "xmlns:" else name.qname, tag.attrValues(i)))
       }
+      i += 1
     }
     // Own declarations first, then the parent's. An element that declares
     // none shares its parent's list: no list is changed after its own tag.
@@ -306,9 +374,9 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     activeTag.childrenParseType = ParseMode.Property
     var typedNode = true
     if (tag.uri == RDF) {
-      if (!rootTag && ForbiddenNodeElements.contains(tag.local))
-        throw parseError(s"Illegal node element name: ${tag.local}")
-      tag.local match {
+      if (!rootTag && ForbiddenNodeElements.contains(tag.name.local))
+        throw parseError(s"Illegal node element name: ${tag.name.local}")
+      tag.name.local match {
         case "RDF" =>
           activeTag.childrenParseType = ParseMode.Resource
           typedNode = false
@@ -318,8 +386,8 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
       }
     }
 
-    val predicates = attrBuffer[Iri]
-    val objects = attrBuffer[String]
+    var predicates: mutable.ArrayBuffer[Iri] = null
+    var objects: mutable.ArrayBuffer[String] = null
 
     // Collect attributes first; subject is assigned only after all
     // attributes are seen because xml:base may still change (`:332-420`).
@@ -331,56 +399,60 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     // An indexed loop, not foreach: the flags below are then plain locals
     // rather than heap-boxed captures of a closure, on the hottest path.
     var next = 0
-    while (next < tag.attributes.length) {
-      val attribute = tag.attributes(next)
+    while (next < tag.attrCount) {
+      val name = tag.attrNames(next)
+      val uri = tag.attrUris(next)
+      val local = name.local
+      val value = tag.attrValues(next)
       next += 1
       var handled = true
-      if (attribute.uri == RDF && attribute.local == "version") {
-        setVersion(activeTag, attribute.value)
-      } else if (parentTag != null && attribute.uri == RDF) {
-        attribute.local match {
+      if (uri == RDF && local == "version") {
+        setVersion(activeTag, value)
+      } else if (parentTag != null && uri == RDF) {
+        local match {
           case "about" =>
             if (activeSubjectValue != null)
               throw parseError(s"Only one of rdf:about, rdf:nodeID and rdf:ID can be present, " +
-                s"while ${attribute.value} and $activeSubjectValue where found.")
-            activeSubjectValue = attribute.value
+                s"while $value and $activeSubjectValue where found.")
+            activeSubjectValue = value
           case "ID" =>
             if (activeSubjectValue != null)
               throw parseError(s"Only one of rdf:about, rdf:nodeID and rdf:ID can be present, " +
-                s"while ${attribute.value} and $activeSubjectValue where found.")
-            validateNcname(attribute.value)
-            activeSubjectValue = "#" + attribute.value
+                s"while $value and $activeSubjectValue where found.")
+            validateNcname(value)
+            activeSubjectValue = "#" + value
             claimSubjectNodeId = true
           case "nodeID" =>
             if (activeSubjectValue != null)
               throw parseError(s"Only one of rdf:about, rdf:nodeID and rdf:ID can be present, " +
-                s"while ${attribute.value} and $activeSubjectValue where found.")
-            validateNcname(attribute.value)
-            activeSubjectValue = attribute.value
+                s"while $value and $activeSubjectValue where found.")
+            validateNcname(value)
+            activeSubjectValue = value
             subjectValueBlank = true
           case "bagID" => throw parseError("rdf:bagID is not supported.")
-          case "type" => explicitType = attribute.value
+          case "type" => explicitType = value
           case "aboutEach" => throw parseError("rdf:aboutEach is not supported.")
           case "aboutEachPrefix" => throw parseError("rdf:aboutEachPrefix is not supported.")
           case "li" => throw parseError("rdf:li on node elements are not supported.")
           case _ => handled = false
         }
-      } else if (attribute.uri == XML && attribute.local == "lang") {
-        activeTag.language = if (attribute.value.isEmpty) null else attribute.value.toLowerCase
-      } else if (attribute.uri == XML && attribute.local == "base") {
+      } else if (uri == XML && local == "lang") {
+        activeTag.language = if (value.isEmpty) null else value.toLowerCase
+      } else if (uri == XML && local == "base") {
         // xml:base resolves against the parent's base (`:387-391`).
-        activeTag.baseIRI = IriResolver.resolve(attribute.value, activeTag.baseIRI)
-      } else if (attribute.uri == ITS && attribute.local == "dir") {
-        setDirection(activeTag, attribute.value)
+        activeTag.baseIRI = IriResolver.resolve(value, activeTag.baseIRI)
+      } else if (uri == ITS && local == "dir") {
+        setDirection(activeTag, value)
       } else handled = false
 
       if (!handled) {
         // Property attribute — but only namespaced, non-xml(ns) ones (`:397-404`).
-        if (attribute.prefix != "xml" && attribute.prefix != "xmlns" &&
-            !(attribute.prefix == "" && attribute.local == "xmlns") &&
-            attribute.uri.nonEmpty) {
-          predicates += uriToNamedNode(attribute.uri + attribute.local)
-          objects += attribute.value
+        if (name.prefix != "xml" && name.prefix != "xmlns" &&
+            !(name.prefix == "" && local == "xmlns") &&
+            uri.nonEmpty) {
+          if (predicates == null) { predicates = attrBuffer; objects = attrBuffer }
+          predicates += nameIri(uri, local)
+          objects += value
         }
       }
     }
@@ -394,7 +466,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
     if (activeTag.subject == null) activeTag.subject = freshBNode()
 
     if (typedNode) {
-      val tpe = uriToNamedNode(tag.uri + tag.local)
+      val tpe = nameIri(tag.uri, tag.name.local)
       emitTriple(activeTag.subject, RdfXmlParser.IriType, tpe,
         if (parentTag != null) parentTag.reifiedStatementId else null,
         activeTag.childrenTripleTerms, activeTag.reifier)
@@ -432,15 +504,15 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
                 parentTag.reifier)
               i += 1
             }
-            parentTag.predicateSubPredicates = attrBuffer
-            parentTag.predicateSubObjects = attrBuffer
+            parentTag.predicateSubPredicates = null
+            parentTag.predicateSubObjects = null
           }
         }
       }
 
       // Emit collected property attributes (`:499-510`).
       var i = 0
-      while (i < predicates.length) {
+      while (predicates != null && i < predicates.length) {
         val obj = createLiteral(objects(i), activeTag)
         emitTriple(activeTag.subject, predicates(i), obj, parentTag.reifiedStatementId,
           parentTag.childrenTripleTerms, parentTag.reifier)
@@ -458,61 +530,62 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
   private def onTagProperty(tag: OpenTag, activeTag: ActiveTag, parentTag: ActiveTag): Unit = {
     activeTag.childrenParseType = ParseMode.Resource
     activeTag.subject = parentTag.subject
-    if (tag.uri == RDF && tag.local == "li") {
+    if (tag.uri == RDF && tag.name.local == "li") {
       // rdf:li → rdf:_N with a per-parent counter (`:535-540`).
       if (parentTag.listItemCounter == 0) parentTag.listItemCounter = 1
       activeTag.predicate = uriToNamedNode(s"${tag.uri}_${parentTag.listItemCounter}")
       parentTag.listItemCounter += 1
     } else {
-      activeTag.predicate = uriToNamedNode(tag.uri + tag.local)
+      activeTag.predicate = nameIri(tag.uri, tag.name.local)
     }
 
-    if (tag.uri == RDF && ForbiddenPropertyElements.contains(tag.local))
-      throw parseError(s"Illegal property element name: ${tag.local}")
+    if (tag.uri == RDF && ForbiddenPropertyElements.contains(tag.name.local))
+      throw parseError(s"Illegal property element name: ${tag.name.local}")
 
-    activeTag.predicateSubPredicates = attrBuffer
-    activeTag.predicateSubObjects = attrBuffer
     var parseType = false
     var attributedProperty = false
 
     var activeSubSubjectValue: String = null
     var subSubjectValueBlank = true
-    val predicates = attrBuffer[Iri]
-    val objects = attrBuffer[Term]
+    var predicates: mutable.ArrayBuffer[Iri] = null
+    var objects: mutable.ArrayBuffer[Term] = null
 
     var next = 0 // indexed, as in onTagResource
-    while (next < tag.attributes.length) {
-      val attribute = tag.attributes(next)
+    while (next < tag.attrCount) {
+      val name = tag.attrNames(next)
+      val uri = tag.attrUris(next)
+      val local = name.local
+      val value = tag.attrValues(next)
       next += 1
       var handled = true
-      if (attribute.uri == RDF && attribute.local == "version") {
-        setVersion(activeTag, attribute.value)
-      } else if (attribute.uri == RDF) {
-        attribute.local match {
+      if (uri == RDF && local == "version") {
+        setVersion(activeTag, value)
+      } else if (uri == RDF) {
+        local match {
           case "resource" =>
             if (activeSubSubjectValue != null)
-              throw parseError(s"Found both rdf:resource (${attribute.value}) and rdf:nodeID ($activeSubSubjectValue).")
+              throw parseError(s"Found both rdf:resource ($value) and rdf:nodeID ($activeSubSubjectValue).")
             if (parseType)
-              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:resource (${attribute.value})")
+              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:resource ($value)")
             activeTag.hadChildren = true
-            activeSubSubjectValue = attribute.value
+            activeSubSubjectValue = value
             subSubjectValueBlank = false
           case "datatype" =>
             if (attributedProperty)
-              throw parseError(s"Found both non-rdf:* property attributes and rdf:datatype (${attribute.value}).")
+              throw parseError(s"Found both non-rdf:* property attributes and rdf:datatype ($value).")
             if (parseType)
-              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:datatype (${attribute.value})")
-            activeTag.datatype = valueToUri(attribute.value, activeTag)
+              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:datatype ($value)")
+            activeTag.datatype = datatypeIri(value, activeTag)
           case "nodeID" =>
             if (attributedProperty)
-              throw parseError(s"Found both non-rdf:* property attributes and rdf:nodeID (${attribute.value}).")
+              throw parseError(s"Found both non-rdf:* property attributes and rdf:nodeID ($value).")
             if (activeTag.hadChildren)
-              throw parseError(s"Found both rdf:resource and rdf:nodeID (${attribute.value}).")
+              throw parseError(s"Found both rdf:resource and rdf:nodeID ($value).")
             if (parseType)
-              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:nodeID (${attribute.value})")
-            validateNcname(attribute.value)
+              throw parseError(s"rdf:parseType is not allowed on property elements with rdf:nodeID ($value)")
+            validateNcname(value)
             activeTag.hadChildren = true
-            activeSubSubjectValue = attribute.value
+            activeSubSubjectValue = value
             subSubjectValueBlank = true
           case "bagID" => throw parseError("rdf:bagID is not supported.")
           case "parseType" =>
@@ -522,7 +595,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
               throw parseError(s"rdf:parseType is not allowed on property elements with rdf:datatype (${activeTag.datatype.iri})")
             if (activeSubSubjectValue != null)
               throw parseError(s"rdf:parseType is not allowed on property elements with rdf:nodeID or rdf:resource ($activeSubSubjectValue)")
-            attribute.value match {
+            value match {
               case "Resource" =>
                 parseType = true
                 activeTag.childrenParseType = ParseMode.Property
@@ -549,21 +622,21 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
               case _ =>
             }
           case "ID" =>
-            validateNcname(attribute.value)
-            activeTag.reifiedStatementId = valueToUri("#" + attribute.value, activeTag)
+            validateNcname(value)
+            activeTag.reifiedStatementId = valueToUri("#" + value, activeTag)
             claimNodeId(activeTag.reifiedStatementId)
           case "annotation" =>
-            activeTag.reifier = Iri(attribute.value)
+            activeTag.reifier = Iri(value)
           case "annotationNodeID" =>
-            validateNcname(attribute.value)
-            activeTag.reifier = bnode(attribute.value)
+            validateNcname(value)
+            activeTag.reifier = bnode(value)
           case _ => handled = false
         }
-      } else if (attribute.uri == XML && attribute.local == "lang") {
-        activeTag.language = if (attribute.value.isEmpty) null else attribute.value.toLowerCase
-      } else if (attribute.uri == ITS && attribute.local == "dir") {
-        setDirection(activeTag, attribute.value)
-      } else if (attribute.uri == ITS && attribute.local == "version") {
+      } else if (uri == XML && local == "lang") {
+        activeTag.language = if (value.isEmpty) null else value.toLowerCase
+      } else if (uri == ITS && local == "dir") {
+        setDirection(activeTag, value)
+      } else if (uri == ITS && local == "version") {
         // its:version ignored (`:685-687`).
       } else handled = false
 
@@ -571,15 +644,16 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
         // Property attributes on a property element → implicit blank node
         // sub-properties (`:690-704`). Literals are created *during* the
         // loop, so xml:lang order matters — quirk preserved.
-        if (attribute.prefix != "xml" && attribute.prefix != "xmlns" &&
-            !(attribute.prefix == "" && attribute.local == "xmlns") &&
-            attribute.uri.nonEmpty) {
+        if (name.prefix != "xml" && name.prefix != "xmlns" &&
+            !(name.prefix == "" && local == "xmlns") &&
+            uri.nonEmpty) {
           if (parseType || activeTag.datatype != null)
-            throw parseError(s"Found illegal rdf:* properties on property element with attribute: ${attribute.value}")
+            throw parseError(s"Found illegal rdf:* properties on property element with attribute: $value")
           activeTag.hadChildren = true
           attributedProperty = true
-          predicates += uriToNamedNode(attribute.uri + attribute.local)
-          objects += createLiteral(attribute.value, activeTag)
+          if (predicates == null) { predicates = attrBuffer; objects = attrBuffer }
+          predicates += nameIri(uri, local)
+          objects += createLiteral(value, activeTag)
         }
       }
     }
@@ -593,7 +667,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
       emitTriple(subjectParent, activeTag.predicate, activeTag.subject,
         activeTag.reifiedStatementId, activeTag.childrenTripleTerms, activeTag.reifier)
       var i = 0
-      while (i < predicates.length) {
+      while (predicates != null && i < predicates.length) {
         emitTriple(activeTag.subject, predicates(i), objects(i), null,
           activeTag.childrenTripleTerms, activeTag.reifier)
         i += 1
@@ -657,7 +731,7 @@ final class RdfXmlParser(opts: ParserOptions, push: Triple => Unit) {
         emitTriple(poppedTag.subject, poppedTag.predicate, subject,
           poppedTag.reifiedStatementId, poppedTag.childrenTripleTerms, poppedTag.reifier)
         var i = 0
-        while (i < poppedTag.predicateSubPredicates.length) {
+        while (poppedTag.predicateSubPredicates != null && i < poppedTag.predicateSubPredicates.length) {
           emitTriple(subject, poppedTag.predicateSubPredicates(i), poppedTag.predicateSubObjects(i),
             null, poppedTag.childrenTripleTerms, null)
           i += 1
@@ -691,6 +765,13 @@ object RdfXmlParser {
   val ForbiddenPropertyElements: Set[String] = Set(
     "Description", "RDF", "ID", "about", "bagID", "parseType", "resource",
     "nodeID", "aboutEach", "aboutEachPrefix")
+
+  /** Entries each of a parser's two [[IriTable]]s holds at most. */
+  val MaxCachedIris = 4096
+
+  /** Longest IRI, in chars (the two key strings together), an [[IriTable]]
+    * takes. */
+  val MaxCachedIriChars = 256
 
   /** `SUPPORTED_VERSIONS` (`lib/RdfXmlParser.ts:56-60`). */
   val SupportedVersions: Set[String] = Set("1.2", "1.2-basic", "1.1")

@@ -1,5 +1,8 @@
 package graft.rdf
 
+import scala.annotation.tailrec
+import scala.util.hashing.MurmurHash3
+
 /** RDF term model, re-expressing the reference's RDFJS terms as a Scala ADT.
   *
   * Reference semantics: `lib/RdfXmlParser.ts:85-93` (data factory),
@@ -31,7 +34,7 @@ final case class Iri(iri: String) extends Term {
 final case class BNode(label: String) extends Term {
   private[this] var text: String = _ // as in Iri
   def ntriples: String = {
-    if (text == null) text = "_:" + label
+    if (text == null) text = "_:".concat(label)
     text
   }
 }
@@ -46,11 +49,12 @@ final case class Lit(
     direction: String = null,
 ) extends Term {
   def ntriples: String = {
-    val esc = "\"" + Lit.escape(lexical) + "\""
-    if (datatype != null) esc + "^^<" + datatype + ">"
-    else if (language != null && direction != null) esc + "@" + language + "--" + direction
-    else if (language != null) esc + "@" + language
-    else esc
+    // One concatenation per case, which the JIT builds in a single buffer.
+    val esc = Lit.escape(lexical)
+    if (datatype != null) "\"" + esc + "\"^^<" + datatype + ">"
+    else if (language != null && direction != null) "\"" + esc + "\"@" + language + "--" + direction
+    else if (language != null) "\"" + esc + "\"@" + language
+    else "\"" + esc + "\""
   }
 }
 
@@ -79,8 +83,17 @@ object Lit {
 }
 
 /** RDF 1.2 triple term (quoted triple) in the object position.
-  * Reference: `lib/RdfXmlParser.ts:658-663`, `:857-873`, `:767-769`. */
+  * Reference: `lib/RdfXmlParser.ts:658-663`, `:857-873`, `:767-769`.
+  * `equals`, `hashCode` and `toString` go through [[Triple]]'s, which walk
+  * the nest in a loop. */
 final case class TripleTerm(t: Triple) extends Term {
+  override def equals(o: Any): Boolean = o match {
+    case that: TripleTerm => t == that.t
+    case _                => false
+  }
+  override def hashCode: Int = MurmurHash3.mix(Triple.TripleTermSeed, t.##)
+  override def toString: String = "TripleTerm(" + t + ")"
+
   /** One walk down the object chain, the only position a triple term nests
     * in, so a deep nest neither recurses nor copies inner text per level. */
   def ntriples: String = {
@@ -100,9 +113,64 @@ final case class TripleTerm(t: Triple) extends Term {
 }
 
 /** One emitted triple (the default graph is implicit — the reference only
-  * ever emits into the default graph, `lib/RdfXmlParser.ts:761`). */
+  * ever emits into the default graph, `lib/RdfXmlParser.ts:761`).
+  *
+  * `equals`, `hashCode` and `toString` walk the object chain, the only
+  * position a triple term nests in, in a loop, as [[TripleTerm.ntriples]]
+  * does: the generated ones recursed once per level and overflowed the stack
+  * on a deep nest. They agree with the generated ones on what is equal and
+  * on the text. */
 final case class Triple(subj: Term, pred: Term, obj: Term) {
   def ntriples: String = subj.ntriples + " " + pred.ntriples + " " + obj.ntriples + " ."
+
+  override def equals(o: Any): Boolean = o match {
+    case that: Triple => Triple.sameChain(this, that)
+    case _            => false
+  }
+
+  override def hashCode: Int = {
+    var h = Triple.TripleSeed
+    var n = 0
+    var t = this
+    while (t != null) {
+      h = MurmurHash3.mix(MurmurHash3.mix(h, t.subj.##), t.pred.##)
+      n += 1
+      t.obj match {
+        case tt: TripleTerm => h = MurmurHash3.mix(h, Triple.TripleTermSeed); t = tt.t
+        case leaf           => h = MurmurHash3.mixLast(h, leaf.##); t = null
+      }
+    }
+    MurmurHash3.finalizeHash(h, 3 * n)
+  }
+
+  override def toString: String = {
+    val sb = new java.lang.StringBuilder
+    var depth = 0
+    var t = this
+    while (t != null) {
+      sb.append("Triple(").append(t.subj).append(',').append(t.pred).append(',')
+      t.obj match {
+        case tt: TripleTerm => sb.append("TripleTerm("); depth += 1; t = tt.t
+        case leaf           => sb.append(leaf).append(')'); t = null
+      }
+    }
+    while (depth > 0) { sb.append("))"); depth -= 1 }
+    sb.toString
+  }
+}
+
+object Triple {
+  private[rdf] val TripleSeed = "Triple".hashCode
+  private[rdf] val TripleTermSeed = "TripleTerm".hashCode
+
+  @tailrec private def sameChain(a: Triple, b: Triple): Boolean =
+    (a eq b) || (a.subj == b.subj && a.pred == b.pred && (a.obj match {
+      case ao: TripleTerm => b.obj match {
+        case bo: TripleTerm => sameChain(ao.t, bo.t)
+        case _              => false
+      }
+      case ao => ao == b.obj
+    }))
 }
 
 /** The blank-node labels of the row surfaces (pipeline stage P4 and the
@@ -131,7 +199,7 @@ object BlankNodeLabels {
     java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_")
 
-  private def prefixed(prefix: String): String => String = raw => prefix + escape(raw)
+  private def prefixed(prefix: String): String => String = raw => prefix.concat(escape(raw))
 
   /** Keeps ASCII letters and digits; writes every other UTF-16 unit as `-`
     * and four lowercase hex digits. */

@@ -1,49 +1,65 @@
 package graft.rdf
 
-import scala.collection.mutable
-
-/** XML events, mirroring the granularity the reference receives from its
-  * SAX layer (`@rubensworks/saxes`, wired at `lib/RdfXmlParser.ts:220-227`):
-  * opentag / text / cdata / closetag / doctype, with namespace-resolved
-  * names and attributes.
+/** A qualified element or attribute name, split at its first ':'. The
+  * tokenizer interns names per document, so a name repeated through a
+  * document is one record and its `prefix` and `local` are the same strings
+  * every time.
+  *
+  * `xmlnsPrefix` is the prefix an attribute of this name declares: "" for
+  * `xmlns` (the default namespace), `p` for `xmlns:p`, null for an attribute
+  * that declares none.
   */
-sealed trait XmlEvent
+final class XmlName private[rdf] (val qname: String, private[rdf] val interned: Boolean) {
+  private[this] val colon = qname.indexOf(':')
+  val prefix: String = if (colon < 0) "" else qname.substring(0, colon)
+  val local: String = if (colon < 0) qname else qname.substring(colon + 1)
+  val xmlnsPrefix: String =
+    if (qname == "xmlns") "" else if (qname.startsWith("xmlns:")) qname.substring(6) else null
+  /** The sequence number of the last open tag that had an attribute of this
+    * name: the tokenizer's duplicate-attribute check. */
+  private[rdf] var stamp: Long = -1L
+}
 
-/** One attribute, namespace-resolved.
-  * `uri` is "" for unprefixed non-namespace attributes (the reference checks
-  * `attribute.uri` truthiness to skip those, `lib/RdfXmlParser.ts:399-404`).
-  * The `xmlns` attribute itself follows the saxes convention:
-  * prefix="xmlns", local="".
+/** The open tag being reported to [[XmlHandler.openTag]]: one object per
+  * tokenizer, refilled for every tag, so it is valid only during that call.
+  * Attribute `i` (document order) is `attrNames(i)`, with namespace
+  * `attrUris(i)` ("" for an unprefixed attribute, the reference's
+  * `attribute.uri` truthiness test, `lib/RdfXmlParser.ts:399-404`) and the
+  * normalized, entity-expanded value `attrValues(i)`.
   */
-final case class XmlAttr(qname: String, prefix: String, local: String, uri: String, value: String)
+final class OpenTag private[rdf] () {
+  private[rdf] var name: XmlName = _
+  private[rdf] var uri: String = _
+  private[rdf] var attrCount = 0
+  private[rdf] var attrNames = new Array[XmlName](8)
+  private[rdf] var attrUris = new Array[String](8)
+  private[rdf] var attrValues = new Array[String](8)
+}
 
-final case class OpenTag(
-    name: String,
-    prefix: String,
-    local: String,
-    uri: String,
-    attributes: scala.collection.immutable.ArraySeq[XmlAttr],
-    selfClosing: Boolean,
-) extends XmlEvent
-
-final case class CloseTag(name: String) extends XmlEvent
-
-/** Text or CDATA content (the reference routes both to the same handler,
-  * `lib/RdfXmlParser.ts:223-224`, with overwrite — not append — semantics
-  * in the consumer). */
-final case class TextEvent(text: String) extends XmlEvent
-
-final case class DoctypeEvent(content: String) extends XmlEvent
+/** What [[XmlTokenizer]] reports, at the granularity the reference receives
+  * from its SAX layer (`@rubensworks/saxes`, wired at
+  * `lib/RdfXmlParser.ts:220-227`): opentag, text (CDATA included) and
+  * closetag. DOCTYPE content is handled inside the tokenizer. */
+trait XmlHandler {
+  /** An open tag; a self-closing one is followed at once by [[closeTag]]. */
+  def openTag(tag: OpenTag): Unit
+  /** Text or CDATA content (the reference routes both to the same handler,
+    * `lib/RdfXmlParser.ts:223-224`, with overwrite, not append, semantics in
+    * the consumer). */
+  def text(text: String): Unit
+  /** The end of the innermost open element. */
+  def closeTag(): Unit
+}
 
 final class XmlSyntaxException(message: String, val line: Int, val column: Int)
     extends RuntimeException(s"$line:$column: $message")
 
-/** Incremental, namespace-aware XML event scanner with saxes-compatible
-  * behavior for the constructs the reference exercises:
+/** Incremental, namespace-aware XML scanner with saxes-compatible behavior
+  * for the constructs the reference exercises:
   *   - DOCTYPE internal-subset `<!ENTITY name "uri">` declarations are
   *     scraped with the same regex the reference applies
   *     (`lib/RdfXmlParser.ts:923-928`) and expanded in later text/attributes;
-  *   - CDATA is delivered as a text event (`:224`);
+  *   - CDATA is reported as text (`:224`);
   *   - comments and processing instructions are skipped;
   *   - attribute values are XML-normalized (raw whitespace → space) and
   *     entity-expanded; character references bypass normalization;
@@ -51,10 +67,18 @@ final class XmlSyntaxException(message: String, val line: Int, val column: Int)
   *     0-based *after* the construct that completed), so `ParseError`'s
   *     `column + 1` arithmetic (`lib/ParseError.ts:10`) reproduces.
   *
-  * Feed with [[write]] chunks and finish with [[end]]; events are pushed to
-  * `handler` as soon as each construct is complete, which is what gives the
+  * Feed with [[write]] chunks and finish with [[end]]; each construct is
+  * reported to `handler` as soon as it is complete, which is what gives the
   * automaton the reference's incremental emission behavior
   * (`test/RdfXmlParser-test.ts:2948-3025`).
+  *
+  * Element and attribute names are looked up by their characters in the
+  * buffer, in a per-document open-addressing table, so a name is copied and
+  * split once per document rather than once per occurrence. The table starts
+  * at [[XmlTokenizer.InitialNameSlots]] slots, so a tiny document sets up
+  * little. It takes no name longer than [[XmlTokenizer.MaxNameChars]] and
+  * stops taking names at [[XmlTokenizer.MaxNames]]; other names are built per
+  * occurrence, so the table stays within a fixed size whatever the document.
   */
 object XmlTokenizer {
   /** Reference entity-scrape regex (`lib/RdfXmlParser.ts:924`) — compiled
@@ -65,21 +89,31 @@ object XmlTokenizer {
 
   private val DefaultEntities: Map[String, String] =
     Map("amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'")
+
+  /** Slots of a document's name table when it starts (a power of two). */
+  val InitialNameSlots = 16
+
+  /** Distinct names a document's name table holds at most. */
+  val MaxNames = 4096
+
+  /** Longest name, in chars, the name table takes. */
+  val MaxNameChars = 256
 }
 
-final class XmlTokenizer(handler: XmlEvent => Unit) {
-  import XmlTokenizer.{EntityRegex, DefaultEntities}
+final class XmlTokenizer(handler: XmlHandler) {
+  import XmlTokenizer._
 
   // Copy-on-write: almost no document declares entities, so the default
   // table is shared and only DOCTYPE processing materializes a local map.
   private var entities: Map[String, String] = DefaultEntities
 
-  /** prefix → uri scopes; one frame per open element. */
-  private var scopes: List[Map[String, String]] =
-    List(Map("xml" -> RdfVocab.XML, "xmlns" -> RdfVocab.XMLNS))
+  /** prefix → uri scopes, innermost last: the document's base scope, then
+    * one per open element. */
+  private val scopes = new java.util.ArrayDeque[Map[String, String]]()
+  scopes.addLast(Map("xml" -> RdfVocab.XML, "xmlns" -> RdfVocab.XMLNS))
   /** Names of the open elements, innermost last; pushed and popped once per
     * element, so both must be O(1) without clearing any freed tail. */
-  private val openNames = new java.util.ArrayDeque[String]()
+  private val openNames = new java.util.ArrayDeque[XmlName]()
 
   private var buf: String = ""
   private var pos: Int = 0 // cursor into buf — consumed prefix is NOT copied away
@@ -126,7 +160,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     // chunk becomes the buffer without any copying (one-shot whole-document
     // parses never copy the input at all).
     if (pos >= buf.length) { buf = c; pos = 0; nextNl = -2 }
-    else if (c.nonEmpty) { buf = buf.substring(pos) + c; pos = 0; nextNl = -2 }
+    else if (c.nonEmpty) { buf = buf.substring(pos).concat(c); pos = 0; nextNl = -2 }
     run()
   }
 
@@ -144,7 +178,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
       buf = ""
       pos = 0
     }
-    if (depth > 0) fail(s"Unclosed tag: ${openNames.peekLast}")
+    if (depth > 0) fail(s"Unclosed tag: ${openNames.peekLast.qname}")
   }
 
   private def emitText(raw: String, cdata: Boolean): Unit = {
@@ -152,8 +186,7 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
       if (!raw.forall(_.isWhitespace)) fail("Text data outside of root node")
       return
     }
-    val text = if (cdata) raw else expandEntities(normalizeNewlines(raw), attr = false)
-    handler(TextEvent(text))
+    handler.text(if (cdata) raw else expandEntities(normalizeNewlines(raw), attr = false))
   }
 
   private def normalizeNewlines(s: String): String =
@@ -161,11 +194,18 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
 
   /** Expand character and entity references. In attribute context, raw
     * whitespace normalizes to a single space (char-ref-produced whitespace
-    * does not, per XML 1.0 §3.3.3). */
+    * does not, per XML 1.0 §3.3.3). One scan finds the first character that
+    * needs either; a value with none is returned as it is. */
   private def expandEntities(s: String, attr: Boolean): String = {
-    if (s.indexOf('&') < 0 && !(attr && hasAttrWs(s))) return s
-    val sb = new StringBuilder(s.length)
     var i = 0
+    if (attr) {
+      while (i < s.length && !needsWork(s.charAt(i))) i += 1
+    } else {
+      i = s.indexOf('&')
+      if (i < 0) i = s.length
+    }
+    if (i == s.length) return s
+    val sb = new java.lang.StringBuilder(s.length).append(s, 0, i)
     while (i < s.length) {
       val ch = s.charAt(i)
       if (ch == '&') {
@@ -175,11 +215,11 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
         if (name.startsWith("#x") || name.startsWith("#X")) {
           val cp = java.lang.Integer.parseInt(name.substring(2), 16)
           if (!isXmlChar(cp)) fail(s"Invalid character reference: &$name;")
-          sb.appendAll(Character.toChars(cp))
+          sb.appendCodePoint(cp)
         } else if (name.startsWith("#")) {
           val cp = java.lang.Integer.parseInt(name.substring(1), 10)
           if (!isXmlChar(cp)) fail(s"Invalid character reference: &$name;")
-          sb.appendAll(Character.toChars(cp))
+          sb.appendCodePoint(cp)
         } else {
           entities.get(name) match {
             case Some(v) => sb.append(v)
@@ -198,8 +238,10 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     sb.toString
   }
 
-  private def hasAttrWs(s: String): Boolean =
-    s.indexOf('\t') >= 0 || s.indexOf('\n') >= 0 || s.indexOf('\r') >= 0
+  /** An attribute-value character [[expandEntities]] rewrites; all four are
+    * at most '&', so most characters take one comparison. */
+  private def needsWork(c: Char): Boolean =
+    c <= '&' && (c == '&' || c == '\t' || c == '\n' || c == '\r')
 
   private def isXmlChar(cp: Int): Boolean =
     cp == 0x9 || cp == 0xA || cp == 0xD || (cp >= 0x20 && cp <= 0xD7FF) ||
@@ -268,7 +310,6 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
         advance(pos, endPos + 1)
         pos = endPos + 1
         onDoctype(content)
-        handler(DoctypeEvent(content))
         progress = true
       } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '!') {
         // Other declarations (<!ELEMENT...> at top level outside DOCTYPE)
@@ -280,10 +321,10 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
       } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '/') {
         val e = buf.indexOf('>', pos + 2)
         if (e < 0) return
-        val name = buf.substring(pos + 2, e).trim
+        val start = pos + 2
         advance(pos, e + 1)
         pos = e + 1
-        onCloseTag(name)
+        onCloseTag(start, e)
         progress = true
       } else {
         if (scanOpenTag()) progress = true else return
@@ -291,18 +332,20 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     }
   }
 
-  /** Open tag: scan with quote awareness; returns false when incomplete
-    * (wait for more input). */
+  /** Open tag: scan with quote awareness, jumping over each quoted value
+    * with `indexOf`; returns false when incomplete (wait for more input). */
   private def scanOpenTag(): Boolean = {
     var i = pos + 1
-    var quote: Char = 0
     var endPos = -1
     while (i < buf.length && endPos < 0) {
       val c = buf.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '>') endPos = i
-      i += 1
+      if (c == '"' || c == '\'') {
+        val close = buf.indexOf(c, i + 1)
+        i = if (close < 0) buf.length else close + 1
+      } else {
+        if (c == '>') endPos = i
+        i += 1
+      }
     }
     if (endPos < 0) {
       if (buf.length - pos == 1) return false
@@ -328,14 +371,62 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     }
   }
 
-  /** Reused per-tag attribute scratch (cleared each open tag — one
-    * allocation per tokenizer instead of per element). Parallel buffers
-    * rather than an ArrayBuffer[(String, String)]: attribute handling is
-    * ~40% of the kernel profile, and a Tuple2 per attribute plus the
-    * pattern-match destructuring closures in the passes over it were a
-    * measurable slice of that. */
-  private val rawAttrNames = mutable.ArrayBuffer.empty[String]
-  private val rawAttrValues = mutable.ArrayBuffer.empty[String]
+  // ----------------------------------------------------------------- names
+
+  /** The name table: open addressing with linear probing, at most half
+    * full, keyed by the name's characters. */
+  private var names = new Array[XmlName](InitialNameSlots)
+  private var nameCount = 0
+
+  /** The name spelled by buf[start, end). */
+  private def nameAt(start: Int, end: Int): XmlName = {
+    var hash = 0 // the name's `String.hashCode`
+    var i = start
+    while (i < end) { hash = 31 * hash + buf.charAt(i); i += 1 }
+    val len = end - start
+    val mask = names.length - 1
+    var slot = spread(hash) & mask
+    var n = names(slot)
+    while (n != null) {
+      if (n.qname.length == len && buf.regionMatches(start, n.qname, 0, len)) return n
+      slot = (slot + 1) & mask
+      n = names(slot)
+    }
+    val interned = nameCount < MaxNames && len <= MaxNameChars
+    n = new XmlName(buf.substring(start, end), interned)
+    if (interned) {
+      names(slot) = n
+      nameCount += 1
+      if (2 * nameCount > names.length && names.length < 2 * MaxNames) growNames()
+    }
+    n
+  }
+
+  private def spread(h: Int): Int = h ^ (h >>> 16)
+
+  private def growNames(): Unit = {
+    val old = names
+    names = new Array[XmlName](old.length * 2)
+    val mask = names.length - 1
+    old.foreach { n =>
+      if (n != null) {
+        var slot = spread(n.qname.hashCode) & mask
+        while (names(slot) != null) slot = (slot + 1) & mask
+        names(slot) = n
+      }
+    }
+  }
+
+  // ------------------------------------------------------------------ tags
+
+  private val tag = new OpenTag
+  /** Counts open tags; an attribute name stamped with the current count was
+    * already seen on this tag. */
+  private var tagSeq = 0L
+  /** Duplicate check for names past the table's cap, which have no stamp to
+    * share: made on first use, cleared per tag once used. */
+  private var overflowNames: java.util.HashSet[String] = _
+  private var overflowUsed = false
 
   /** The open tag whose name and attributes are `buf[start, end)`, scanned
     * in place. The position counters already stand after the tag, which is
@@ -345,95 +436,110 @@ final class XmlTokenizer(handler: XmlEvent => Unit) {
     // Parse name.
     var i = start
     while (i < end && !buf.charAt(i).isWhitespace) i += 1
-    val name = buf.substring(start, i)
-    if (name.isEmpty || !isNameStart(name.charAt(0))) fail(s"Invalid tag name: $name")
+    if (i == start || !isNameStart(buf.charAt(start))) fail(s"Invalid tag name: ${buf.substring(start, i)}")
+    val name = nameAt(start, i)
 
     // Parse attributes (document order preserved).
-    rawAttrNames.clear()
-    rawAttrValues.clear()
+    tagSeq += 1
+    if (overflowUsed) { overflowNames.clear(); overflowUsed = false }
+    var n = 0
     while (i < end) {
       while (i < end && buf.charAt(i).isWhitespace) i += 1
       if (i < end) {
         val eq = buf.indexOf('=', i)
-        if (eq < 0 || eq >= end) fail(s"Attribute without value in element $name")
-        val aname = buf.substring(i, eq).trim
-        if (aname.isEmpty) fail(s"Attribute without name in element $name")
+        if (eq < 0 || eq >= end) fail(s"Attribute without value in element ${name.qname}")
+        // The name is buf[i, eq) trimmed as `String.trim` trims.
+        var aStart = i
+        var aEnd = eq
+        while (aStart < aEnd && buf.charAt(aStart) <= ' ') aStart += 1
+        while (aEnd > aStart && buf.charAt(aEnd - 1) <= ' ') aEnd -= 1
+        if (aStart == aEnd) fail(s"Attribute without name in element ${name.qname}")
         var j = eq + 1
         while (j < end && buf.charAt(j).isWhitespace) j += 1
         if (j >= end || (buf.charAt(j) != '"' && buf.charAt(j) != '\''))
-          fail(s"Unquoted attribute value in element $name")
+          fail(s"Unquoted attribute value in element ${name.qname}")
         val q = buf.charAt(j)
         val vEnd = buf.indexOf(q, j + 1)
-        if (vEnd < 0 || vEnd >= end) fail(s"Unterminated attribute value in element $name")
-        val rawValue = buf.substring(j + 1, vEnd)
-        var d = 0
-        while (d < rawAttrNames.length) {
-          if (rawAttrNames(d) == aname) fail(s"Duplicate attribute: $aname")
-          d += 1
+        if (vEnd < 0 || vEnd >= end) fail(s"Unterminated attribute value in element ${name.qname}")
+        val aname = nameAt(aStart, aEnd)
+        if (aname.interned) {
+          if (aname.stamp == tagSeq) fail(s"Duplicate attribute: ${aname.qname}")
+          aname.stamp = tagSeq
+        } else {
+          if (overflowNames == null) overflowNames = new java.util.HashSet[String]()
+          overflowUsed = true
+          if (!overflowNames.add(aname.qname)) fail(s"Duplicate attribute: ${aname.qname}")
         }
-        rawAttrNames += aname
-        rawAttrValues += expandEntities(rawValue, attr = true)
+        if (n == tag.attrNames.length) growAttrs()
+        tag.attrNames(n) = aname
+        tag.attrValues(n) = expandEntities(buf.substring(j + 1, vEnd), attr = true)
+        n += 1
         i = vEnd + 1
       }
     }
-    val nAttrs = rawAttrNames.length
 
     // Build the namespace scope for this element.
-    var scope = scopes.head
+    var scope = scopes.peekLast
     var k = 0
-    while (k < nAttrs) {
-      val aname = rawAttrNames(k)
-      if (aname == "xmlns") scope = scope.updated("", rawAttrValues(k))
-      else if (aname.startsWith("xmlns:")) scope = scope.updated(aname.substring(6), rawAttrValues(k))
+    while (k < n) {
+      val declared = tag.attrNames(k).xmlnsPrefix
+      if (declared != null) scope = scope.updated(declared, tag.attrValues(k))
       k += 1
     }
 
-    val eci = name.indexOf(':')
-    val ePrefix = if (eci < 0) "" else name.substring(0, eci)
-    val eLocal = if (eci < 0) name else name.substring(eci + 1)
-    val eUri =
-      if (ePrefix.isEmpty) scope.getOrElse("", "")
-      else scope.getOrElse(ePrefix, fail(s"""unbound namespace prefix: "$ePrefix"."""))
-
-    // Array + unsafeWrapArray: a Vector builder is several allocations for
-    // a typically 1-4 element collection on the hottest path in the kernel.
-    val attrsArr = new Array[XmlAttr](nAttrs)
+    tag.name = name
+    tag.uri =
+      if (name.prefix.isEmpty) scope.getOrElse("", "")
+      else namespace(scope, name.prefix)
     k = 0
-    while (k < nAttrs) {
-      val aname = rawAttrNames(k)
-      val v = rawAttrValues(k)
-      attrsArr(k) = (if (aname == "xmlns") XmlAttr(aname, "xmlns", "", RdfVocab.XMLNS, v)
-      else {
-        val ci = aname.indexOf(':')
-        val p = if (ci < 0) "" else aname.substring(0, ci)
-        val l = if (ci < 0) aname else aname.substring(ci + 1)
-        val uri =
-          if (p.isEmpty) "" // unprefixed attributes are in no namespace
-          else scope.getOrElse(p, fail(s"""unbound namespace prefix: "$p"."""))
-        XmlAttr(aname, p, l, uri, v)
-      })
+    while (k < n) {
+      val p = tag.attrNames(k).prefix
+      // unprefixed attributes are in no namespace
+      tag.attrUris(k) = if (p.isEmpty) "" else namespace(scope, p)
       k += 1
     }
-    val attrs = scala.collection.immutable.ArraySeq.unsafeWrapArray(attrsArr)
+    tag.attrCount = n
 
-    scopes = scope :: scopes
+    scopes.addLast(scope)
     openNames.addLast(name)
-    handler(OpenTag(name, ePrefix, eLocal, eUri, attrs, selfClosing))
-    if (selfClosing) {
-      popElement(name)
-    }
+    handler.openTag(tag)
+    // The view keeps no attribute past its tag.
+    k = 0
+    while (k < n) { tag.attrNames(k) = null; tag.attrUris(k) = null; tag.attrValues(k) = null; k += 1 }
+    if (selfClosing) popElement()
   }
 
-  private def onCloseTag(name: String): Unit = {
-    if (openNames.isEmpty) fail(s"Unexpected closing tag: $name")
-    if (openNames.peekLast != name) fail(s"Mismatched closing tag: $name (expected ${openNames.peekLast})")
-    popElement(name)
+  private def namespace(scope: Map[String, String], prefix: String): String = {
+    val uri = scope.getOrElse(prefix, null)
+    if (uri == null) fail(s"""unbound namespace prefix: "$prefix".""")
+    uri
   }
 
-  private def popElement(name: String): Unit = {
+  private def growAttrs(): Unit = {
+    val size = tag.attrNames.length * 2
+    tag.attrNames = java.util.Arrays.copyOf(tag.attrNames, size)
+    tag.attrUris = java.util.Arrays.copyOf(tag.attrUris, size)
+    tag.attrValues = java.util.Arrays.copyOf(tag.attrValues, size)
+  }
+
+  /** The close tag whose name, with any surrounding whitespace, is
+    * `buf[start, end)`. */
+  private def onCloseTag(start: Int, end: Int): Unit = {
+    var s = start
+    var e = end
+    while (s < e && buf.charAt(s) <= ' ') s += 1
+    while (e > s && buf.charAt(e - 1) <= ' ') e -= 1
+    if (openNames.isEmpty) fail(s"Unexpected closing tag: ${buf.substring(s, e)}")
+    val open = openNames.peekLast.qname
+    if (open.length != e - s || !buf.regionMatches(s, open, 0, e - s))
+      fail(s"Mismatched closing tag: ${buf.substring(s, e)} (expected $open)")
+    popElement()
+  }
+
+  private def popElement(): Unit = {
     openNames.removeLast()
-    scopes = scopes.tail
-    handler(CloseTag(name))
+    scopes.removeLast()
+    handler.closeTag()
     if (openNames.isEmpty) closedRoot = true
   }
 }

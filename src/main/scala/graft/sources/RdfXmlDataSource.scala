@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rdf.{BlankNodeLabels, ParserOptions, TripleColumns}
+import graft.rdf.{BlankNodeLabels, ParserOptions, RdfXmlParser, TripleColumns}
 
 /** `spark.read.format("rdfxml")` — a DataSource V2 batch source that parses
   * RDF/XML files into triple rows, re-expressing the reference's primary
@@ -318,6 +318,26 @@ final class RdfXmlPartitionReader(
   private val lastText = new Array[String](ordinals.length)
   private val lastUtf8 = new Array[UTF8String](ordinals.length)
 
+  /** Per output column, whether it is `pred` or `datatype`. Their values are
+    * the text of terms the parser shares across the file (one `Iri` per
+    * distinct name or datatype), so the same few `String`s recur, though
+    * rarely on consecutive rows; [[encodeShared]] encodes each once. */
+  private val shared = fieldNames.map(n => n == "pred" || n == "datatype")
+  private val sharedText = new Array[String](RdfXmlPartitionReader.SharedSlots)
+  private val sharedUtf8 = new Array[UTF8String](RdfXmlPartitionReader.SharedSlots)
+
+  /** The encoding of `v` from a small direct-mapped cache keyed by the
+    * `String` object itself: a miss just replaces the slot. Text longer than
+    * the parser shares ([[RdfXmlParser.MaxCachedIriChars]]) is encoded
+    * without it, so the cache holds at most `SharedSlots` short encodings. */
+  private def encodeShared(v: String): UTF8String =
+    if (v == null || v.length > RdfXmlParser.MaxCachedIriChars) UTF8String.fromString(v)
+    else {
+      val slot = System.identityHashCode(v) & (RdfXmlPartitionReader.SharedSlots - 1)
+      if (!(sharedText(slot) eq v)) { sharedText(slot) = v; sharedUtf8(slot) = UTF8String.fromString(v) }
+      sharedUtf8(slot)
+    }
+
   override def next(): Boolean = {
     while (doc == null || !doc.next()) {
       if (in != null) {
@@ -333,8 +353,11 @@ final class RdfXmlPartitionReader(
     while (k < ordinals.length) {
       val o = ordinals(k)
       val v = if (o < 0) filePath else doc.value(o)
-      if (!(v eq lastText(k))) { lastText(k) = v; lastUtf8(k) = UTF8String.fromString(v) }
-      row.update(k, lastUtf8(k))
+      if (shared(k)) row.update(k, encodeShared(v))
+      else {
+        if (!(v eq lastText(k))) { lastText(k) = v; lastUtf8(k) = UTF8String.fromString(v) }
+        row.update(k, lastUtf8(k))
+      }
       k += 1
     }
     true
@@ -349,4 +372,8 @@ object RdfXmlPartitionReader {
     * whole; only this chunk, an incomplete construct carried into the next
     * one, and the rows one chunk made ready are. */
   val ChunkChars: Int = 64 * 1024
+
+  /** Slots of the reader's cache of shared `pred`/`datatype` encodings (a
+    * power of two). */
+  val SharedSlots: Int = 256
 }

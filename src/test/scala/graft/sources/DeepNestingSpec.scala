@@ -57,6 +57,23 @@ class DeepNestingSpec extends SparkSuite {
     }
   }
 
+  Seq(5000, 20000).foreach { depth =>
+    test(s"a triple with terms nested $depth deep compares, hashes and prints") {
+      def parsed(doc: String) = RdfXmlParser.parse(doc).fold(e => fail(e.toString), identity).head
+      val doc = nested(depth)
+      val (a, b) = (parsed(doc), parsed(doc))
+      assert(!(a eq b))
+      assert(a == b)
+      assert(a.hashCode == b.hashCode)
+      val otherLeaf = parsed(doc.replace(">leaf<", ">leaf2<"))
+      assert(a != otherLeaf)
+      val text = a.toString
+      assert(text.startsWith("Triple(Iri(http://e.org/s),Iri(http://e.org/p),TripleTerm(Triple(BNode("))
+      assert(text.endsWith(",Iri(http://e.org/p),Lit(leaf,null,null,null))" + "))" * depth))
+      assert("TripleTerm\\(".r.findAllIn(text).length == depth)
+    }
+  }
+
   /** Reads a term as its triple-term depth. Each call is O(1), so the case
     * below measures the walk, not the factory. */
   private object Depth extends TermFactory[Int] {

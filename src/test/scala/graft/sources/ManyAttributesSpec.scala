@@ -1,0 +1,92 @@
+package graft.sources
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.Row
+
+import graft.pipeline.SparkSuite
+import graft.rdf.{ParseError, RdfXmlParser}
+
+/** One element with very many attributes, or very many namespace
+  * declarations, is read in time linear in its size on the kernel and on
+  * `format("rdfxml")`: the duplicate-attribute check is one lookup per
+  * attribute, not a comparison with every earlier one. Each case records its
+  * time; the bounds are far above it and far below what a quadratic check
+  * takes at this size (minutes). */
+class ManyAttributesSpec extends SparkSuite {
+
+  private val N = 200000
+  private val Head =
+    """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/">""" + "\n"
+
+  /** Line 2 holds one `rdf:Description` with `ex:p0` … `ex:p{n-1}`, then
+    * `extra`. */
+  private def manyAttributes(n: Int, extra: String = ""): String = {
+    val sb = new StringBuilder(Head).append("""<rdf:Description rdf:about="http://e.org/s"""")
+    (0 until n).foreach(i => sb.append(s""" ex:p$i="$i""""))
+    sb.append(extra).append("/>\n</rdf:RDF>\n").toString
+  }
+
+  private def seconds[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = f
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The rows `format("rdfxml")` reads from a file holding `doc`. */
+  private def fromFile(doc: String): Array[Row] = {
+    val dir = Files.createTempDirectory("graft_many_attrs")
+    val file = dir.resolve("doc.rdf")
+    try {
+      Files.writeString(file, doc)
+      spark.read.format("rdfxml").load(dir.toString).select("pred", "obj", "error").collect()
+    } finally {
+      Files.deleteIfExists(file)
+      Files.deleteIfExists(dir)
+    }
+  }
+
+  test(s"one element with $N attributes gives its triples within seconds") {
+    val doc = manyAttributes(N)
+    val (kernel, kernelS) = seconds(RdfXmlParser.parse(doc))
+    info(f"RdfXmlParser.parse: $kernelS%.2f s")
+    val ts = kernel.fold(e => fail(e.message), identity)
+    assert(ts.length == N)
+    assert(ts.last.ntriples == s"""<http://e.org/s> <http://e.org/p${N - 1}> "${N - 1}" .""")
+    assert(kernelS < 20)
+
+    val (rows, fileS) = seconds(fromFile(doc))
+    info(f"""format("rdfxml"): $fileS%.2f s""")
+    assert(rows.length == N && rows.forall(_.isNullAt(2)))
+    assert(fileS < 30)
+  }
+
+  test(s"one element with $N namespace declarations gives its triples within seconds") {
+    val sb = new StringBuilder(Head).append("""<rdf:Description rdf:about="http://e.org/s"""")
+    (0 until N).foreach(i => sb.append(s""" xmlns:n$i="http://e.org/ns$i/""""))
+    sb.append(s"><n0:p>first</n0:p><n${N - 1}:p>last</n${N - 1}:p></rdf:Description>\n</rdf:RDF>\n")
+    val doc = sb.toString
+    val expected = Vector(
+      """<http://e.org/s> <http://e.org/ns0/p> "first" .""",
+      s"""<http://e.org/s> <http://e.org/ns${N - 1}/p> "last" .""")
+
+    val (kernel, kernelS) = seconds(RdfXmlParser.parse(doc))
+    info(f"RdfXmlParser.parse: $kernelS%.2f s")
+    assert(kernel.map(_.map(_.ntriples)) == Right(expected))
+    assert(kernelS < 20)
+
+    val (rows, fileS) = seconds(fromFile(doc))
+    info(f"""format("rdfxml"): $fileS%.2f s""")
+    assert(rows.map(_.getString(1)).toSeq == Seq("\"first\"", "\"last\""))
+    assert(fileS < 30)
+  }
+
+  test(s"a duplicate as the last of $N attributes fails where the tag ends") {
+    val doc = manyAttributes(N, extra = """ ex:p0="again"""")
+    val column = doc.split('\n')(1).length // the tag fills line 2
+    val message = s"2:$column: Duplicate attribute: ex:p0"
+    assert(RdfXmlParser.parse(doc) == Left(ParseError(message)))
+    val rows = fromFile(doc)
+    assert(rows.length == 1 && rows.head.getString(2) == message)
+  }
+}
