@@ -770,23 +770,30 @@ object GraftFunctions {
   def bpe_count(c: Column, vocab: Seq[String] = Subword.DefaultVocab): Column =
     column(BpeCount(expression(c), vocab))
 
+  /** Every SQL name with its expression class and builder: [[register]]
+    * and [[GraftExtensions]] both register this one table. */
+  private[functions] val SqlFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("fmix64", classOf[Fmix64], es => Fmix64(es.head)),
+      ("fnv1a64", classOf[Fnv1a64], es => Fnv1a64(es.head)),
+      ("minhash_sig", classOf[MinHashSig], es => MinHashSig(es.head)),
+      ("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
+      ("dot_f64", classOf[DotF64], es => DotF64(es.head, es(1))),
+      ("sq_l2_f64", classOf[SqL2F64], es => SqL2F64(es.head, es(1))),
+      ("argmax_cos", classOf[ArgMaxCos], es => ArgMaxCos(es.head, es(1), es(2), es(3))),
+      ("argmin_sql2", classOf[ArgMinSqL2], es => ArgMinSqL2(es.head, es(1))),
+      ("resolve_iri", classOf[ResolveIri], es => ResolveIri(es.head, es(1))),
+      ("word_shingles", classOf[WordShingles], es => WordShingles(es.head, litInt(es(1), "word_shingles"))),
+      ("char_shingles", classOf[CharShingles], es => CharShingles(es.head, litInt(es(1), "char_shingles"))),
+      ("word_gram_hashes", classOf[WordGramHashes],
+        es => WordGramHashes(es.head, litInt(es(1), "word_gram_hashes"))),
+      ("bpe_count", classOf[BpeCount], es => BpeCount(es.head, Subword.DefaultVocab)))
+
   /** Register the SQL names on a session (the non-extensions path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.GraftSqlBridge.registerTemp
-    registerTemp(spark, "fmix64", es => Fmix64(es.head))
-    registerTemp(spark, "fnv1a64", es => Fnv1a64(es.head))
-    registerTemp(spark, "minhash_sig", es => MinHashSig(es.head))
-    registerTemp(spark, "simhash64", es => SimHash64(es.head))
-    registerTemp(spark, "dot_f64", es => DotF64(es.head, es(1)))
-    registerTemp(spark, "sq_l2_f64", es => SqL2F64(es.head, es(1)))
-    registerTemp(spark, "argmax_cos", es => ArgMaxCos(es.head, es(1), es(2), es(3)))
-    registerTemp(spark, "argmin_sql2", es => ArgMinSqL2(es.head, es(1)))
-    registerTemp(spark, "resolve_iri", es => ResolveIri(es.head, es(1)))
-    registerTemp(spark, "word_shingles", es => WordShingles(es.head, litInt(es(1), "word_shingles")))
-    registerTemp(spark, "char_shingles", es => CharShingles(es.head, litInt(es(1), "char_shingles")))
-    registerTemp(spark, "word_gram_hashes", es => WordGramHashes(es.head, litInt(es(1), "word_gram_hashes")))
-    registerTemp(spark, "bpe_count", es => BpeCount(es.head, Subword.DefaultVocab))
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    SqlFunctions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.GraftSqlBridge.registerTemp(spark, name, builder)
+    }
 
   /** The shingle widths are plan-time constants: require a foldable int. */
   private[functions] def litInt(e: Expression, fn: String): Int = {
@@ -803,32 +810,8 @@ object GraftFunctions {
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("fmix64"),
-      new ExpressionInfo(classOf[Fmix64].getName, "fmix64"), es => Fmix64(es.head)))
-    e.injectFunction((FunctionIdentifier("fnv1a64"),
-      new ExpressionInfo(classOf[Fnv1a64].getName, "fnv1a64"), es => Fnv1a64(es.head)))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"), es => MinHashSig(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"), es => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotF64].getName, "dot_f64"), es => DotF64(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("sq_l2_f64"),
-      new ExpressionInfo(classOf[SqL2F64].getName, "sq_l2_f64"), es => SqL2F64(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      es => WordShingles(es.head, GraftFunctions.litInt(es(1), "word_shingles"))))
-    e.injectFunction((FunctionIdentifier("char_shingles"),
-      new ExpressionInfo(classOf[CharShingles].getName, "char_shingles"),
-      es => CharShingles(es.head, GraftFunctions.litInt(es(1), "char_shingles"))))
-    e.injectFunction((FunctionIdentifier("word_gram_hashes"),
-      new ExpressionInfo(classOf[WordGramHashes].getName, "word_gram_hashes"),
-      es => WordGramHashes(es.head, GraftFunctions.litInt(es(1), "word_gram_hashes"))))
-    e.injectFunction((FunctionIdentifier("resolve_iri"),
-      new ExpressionInfo(classOf[ResolveIri].getName, "resolve_iri"), es => ResolveIri(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("bpe_count"),
-      new ExpressionInfo(classOf[BpeCount].getName, "bpe_count"),
-      es => BpeCount(es.head, Subword.DefaultVocab)))
-  }
+  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.SqlFunctions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Linking
+import graft.rdf.TripleColumns
 
 /** Downstream graph analytics over the constructed knowledge graph — the
   * queries a KG consumer runs once materialization lands: degree
@@ -50,7 +51,7 @@ object GraphAnalytics {
     * edges; literal objects are node properties, not edges. DISTINCT pairs —
     * reachability/rank semantics, a multi-predicate pair is one edge. */
   def nodeEdges(triples: DataFrame): DataFrame =
-    triples.filter(col("error").isNull && col("obj_type").isin("iri", "bnode"))
+    triples.filter(col("error").isNull && col("obj_type").isin(TripleColumns.IriType, TripleColumns.BNodeType))
       .select(col("subj").as("src"), col("obj").as("dst"))
       .distinct()
 

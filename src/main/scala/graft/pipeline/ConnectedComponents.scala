@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Per-iteration `localCheckpoint` truncates the logical plan: Catalyst does
   * not handle iterative lineage blowup (SURVEY §4.2), and without it every
-  * iteration re-plans the whole history. Convergence is an exact
-  * changed-edge check via `exceptAll` both ways.
+  * iteration re-plans the whole history. A round has converged when the
+  * edge set's [[fingerprint]] (row count and XOR of row hashes) is the same
+  * before and after it.
   *
   * Node ids are strings; ordering is lexicographic, so the component
   * representative is the lexicographic minimum — deterministic and

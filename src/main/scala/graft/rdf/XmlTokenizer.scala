@@ -70,7 +70,11 @@ final class XmlSyntaxException(message: String, val line: Int, val column: Int)
   * Feed with [[write]] chunks and finish with [[end]]; each construct is
   * reported to `handler` as soon as it is complete, which is what gives the
   * automaton the reference's incremental emission behavior
-  * (`test/RdfXmlParser-test.ts:2948-3025`).
+  * (`test/RdfXmlParser-test.ts:2948-3025`). A construct cut by a chunk's
+  * end waits for the chunk that ends it: the chunks in between are held and
+  * searched once each, then joined to the buffer with one copy, so a text
+  * run, tag, comment or CDATA section of L chars costs O(L) whatever the
+  * chunk size.
   *
   * Element and attribute names are looked up by their characters in the
   * buffer, in a per-document open-addressing table, so a name is copied and
@@ -98,6 +102,14 @@ object XmlTokenizer {
 
   /** Longest name, in chars, the name table takes. */
   val MaxNameChars = 256
+
+  // What the incomplete construct at the end of the buffer waits for.
+  private final val JoinNext = 0 // unknown yet: take the next chunk at once
+  private final val LessThan = 1 // the '<' that ends a text run
+  private final val GreaterThan = 2 // a '>': close tag or declaration
+  private final val TagEnd = 3 // a '>' outside quotes: open tag
+  private final val DoctypeEnd = 4 // a '>' outside the internal subset
+  private final val Terminator = 5 // the end string of a comment, CDATA or PI
 }
 
 final class XmlTokenizer(handler: XmlHandler) {
@@ -117,6 +129,20 @@ final class XmlTokenizer(handler: XmlHandler) {
 
   private var buf: String = ""
   private var pos: Int = 0 // cursor into buf — consumed prefix is NOT copied away
+
+  /** Chunks written while the construct at `pos` stayed incomplete: they
+    * are joined to the buffer only when a chunk holds what that construct
+    * waits for, so a construct spanning many chunks is copied once, not
+    * once per chunk, and each chunk is searched once. */
+  private val held = new java.util.ArrayList[String]()
+  /** What the construct at `pos` waits for ([[XmlTokenizer]]'s codes), and
+    * where its search stands: the open quote of a tag (0 for none), the
+    * open '[' of a DOCTYPE, the end string of a comment, CDATA or PI. */
+  private var waiting = JoinNext
+  private var quote: Char = 0
+  private var subsetDepth = 0
+  private var terminator: String = _
+  private var recent: String = _ // the pending text's last chars, fewer than the end string's
   private var started = false
   private var closedRoot = false
 
@@ -159,12 +185,46 @@ final class XmlTokenizer(handler: XmlHandler) {
     // Batch fast path: when the previous buffer is fully consumed the new
     // chunk becomes the buffer without any copying (one-shot whole-document
     // parses never copy the input at all).
-    if (pos >= buf.length) { buf = c; pos = 0; nextNl = -2 }
-    else if (c.nonEmpty) { buf = buf.substring(pos).concat(c); pos = 0; nextNl = -2 }
+    if (pos < buf.length) {
+      if (c.isEmpty) return
+      if (!completes(c)) { held.add(c); return }
+      c = if (held.isEmpty) buf.substring(pos).concat(c) else joined(c)
+    }
+    buf = c
+    pos = 0
+    nextNl = -2
     run()
   }
 
+  /** The buffer's unconsumed tail, the held chunks and `last` as one
+    * string, made with one copy. */
+  private def joined(last: String): String = {
+    held.add(0, buf.substring(pos))
+    held.add(last)
+    val all = String.join("", held)
+    held.clear()
+    all
+  }
+
+  /** Whether `c` holds what the construct at `pos` waits for; when it does
+    * not, the search state moves past `c`. A chunk that may hold it counts
+    * too: [[run]] then scans the joined buffer and decides. */
+  private def completes(c: String): Boolean = waiting match {
+    case LessThan => c.indexOf('<') >= 0
+    case GreaterThan => c.indexOf('>') >= 0
+    case TagEnd => tagEnd(c, 0) >= 0
+    case DoctypeEnd => doctypeEnd(c, 0) >= 0
+    case Terminator =>
+      // The end string lies in `c`, or starts in the last chars before it.
+      val keep = terminator.length - 1
+      val hit = c.indexOf(terminator) >= 0 || (recent + c.take(keep)).contains(terminator)
+      recent = (recent + c.takeRight(keep)).takeRight(keep)
+      hit
+    case _ => true
+  }
+
   def end(): Unit = {
+    if (!held.isEmpty) { buf = joined(""); pos = 0; nextNl = -2 }
     // Trailing text never forms markup; only whitespace is legal outside the
     // root element.
     if (pos < buf.length) {
@@ -258,7 +318,7 @@ final class XmlTokenizer(handler: XmlHandler) {
       if (pos >= buf.length) return
       if (buf.charAt(pos) != '<') {
         val lt = buf.indexOf('<', pos)
-        if (lt < 0) return // incomplete text run — wait for more input
+        if (lt < 0) { waiting = LessThan; return } // incomplete text run — wait for more input
         val raw = buf.substring(pos, lt)
         emitText(raw, cdata = false)
         advance(pos, lt)
@@ -273,13 +333,13 @@ final class XmlTokenizer(handler: XmlHandler) {
         if (scanOpenTag()) progress = true else return
       } else if (buf.startsWith("<!--", pos)) {
         val e = buf.indexOf("-->", pos + 4)
-        if (e < 0) return
+        if (e < 0) { waitFor("-->"); return }
         advance(pos, e + 3)
         pos = e + 3
         progress = true
       } else if (buf.startsWith("<![CDATA[", pos)) {
         val e = buf.indexOf("]]>", pos + 9)
-        if (e < 0) return
+        if (e < 0) { waitFor("]]>"); return }
         val raw = buf.substring(pos + 9, e)
         advance(pos, e + 3)
         pos = e + 3
@@ -287,40 +347,31 @@ final class XmlTokenizer(handler: XmlHandler) {
         progress = true
       } else if (buf.startsWith("<?", pos)) {
         val e = buf.indexOf("?>", pos + 2)
-        if (e < 0) return
+        if (e < 0) { waitFor("?>"); return }
         advance(pos, e + 2)
         pos = e + 2
         progress = true
       } else if (buf.regionMatches(true, pos, "<!DOCTYPE", 0, 9)) {
-        // Scan to the matching '>' accounting for an internal subset [...].
-        var i = pos + 9
-        var bracket = 0
-        var endPos = -1
-        while (i < buf.length && endPos < 0) {
-          buf.charAt(i) match {
-            case '[' => bracket += 1
-            case ']' => bracket -= 1
-            case '>' => if (bracket <= 0) endPos = i
-            case _   =>
-          }
-          i += 1
-        }
-        if (endPos < 0) return
+        subsetDepth = 0
+        val endPos = doctypeEnd(buf, pos + 9)
+        if (endPos < 0) { waiting = DoctypeEnd; return }
         val content = buf.substring(pos + 9, endPos)
         advance(pos, endPos + 1)
         pos = endPos + 1
         onDoctype(content)
         progress = true
       } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '!') {
-        // Other declarations (<!ELEMENT...> at top level outside DOCTYPE)
+        // Other declarations (<!ELEMENT...> at top level outside DOCTYPE),
+        // or the start of a comment, CDATA or DOCTYPE cut by the chunk's end:
+        // each ends at a '>'.
         val e = buf.indexOf('>', pos + 2)
-        if (e < 0) return
+        if (e < 0) { waiting = GreaterThan; return }
         advance(pos, e + 1)
         pos = e + 1
         progress = true
       } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '/') {
         val e = buf.indexOf('>', pos + 2)
-        if (e < 0) return
+        if (e < 0) { waiting = GreaterThan; return }
         val start = pos + 2
         advance(pos, e + 1)
         pos = e + 1
@@ -332,24 +383,23 @@ final class XmlTokenizer(handler: XmlHandler) {
     }
   }
 
+  /** The construct at `pos` is incomplete and ends with `end`. */
+  private def waitFor(end: String): Unit = {
+    waiting = Terminator
+    terminator = end
+    recent = buf.substring(math.max(pos, buf.length - end.length + 1))
+  }
+
   /** Open tag: scan with quote awareness, jumping over each quoted value
     * with `indexOf`; returns false when incomplete (wait for more input). */
   private def scanOpenTag(): Boolean = {
-    var i = pos + 1
-    var endPos = -1
-    while (i < buf.length && endPos < 0) {
-      val c = buf.charAt(i)
-      if (c == '"' || c == '\'') {
-        val close = buf.indexOf(c, i + 1)
-        i = if (close < 0) buf.length else close + 1
-      } else {
-        if (c == '>') endPos = i
-        i += 1
-      }
-    }
+    quote = 0
+    val endPos = tagEnd(buf, pos + 1)
     if (endPos < 0) {
-      if (buf.length - pos == 1) return false
+      // A lone '<' may still start any construct.
+      if (buf.length - pos == 1) { waiting = JoinNext; return false }
       if (!isNameStart(buf.charAt(pos + 1))) fail("Invalid character in markup")
+      waiting = TagEnd
       return false
     }
     val selfClosing = buf.charAt(endPos - 1) == '/'
@@ -358,6 +408,42 @@ final class XmlTokenizer(handler: XmlHandler) {
     pos = endPos + 1
     onOpenTag(start, if (selfClosing) endPos - 1 else endPos, selfClosing)
     true
+  }
+
+  /** The first '>' in `s` from `from` that is outside quotes, or -1; the
+    * scan starts inside [[quote]] and leaves there the quote `s` ends in. */
+  private def tagEnd(s: String, from: Int): Int = {
+    var i = from
+    var q = quote
+    while (i < s.length) {
+      if (q != 0) {
+        val close = s.indexOf(q, i)
+        if (close < 0) i = s.length else { q = 0; i = close + 1 }
+      } else {
+        val c = s.charAt(i)
+        if (c == '>') return i
+        if (c == '"' || c == '\'') q = c
+        i += 1
+      }
+    }
+    quote = q
+    -1
+  }
+
+  /** The first '>' in `s` from `from` outside a DOCTYPE's internal subset,
+    * or -1; [[subsetDepth]] counts the '[' open before and after. */
+  private def doctypeEnd(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '[' => subsetDepth += 1
+        case ']' => subsetDepth -= 1
+        case '>' => if (subsetDepth <= 0) return i
+        case _   =>
+      }
+      i += 1
+    }
+    -1
   }
 
   private def isNameStart(c: Char): Boolean =

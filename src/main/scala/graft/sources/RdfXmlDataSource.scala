@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,13 +23,19 @@ import graft.rdf.{BlankNodeLabels, ParserOptions, RdfXmlParser, TripleColumns}
   * surface (`textStream.pipe(new RdfXmlParser(...))`, reference
   * `lib/RdfXmlParser.ts:122-141` R1/R2) as a Spark source.
   *
-  * Shape: one RDF/XML document per file; files are unsplittable (a document
-  * is one parser state machine), so parallelism = file count, bin-packed
-  * into partitions by size. Schema: the `path` lineage column, then the
-  * columns of [[graft.rdf.TripleColumns]], so a malformed document ends in
-  * one error row, never a task failure (R28), and blank nodes are named by
-  * [[graft.rdf.BlankNodeLabels.forPath]]. Column pruning is pushed into the
-  * reader (`SupportsPushDownRequiredColumns`).
+  * Planning: the directory under `path` is listed once per scan (hidden
+  * names skipped at every level), and the files are bin-packed by size into
+  * partitions of about `targetPartitionBytes` (32 MB unless set). One
+  * RDF/XML document per file; files are unsplittable (a document is one
+  * parser state machine), so parallelism = file count. Column pruning is
+  * pushed into the reader (`SupportsPushDownRequiredColumns`); nothing else
+  * is: Spark evaluates every filter and join on the rows, a `path`
+  * predicate included, and sizes the relation by its default.
+  *
+  * Schema: the `path` lineage column, then the columns of
+  * [[graft.rdf.TripleColumns]], so a malformed document ends in one error
+  * row, never a task failure (R28), and blank nodes are named by
+  * [[graft.rdf.BlankNodeLabels.forPath]].
   *
   * Reads stream ([[RdfXmlPartitionReader]]): a file is decoded and parsed
   * in fixed chunks, and the triples of a chunk leave as rows before the
@@ -42,7 +48,9 @@ import graft.rdf.{BlankNodeLabels, ParserOptions, RdfXmlParser, TripleColumns}
   * `allowDuplicateRdfIds`).
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
-  * the file URI), `validateUri`, `allowDuplicateRdfIds`.
+  * the file URI), `validateUri`, `allowDuplicateRdfIds`,
+  * `targetPartitionBytes`; the others reach the Hadoop configuration the
+  * listing and the readers use.
   *
   * Batch reads only: the reference streams within a document, and so does
   * this reader, but `spark.readStream.format("rdfxml")` is rejected by
@@ -78,49 +86,16 @@ final class RdfXmlTable(options: CaseInsensitiveStringMap) extends Table with Su
 }
 
 final class RdfXmlScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = RdfXmlTable.Schema
-  private var pathFilters: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** Filter pushdown on the `path` lineage column prunes FILES at planning
-    * time — the partition-pruning analogue for a file-per-document source
-    * (at corpus scale a `path` predicate must never require parsing every
-    * document just to drop its rows). Conservative contract: all filters
-    * are also returned as residuals, so Spark re-evaluates them per row and
-    * pruning can never change semantics. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pathFilters = filters.filter(RdfXmlScan.isPathFilter)
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pathFilters
-  override def build(): Scan = new RdfXmlScan(options, required, pathFilters)
+  override def build(): Scan = new RdfXmlScan(options, required)
 }
 
 object RdfXmlScan {
-  private[sources] def isPathFilter(f: Filter): Boolean = f match {
-    case EqualTo("path", _) => true
-    case In("path", _) => true
-    case StringStartsWith("path", _) => true
-    case StringEndsWith("path", _) => true
-    case StringContains("path", _) => true
-    case _ => false
-  }
-
-  private[sources] def pathMatches(path: String, filters: Array[Filter]): Boolean =
-    filters.forall {
-      case EqualTo(_, v) => path == String.valueOf(v)
-      case In(_, vs) => vs.exists(v => path == String.valueOf(v))
-      case StringStartsWith(_, v) => path.startsWith(v)
-      case StringEndsWith(_, v) => path.endsWith(v)
-      case StringContains(_, v) => path.contains(v)
-      case _ => true
-    }
-
-  /** Recursive listing of data files under `dir` (hidden files skipped),
-    * filtered by any pushed `path` predicates, in deterministic path order. */
-  private[sources] def listDataFiles(dir: String, conf: org.apache.hadoop.conf.Configuration,
-                                     pathFilters: Array[Filter]): Seq[FileStatus] = {
+  /** Recursive listing of data files under `dir` (hidden files skipped), in
+    * deterministic path order. */
+  private def listDataFiles(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
     val fs = new Path(dir).getFileSystem(conf)
     def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
     // Hidden names are filtered at EVERY path level (like Spark's own file
@@ -137,13 +112,12 @@ object RdfXmlScan {
     }
     list(new Path(dir))
       .filter(f => !hidden(f.getPath.getName))
-      .filter(f => pathMatches(f.getPath.toString, pathFilters))
       .sortBy(_.getPath.toString)
   }
 
   /** Bin-pack (path, size) files by size into partitions (documents are
     * unsplittable — parallelism = file count, one bin ≈ targetBytes). */
-  private[sources] def binPack(files: Seq[(String, Long)], targetBytes: Long): Array[InputPartition] = {
+  private def binPack(files: Seq[(String, Long)], targetBytes: Long): Array[InputPartition] = {
     val bins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[String]]
     var binBytes = Long.MaxValue
     files.foreach { case (path, len) =>
@@ -155,64 +129,9 @@ object RdfXmlScan {
   }
 }
 
-final class RdfXmlScan(options: CaseInsensitiveStringMap, required: StructType,
-                       pathFilters: Array[Filter] = Array.empty)
-    extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
+final class RdfXmlScan(options: CaseInsensitiveStringMap, required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-
-  /** Runtime filtering on `path` — the dynamic-partition-pruning analogue
-    * for a file-per-document source: when this scan sits on the probe side
-    * of a join whose build side constrains `path` (e.g. joining a 100 TB
-    * corpus against a small audit table of document URIs), Spark hands the
-    * build-side values here AFTER they are known and re-plans, so only the
-    * matching FILES are listed into partitions — plan-time `pushFilters`
-    * can never see these values. Same conservative contract as the static
-    * path filters: pruning only ever drops whole files whose `path` cannot
-    * match; Spark still re-evaluates the join condition per row. */
-  private var runtimeFilters: Array[Filter] = Array.empty
-
-  /** Only advertised when `path` survived column pruning: Spark's
-    * PartitionPruning rule resolves these refs against the scan OUTPUT and
-    * fails analysis on a pruned-away column (a query selecting only
-    * subj/obj would die for a column it never asked for). */
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (required.fieldNames.contains("path"))
-      Array(org.apache.spark.sql.connector.expressions.Expressions.column("path"))
-    else Array.empty
-
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeFilters = filters.filter(RdfXmlScan.isPathFilter)
-
-  /** One listing per scan: statistics estimation, partition planning, and
-    * runtime-filter re-planning all share this cached sweep — on an object
-    * store a ~1M-file directory is O(files) remote RPCs, so listing once and
-    * filtering the cached statuses IN MEMORY (runtime `path` values arrive
-    * post-listing anyway) matters as much as the pruning itself. A lazy val
-    * that throws is not cached, so a transient listing failure during
-    * `estimateStatistics` (swallowed there) retries at plan time. */
-  private lazy val listedFiles: Seq[FileStatus] =
-    RdfXmlScan.listDataFiles(inputDir, hadoopConf.value, pathFilters)
-
-  /** Report input size to Catalyst — without this a DSv2 relation defaults
-    * to `spark.sql.defaultSizeInBytes` (effectively infinite), so a 2 MB
-    * directory of RDF/XML joined against a fact table would ALWAYS sort-
-    * merge-join; with file-size stats the planner auto-broadcasts small
-    * sides like it does for parquet. Size = listed bytes (path filters
-    * applied — pruning shrinks the estimate too); row count unknown (parsing
-    * would defeat the purpose). Cached: planning may ask repeatedly. */
-  private lazy val listedBytes: Long =
-    try listedFiles.map(_.getLen).sum
-    catch { case _: java.io.IOException => -1L }
-
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (listedBytes < 0) java.util.OptionalLong.empty() else java.util.OptionalLong.of(listedBytes)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    }
-  override def description(): String =
-    s"RdfXmlScan(${options.get("path")}, pushedPathFilters=[${pathFilters.mkString(", ")}])"
 
   /** The session's Hadoop configuration (spark.hadoop.* props, object-store
     * credentials, HA nameservices) merged with the scan options, captured at
@@ -228,16 +147,16 @@ final class RdfXmlScan(options: CaseInsensitiveStringMap, required: StructType,
 
   private def targetBytes: Long = options.getLong("targetPartitionBytes", 32L * 1024 * 1024)
 
-  /** Bin-pack the listed files by size (documents are unsplittable);
-    * static (pushed) filters pruned [[listedFiles]] during the single
-    * listing sweep, runtime (join-derived) filters prune the cached
-    * statuses here without touching the filesystem again. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files =
-      if (runtimeFilters.isEmpty) listedFiles
-      else listedFiles.filter(f => RdfXmlScan.pathMatches(f.getPath.toString, runtimeFilters))
-    RdfXmlScan.binPack(files.map(f => (f.getPath.toString, f.getLen)), targetBytes)
-  }
+  /** The listed files bin-packed by size (documents are unsplittable).
+    * Planning may call [[planInputPartitions]] on more than one copy of the
+    * exec node, which all share this scan, so the directory is listed once
+    * per scan. */
+  private lazy val partitions: Array[InputPartition] =
+    RdfXmlScan.binPack(
+      RdfXmlScan.listDataFiles(inputDir, hadoopConf.value).map(f => (f.getPath.toString, f.getLen)),
+      targetBytes)
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val baseIRI = Option(options.get("baseIRI")).getOrElse("")

@@ -114,6 +114,20 @@ class FunctionsSpec extends SparkSuite {
     // Drive the injected builders through a registry: names resolve and
     // the built expression evaluates.
     val fns = org.apache.spark.sql.GraftSqlBridge.applyFunctionExtensions(e)
+    // Every name register() gives a session resolves through the
+    // extensions too, and the extensions add no other.
+    val session = spark.newSession()
+    def names() = session.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names()
+    GraftFunctions.register(session)
+    val registered = names() -- before
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.listFunction().toSet
+    val injected = fns.listFunction().filterNot(builtin).map(_.funcName).toSet
+    assert(registered.size == 13, registered)
+    assert(injected == registered, s"only registered: ${registered -- injected}; only injected: ${injected -- registered}")
+    registered.foreach { name =>
+      assert(fns.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name)).isDefined, name)
+    }
     val expr = fns.lookupFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("fnv1a64"),
       Seq(Literal(UTF8String.fromString("abc"), org.apache.spark.sql.types.StringType)))

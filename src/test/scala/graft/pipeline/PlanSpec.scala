@@ -132,33 +132,6 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)
   }
 
-  test("rdfxml DSv2 scan reports file-size statistics: small RDF/XML side auto-broadcasts") {
-    // Without SupportsReportStatistics a DSv2 relation sizes as
-    // spark.sql.defaultSizeInBytes (infinite) and would ALWAYS sort-merge.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats").toString
-    for (i <- 1 to 3) {
-      val xml = s"""<?xml version="1.0"?>
-        |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-        |  <rdf:Description rdf:about="http://example.org/d$i"><ex:n>$i</ex:n></rdf:Description>
-        |</rdf:RDF>""".stripMargin
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"d$i.rdf"), xml.getBytes("UTF-8"))
-    }
-    val small = spark.read.format("rdfxml").load(dir).select("subj", "obj")
-    val big = spark.range(100000).selectExpr("concat('<http://example.org/d', id, '>') as subj", "id")
-    // Threshold BELOW big's own size estimate (~MBs for 100k string rows):
-    // if the rdfxml relation regressed to defaultSizeInBytes (infinite),
-    // NEITHER side is broadcastable and the join sort-merges — without this
-    // pin the test passed vacuously because big itself was under the 10 MB
-    // default and the planner broadcast the wrong (probe) side.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "65536")
-    try {
-      val p = plan(big.join(small, "subj")) // NO explicit broadcast() hint
-      assert(p.contains("BroadcastHashJoin"), p)
-      assert(p.contains("BuildRight"), p) // the rdfxml (right) side is the one broadcast
-      assert(!p.contains("SortMergeJoin"), p)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   test("sim LSH queries plan with ZERO driver-side probe jobs when dim is explicit") {
     // r3 verdict: hyperplaneBuckets ran a limit(1).collect() per call to
     // learn the embedding dim — an extra Spark job on every sim query and a

@@ -120,6 +120,44 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("property: a chunked write has emitted what a one-shot write of the same prefix emits") {
+    // Constructs whose end marker also occurs inside them ('>' in a quoted
+    // value, a comment, a CDATA section, a PI or the DOCTYPE's subset), so a
+    // chunk edge falls between a false and the true end.
+    val rnd = new scala.util.Random(16)
+    def part(i: Int): String = rnd.nextInt(7) match {
+      case 0 => "<!-- a > b -- > c - -->"
+      case 1 => s"<ex:p><![CDATA[x ]] > ]> $i]]></ex:p>"
+      case 2 => "<?pi a > b ? c?>"
+      case 3 => s"""<ex:q ex:k="a>b" ex:l='c">d'>t$i &g;</ex:q>"""
+      case 4 => s"<ex:r>${"text " * rnd.nextInt(30)}$i</ex:r>"
+      case 5 => s"""<ex:s rdf:resource="&e;$i"/>"""
+      case _ => "\n"
+    }
+    (1 to 40).foreach { d =>
+      val doc = """<!DOCTYPE rdf:RDF [ <!ENTITY e "http://e.org/x"> <!ENTITY g "a>b"> ]>""" + "\n" +
+        """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/">""" +
+        s"""<rdf:Description rdf:about="http://e.org/s$d">""" + (1 to 8).map(part).mkString +
+        "</rdf:Description></rdf:RDF>"
+      def emitted(prefix: String): Int = {
+        var n = 0
+        RdfXmlParser.streaming(ParserOptions())(_ => n += 1).write(prefix)
+        n
+      }
+      val n = 1 + rnd.nextInt(12)
+      var count = 0
+      val p = RdfXmlParser.streaming(ParserOptions())(_ => count += 1)
+      var written = 0
+      doc.grouped(n).foreach { c =>
+        p.write(c)
+        written += c.length
+        assert(count == emitted(doc.substring(0, written)), s"doc $d chunk $n after $written chars")
+      }
+      p.end()
+      assert(Right(count) == RdfXmlParser.parse(doc).map(_.length), s"doc $d chunk $n")
+    }
+  }
+
   test("property: parse is deterministic (same input → same output)") {
     samples(xmlish, 200).foreach { s =>
       assert(RdfXmlParser.parse(s) == RdfXmlParser.parse(s))

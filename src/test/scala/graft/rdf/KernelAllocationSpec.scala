@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** What the parse kernel allocates to read one large document, pinned so
   * that a later change cannot silently give back the saving of interning
-  * names and IRIs per document.
+  * names and IRIs per document, nor make a construct that spans many chunks
+  * cost more than its size.
   *
   * The document is 8 MB in the shape of perfbench's `rdfxml_file` inputs.
   * After warm-up, the bytes the thread allocates over one
@@ -68,9 +69,10 @@ class KernelAllocationSpec extends AnyFunSuite {
 
   private val BoundMb = 90.0
 
+  private val threads = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
   test("parsing an 8 MB document allocates at most the pinned bound") {
     val (doc, triples) = document(8000000)
-    val threads = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
     def allocatedMb(): Double = {
       val before = threads.getCurrentThreadAllocatedBytes
       val parsed = RdfXmlParser.parse(doc)
@@ -82,5 +84,38 @@ class KernelAllocationSpec extends AnyFunSuite {
     val mb = allocatedMb()
     info(f"allocated $mb%.1f MB")
     assert(mb < BoundMb, f"one parse allocated $mb%.1f MB, bound $BoundMb%.1f MB")
+  }
+
+  /** Chars of the long literal: 16 Mi. */
+  private val LiteralChars = 16 << 20
+
+  /** Allowed allocation per char of the long-literal document. The literal
+    * is held, joined, cut out of the buffer, and quoted once as the row's
+    * `obj`: a few bytes a char. Copying the unconsumed tail on every write,
+    * as the tokenizer once did, allocated about L²/(2 · 64 Ki) chars for a
+    * literal of L chars, over 2 GB here. */
+  private val BoundBytesPerChar = 8
+
+  test(s"a $LiteralChars-char literal written in file-source chunks allocates a small multiple of its size") {
+    val literal = ("lorem ipsum dolor sit amet " * (LiteralChars / 27 + 1)).take(LiteralChars)
+    val doc = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/">""" +
+      s"""<rdf:Description rdf:about="http://e.org/s"><ex:p>$literal</ex:p></rdf:Description></rdf:RDF>"""
+    val chunks = doc.grouped(graft.sources.RdfXmlPartitionReader.ChunkChars).toArray
+    def allocatedBytes(): Long = {
+      val before = threads.getCurrentThreadAllocatedBytes
+      val d = new TripleColumns.Document(ParserOptions())
+      chunks.foreach(d.write)
+      d.end()
+      assert(d.next() && !d.failed)
+      assert(d.value(4) == literal) // lexical
+      assert(d.value(2).length == literal.length + 2) // obj, quoted
+      assert(!d.next())
+      threads.getCurrentThreadAllocatedBytes - before
+    }
+    allocatedBytes() // warm-up
+    val bytes = allocatedBytes()
+    info(f"allocated ${bytes / 1e6}%.1f MB for a ${doc.length / 1e6}%.1f M-char document")
+    assert(bytes < BoundBytesPerChar.toLong * doc.length,
+      f"allocated ${bytes / 1e6}%.1f MB, bound ${BoundBytesPerChar * doc.length / 1e6}%.1f MB")
   }
 }

@@ -1,16 +1,16 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.pipeline.{ParseStage, SparkSuite}
+import graft.pipeline.SparkSuite
 import graft.rdf.{RdfXmlParser, TermFactory, TripleColumns}
 
 /** An outside document nesting RDF 1.2 triple terms thousands deep
-  * (`rdf:parseType="Triple"` inside `rdf:parseType="Triple"`) gives its one
-  * row on every parse surface, and the task that read it, and the session,
-  * survive it: the same session then runs a next query. Nothing on the path
-  * from the parser to a row recurses per nesting level. */
+  * (`rdf:parseType="Triple"` inside `rdf:parseType="Triple"`), or property
+  * elements a hundred thousand deep, gives its rows on every parse surface,
+  * and the task that read it, and the session, survive it: the same session
+  * then runs a next query. Nothing on the path from the parser to a row
+  * recurses per nesting level. */
 class DeepNestingSpec extends SparkSuite {
+  import Surfaces._
 
   /** `<s> <p> <<( _:n <p> <<( … <<( _:n <p> "leaf" )>> … )>> )>>`, with an
     * anonymous node at every level. */
@@ -31,8 +31,6 @@ class DeepNestingSpec extends SparkSuite {
     assert("<<\\( ".r.findAllIn(obj).length == depth)
   }
 
-  private def nextQueryRuns(): Unit = assert(spark.range(10).selectExpr("sum(id)").head().getLong(0) == 45)
-
   Seq(5000, 20000).foreach { depth =>
     test(s"triple terms nested $depth deep give one row on every surface, and the session lives on") {
       val doc = nested(depth)
@@ -41,20 +39,52 @@ class DeepNestingSpec extends SparkSuite {
       assert(kernel.length == 1)
       assertNest(TripleColumns.value(kernel.head, 2), depth)
 
-      val dir = Files.createTempDirectory("graft_deep")
-      Files.writeString(dir.resolve("deep.rdf"), doc)
-      val fromFiles = spark.read.format("rdfxml").load(dir.toString).select("obj", "obj_type").collect()
-      assert(fromFiles.length == 1 && fromFiles.head.getString(1) == TripleColumns.TripleType)
-      assertNest(fromFiles.head.getString(0), depth)
-      nextQueryRuns()
+      val files = fromFile(spark, doc, "obj", "obj_type")
+      assert(files.length == 1 && files.head.getString(1) == TripleColumns.TripleType)
+      assertNest(files.head.getString(0), depth)
+      nextQueryRuns(spark)
 
-      import spark.implicits._
-      val turns = Seq(("deep", 0, doc)).toDF("conv_id", "turn_idx", "text")
-      val fromTurns = ParseStage.parseTurns(turns).collect()
-      assert(fromTurns.length == 1 && fromTurns.head.obj_type == TripleColumns.TripleType)
-      assertNest(fromTurns.head.obj, depth)
-      nextQueryRuns()
+      val turns = fromTurns(spark, doc)
+      assert(turns.length == 1 && turns.head.obj_type == TripleColumns.TripleType)
+      assertNest(turns.head.obj, depth)
+      nextQueryRuns(spark)
     }
+  }
+
+  private val ElementDepth = 100000
+
+  test(s"property elements nested $ElementDepth deep give their rows on every surface, and the session lives on") {
+    // <s> <p> _:1 . _:1 <p> _:2 . … _:n <q> "leaf" .
+    val sb = new StringBuilder(
+      """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/">""")
+    sb.append("""<rdf:Description rdf:about="http://e.org/s">""")
+    sb.append("""<ex:p rdf:parseType="Resource">""" * ElementDepth)
+    sb.append("<ex:q>leaf</ex:q>").append("</ex:p>" * ElementDepth)
+    val doc = sb.append("</rdf:Description></rdf:RDF>").toString
+
+    /** The rows as (subj, obj, obj_type) form one chain from `<s>` to the
+      * leaf. */
+    def assertChain(rows: Seq[(String, String, String)]): Unit = {
+      assert(rows.length == ElementDepth + 1)
+      val (links, leaf) = rows.partition(_._3 == TripleColumns.BNodeType)
+      assert(leaf.map(r => (r._2, r._3)) == Seq(("\"leaf\"", TripleColumns.LiteralType)))
+      assert(links.map(_._2).distinct.length == ElementDepth)
+      assert(rows.map(_._1).toSet == links.map(_._2).toSet + "<http://e.org/s>")
+    }
+
+    val (kernel, kernelS) = seconds(RdfXmlParser.parse(doc).fold(e => fail(e.toString), identity))
+    info(f"RdfXmlParser.parse: $kernelS%.2f s")
+    assertChain(kernel.map(t => (t.subj.ntriples, t.obj.ntriples, TripleColumns.value(t, 3))))
+
+    val (files, fileS) = seconds(fromFile(spark, doc, "subj", "obj", "obj_type"))
+    info(f"""format("rdfxml"): $fileS%.2f s""")
+    assertChain(files.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
+    nextQueryRuns(spark)
+
+    val (turns, turnsS) = seconds(fromTurns(spark, doc))
+    info(f"ParseStage.parseTurns: $turnsS%.2f s")
+    assertChain(turns.toSeq.map(r => (r.subj, r.obj, r.obj_type)))
+    nextQueryRuns(spark)
   }
 
   Seq(5000, 20000).foreach { depth =>

@@ -1,19 +1,20 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.Row
-
 import graft.pipeline.SparkSuite
 import graft.rdf.{ParseError, RdfXmlParser}
 
 /** One element with very many attributes, or very many namespace
-  * declarations, is read in time linear in its size on the kernel and on
-  * `format("rdfxml")`: the duplicate-attribute check is one lookup per
-  * attribute, not a comparison with every earlier one. Each case records its
-  * time; the bounds are far above it and far below what a quadratic check
+  * declarations, is read in time linear in its size on the kernel,
+  * `format("rdfxml")` and `ParseStage.parseTurns`: the duplicate-attribute
+  * check is one lookup per attribute, not a comparison with every earlier
+  * one. Each case records its time, and the session then runs a next query;
+  * the bounds are far above the times and far below what a quadratic check
   * takes at this size (minutes). */
 class ManyAttributesSpec extends SparkSuite {
+  import Surfaces._
+
+  // Start the session outside the timed reads.
+  override def beforeAll(): Unit = { super.beforeAll(); nextQueryRuns(spark) }
 
   private val N = 200000
   private val Head =
@@ -27,25 +28,6 @@ class ManyAttributesSpec extends SparkSuite {
     sb.append(extra).append("/>\n</rdf:RDF>\n").toString
   }
 
-  private def seconds[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** The rows `format("rdfxml")` reads from a file holding `doc`. */
-  private def fromFile(doc: String): Array[Row] = {
-    val dir = Files.createTempDirectory("graft_many_attrs")
-    val file = dir.resolve("doc.rdf")
-    try {
-      Files.writeString(file, doc)
-      spark.read.format("rdfxml").load(dir.toString).select("pred", "obj", "error").collect()
-    } finally {
-      Files.deleteIfExists(file)
-      Files.deleteIfExists(dir)
-    }
-  }
-
   test(s"one element with $N attributes gives its triples within seconds") {
     val doc = manyAttributes(N)
     val (kernel, kernelS) = seconds(RdfXmlParser.parse(doc))
@@ -55,10 +37,18 @@ class ManyAttributesSpec extends SparkSuite {
     assert(ts.last.ntriples == s"""<http://e.org/s> <http://e.org/p${N - 1}> "${N - 1}" .""")
     assert(kernelS < 20)
 
-    val (rows, fileS) = seconds(fromFile(doc))
+    val (rows, fileS) = seconds(fromFile(spark, doc, "pred", "obj", "error"))
     info(f"""format("rdfxml"): $fileS%.2f s""")
     assert(rows.length == N && rows.forall(_.isNullAt(2)))
     assert(fileS < 30)
+    nextQueryRuns(spark)
+
+    val (turns, turnsS) = seconds(fromTurns(spark, doc))
+    info(f"ParseStage.parseTurns: $turnsS%.2f s")
+    assert(turns.length == N && turns.forall(_.error == null))
+    assert(turns.map(_.obj).toSet.size == N)
+    assert(turnsS < 30)
+    nextQueryRuns(spark)
   }
 
   test(s"one element with $N namespace declarations gives its triples within seconds") {
@@ -75,10 +65,18 @@ class ManyAttributesSpec extends SparkSuite {
     assert(kernel.map(_.map(_.ntriples)) == Right(expected))
     assert(kernelS < 20)
 
-    val (rows, fileS) = seconds(fromFile(doc))
+    val (rows, fileS) = seconds(fromFile(spark, doc, "pred", "obj", "error"))
     info(f"""format("rdfxml"): $fileS%.2f s""")
     assert(rows.map(_.getString(1)).toSeq == Seq("\"first\"", "\"last\""))
     assert(fileS < 30)
+    nextQueryRuns(spark)
+
+    val (turns, turnsS) = seconds(fromTurns(spark, doc))
+    info(f"ParseStage.parseTurns: $turnsS%.2f s")
+    assert(turns.map(t => (t.pred, t.obj)).toSeq ==
+      Seq(("<http://e.org/ns0/p>", "\"first\""), (s"<http://e.org/ns${N - 1}/p>", "\"last\"")))
+    assert(turnsS < 30)
+    nextQueryRuns(spark)
   }
 
   test(s"a duplicate as the last of $N attributes fails where the tag ends") {
@@ -86,7 +84,7 @@ class ManyAttributesSpec extends SparkSuite {
     val column = doc.split('\n')(1).length // the tag fills line 2
     val message = s"2:$column: Duplicate attribute: ex:p0"
     assert(RdfXmlParser.parse(doc) == Left(ParseError(message)))
-    val rows = fromFile(doc)
+    val rows = fromFile(spark, doc, "pred", "obj", "error")
     assert(rows.length == 1 && rows.head.getString(2) == message)
   }
 }

@@ -45,35 +45,12 @@ class RdfXmlSourceSpec extends SparkSuite {
     assert(bn.length == 1 && bn.head.getAs[String]("subj").matches("_:[0-9a-f]{32}_1"))
   }
 
-  test("rdfxml scan: runtime path filters prune FILES (DPP analogue), stats report listed bytes") {
-    val dir = writeCorpus()
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val opts = new CaseInsensitiveStringMap(java.util.Map.of("path", dir))
-    val scan = new RdfXmlScan(opts, RdfXmlTable.Schema)
-    // stats: sum of the four files' sizes (auto-broadcast depends on this)
-    val stats = scan.estimateStatistics()
-    val expectedBytes = new java.io.File(dir).listFiles().map(_.length()).sum
-    assert(stats.sizeInBytes.getAsLong == expectedBytes)
-    assert(!stats.numRows.isPresent)
-    // runtime filtering contract: filter() after planning re-plans to only
-    // the matching files — the join-derived file-pruning path
-    assert(scan.planInputPartitions().map(_.asInstanceOf[RdfXmlInputPartition].files.length).sum == 4)
-    val aPath = "file:" + dir + "/a.rdf"
-    scan.filter(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.In("path", Array(aPath))))
-    val pruned = scan.planInputPartitions().flatMap(_.asInstanceOf[RdfXmlInputPartition].files)
-    assert(pruned.toSeq == Seq(aPath), pruned.mkString(","))
-    // non-path runtime filters are ignored (conservative contract)
-    scan.filter(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.EqualTo("subj", "x")))
-    assert(scan.planInputPartitions().map(_.asInstanceOf[RdfXmlInputPartition].files.length).sum == 4)
-  }
-
   test("rdfxml scan joined against a path list still returns exact results (runtime filter is semantics-free)") {
     val dir = writeCorpus()
     val df = spark.read.format("rdfxml").load(dir)
     import spark.implicits._
     val want = Seq("file:" + dir + "/a.rdf").toDF("path")
+    // the scan prunes no file; the join drops the other files' rows
     val joined = df.join(broadcast(want), "path").select("subj", "pred", "obj").collect()
     assert(joined.length == 2) // exactly a.rdf's triples
   }
@@ -138,26 +115,6 @@ class RdfXmlSourceSpec extends SparkSuite {
     assert(one.count() == packed.count())
     assert(one.rdd.getNumPartitions == 4)
     assert(packed.rdd.getNumPartitions == 1)
-  }
-
-  test("path filters push down to file pruning: only matching files are planned") {
-    val dir = writeCorpus()
-    def read() = spark.read.format("rdfxml")
-      .option("baseIRI", "http://base.org/")
-      .option("targetPartitionBytes", "1") // one file per partition → partition count = file count
-      .load(dir)
-    assert(read().rdd.getNumPartitions == 4)
-    val filtered = read().filter(col("path").endsWith("a.rdf"))
-    // pruned at planning: one input partition, not four parsed-then-filtered
-    assert(filtered.rdd.getNumPartitions == 1)
-    val rows = filtered.collect()
-    assert(rows.length == 2 && rows.forall(_.getAs[String]("path").endsWith("a.rdf")))
-    // the scan advertises the pushed filter
-    val leaf = filtered.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(leaf.contains("pushedPathFilters=[StringEndsWith(path,a.rdf)]"), leaf)
-    // non-path filters are untouched (and still correct)
-    val nonPath = read().filter(col("obj_type") === "literal").collect()
-    assert(nonPath.nonEmpty && nonPath.forall(_.getAs[String]("obj_type") == "literal"))
   }
 
   test("rdfxml scan ships the session Hadoop configuration, overlaid with scan options") {
