@@ -188,7 +188,9 @@ object ConnectedComponents {
     * union by attaching the UTF-8-byte-order larger root under the
     * smaller, so the root IS the component's min label (same order as the
     * distributed path and the SQL oracles — see [[utf8Less]]). Also the
-    * clustering step of `Linking.components`' driver path. */
+    * clustering step of `Linking.components`' driver path. The rows are
+    * one partition, so a snapshot of them is one file: a local relation is
+    * otherwise sliced into `defaultParallelism` partitions. */
   private[pipeline] def driverUnionFind(spark: SparkSession, es: Array[(String, String)]): DataFrame = {
     val parent = new java.util.HashMap[String, String]()
     def find(x0: String): String = {
@@ -207,6 +209,6 @@ object ConnectedComponents {
     }
     val rows = parent.keySet().toArray(Array.empty[String]).toSeq
       .map(n => (n, find(n)))
-    spark.createDataFrame(rows).toDF("node", "component")
+    spark.createDataFrame(rows).toDF("node", "component").coalesce(1)
   }
 }

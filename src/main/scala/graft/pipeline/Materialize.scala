@@ -8,7 +8,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession, functions}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Encoders, Observation, Row, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -131,17 +131,25 @@ object Materialize {
     * `counters` observed as its last operator, so every observed aggregate
     * runs in the write's final (result) stage, where Spark applies each
     * task's accumulator update exactly once, also when tasks are retried.
-    * Open it with [[beginWrite]], save exactly `rows` (saving any other
-    * frame leaves the observation unfilled, and [[commit]] would wait for it
-    * forever), then call [[commit]], which records the observed values, the
-    * schema and the file listing in the manifest. The save stays in each
-    * stage's own method because the benchmark's per-layer trace keys on the
-    * call site Spark records for the write. */
+    * Open it with [[beginWrite]], save `rows` through [[writer]] (saving any
+    * other frame leaves the observation unfilled, and [[commit]] would wait
+    * for it forever), then call [[commit]], which records the observed
+    * values, the schema and the file listing in the manifest. The save stays
+    * in each stage's own method because the benchmark's per-layer trace keys
+    * on the call site Spark records for the write. */
   private final class StageWrite(name: String, dir: String, input: String, df: DataFrame,
                                  counters: Seq[(String, Column)], inputs: StageInputs) {
     private val out = Observation()
     val rows: DataFrame =
       df.observe(out, count(lit(1)).as("rows"), counters.map { case (n, c) => c.as(n) }: _*)
+
+    /** An overwrite of `rows` whose write job, on the driver and in its
+      * tasks, opens `file:` paths through a fresh [[InProcessChmodFileSystem]]:
+      * Spark copies write options into the job's Hadoop configuration. The
+      * session's cached `file:` filesystem is neither used nor replaced. */
+    def writer: DataFrameWriter[Row] = rows.write.mode("overwrite")
+      .option("fs.file.impl", classOf[InProcessChmodFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
 
     def commit(): StageResult = {
       val observed = (out +: inputs.observed.toSeq).flatMap(_.get)
@@ -187,7 +195,7 @@ object Materialize {
       case None =>
         val inputs = new StageInputs(inputCounters)
         val w = beginWrite(name, dir, input, compute(inputs), counters, inputs)
-        w.rows.write.mode("overwrite").parquet(dataDir(dir))
+        w.writer.parquet(dataDir(dir))
         (spark.read.schema(w.rows.schema).parquet(dataDir(dir)), w.commit())
     }
 
@@ -220,7 +228,7 @@ object Materialize {
       .sortWithinPartitions("subj", "pred", "obj")
       .mapPartitions((it: Iterator[Row]) => adjacencyRows(it.buffered, maxFanout))(Encoders.row(AdjacencySchema))
     val stage = beginWrite("adjacency", dir, input, adj, Nil)
-    stage.rows.write.mode("overwrite").parquet(dataDir(dir))
+    stage.writer.parquet(dataDir(dir))
     stage.commit()
   }
 
@@ -340,9 +348,7 @@ object Materialize {
       .withColumn("subj_hash", subjHash)
     val stage = beginWrite("triples", dir, input,
       keyed.repartition(col("subj_hash")).sortWithinPartitions("subj", "pred"), bucketCounts)
-    stage.rows.write.mode("overwrite")
-      .partitionBy("pred_bucket")
-      .parquet(dataDir(dir))
+    stage.writer.partitionBy("pred_bucket").parquet(dataDir(dir))
     stage.commit()
   }
 }

@@ -331,6 +331,15 @@ final class XmlTokenizer(handler: XmlHandler) {
         // frame). Identical semantics: none of the other branches match a
         // name-start second char.
         if (scanOpenTag()) progress = true else return
+      } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '/') {
+        // Close tags next: no declaration branch below matches a '/'.
+        val e = buf.indexOf('>', pos + 2)
+        if (e < 0) { waiting = GreaterThan; return }
+        val start = pos + 2
+        advance(pos, e + 1)
+        pos = e + 1
+        onCloseTag(start, e)
+        progress = true
       } else if (buf.startsWith("<!--", pos)) {
         val e = buf.indexOf("-->", pos + 4)
         if (e < 0) { waitFor("-->"); return }
@@ -368,14 +377,6 @@ final class XmlTokenizer(handler: XmlHandler) {
         if (e < 0) { waiting = GreaterThan; return }
         advance(pos, e + 1)
         pos = e + 1
-        progress = true
-      } else if (pos + 1 < buf.length && buf.charAt(pos + 1) == '/') {
-        val e = buf.indexOf('>', pos + 2)
-        if (e < 0) { waiting = GreaterThan; return }
-        val start = pos + 2
-        advance(pos, e + 1)
-        pos = e + 1
-        onCloseTag(start, e)
         progress = true
       } else {
         if (scanOpenTag()) progress = true else return

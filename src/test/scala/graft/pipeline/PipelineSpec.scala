@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,6 +155,48 @@ class PipelineSpec extends SparkSuite {
     val (stats, jobs) = jobsOf(KgPipeline.run(spark, sfDir, out))
     assert(stats.reusedStages == 0)
     assert(jobs == FreshJobs, s"a fresh KgPipeline.run launched $jobs Spark job(s)")
+  }
+
+  /** The command lines of the processes this JVM starts while `f` runs, from
+    * a flight recording of `jdk.ProcessStart`. */
+  private def processesOf[T](f: => T): (T, Seq[String]) = {
+    val rec = new jdk.jfr.Recording()
+    val file = Files.createTempFile("graft_processes", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try f finally rec.stop()
+      rec.dump(file)
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command")))
+    } finally { rec.close(); Files.delete(file) }
+  }
+
+  test("a fresh KgPipeline.run starts no chmod process and writes the permission bits Hadoop's chmod gave") {
+    val out = Files.createTempDirectory("graft_kg_chmod")
+    val ((stats, _), commands) = processesOf {
+      // a process started on purpose shows that the recording sees them
+      (KgPipeline.run(spark, sfDir, out.toString), new ProcessBuilder("true").start().waitFor())
+    }
+    assert(stats.reusedStages == 0)
+    assert(commands.exists(_.split(' ').head.endsWith("true")), s"the recording missed a process: $commands")
+    val chmods = commands.filter(_.split(' ').head.endsWith("chmod"))
+    assert(chmods.size == 0, s"a fresh KgPipeline.run started ${chmods.size} chmod process(es), first ${chmods.headOption}")
+    // Hadoop's default umask 022: rw-r--r-- files, rwxr-xr-x directories,
+    // each file beside its checksum
+    for (stage <- Seq("parse", "mentions", "canonical", "triples_all", "graph", "adjacency")) {
+      val data = out.resolve(stage).resolve("data")
+      val paths = scala.util.Using.resource(Files.walk(data))(_.iterator.asScala.toList)
+      paths.foreach { p =>
+        val expected = if (Files.isDirectory(p)) "rwxr-xr-x" else "rw-r--r--"
+        assert(java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) == expected, p)
+      }
+      val files = paths.filter(Files.isRegularFile(_)).map(_.getFileName.toString)
+      assert(files.contains("_SUCCESS") && files.exists(_.endsWith(".parquet")), stage)
+      // the driver-side components are one partition, so one file
+      if (stage == "canonical") assert(files.count(_.endsWith(".parquet")) == 1)
+      files.filterNot(_.endsWith(".crc")).foreach(f => assert(files.contains(s".$f.crc"), s"$stage/$f"))
+    }
+    assert(KgPipeline.run(spark, sfDir, out.toString).reusedStages == 6)
   }
 
   test("a second fresh KgPipeline.run compiles no generated class") {

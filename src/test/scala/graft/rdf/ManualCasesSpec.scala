@@ -211,4 +211,13 @@ class ManualCasesSpec extends AnyFunSuite {
     val Right(ts) = RdfXmlParser.parse(doc, ParserOptions(baseIRI = "http://base.org/dir/"))
     assert(ts == Vector(TestSupport.quad("http://base.org/dir/rel", "http://example.org/p", "http://base.org/dir/x")))
   }
+
+  test("a lower-case <!doctype> declares entities that expand in attributes and text") {
+    val doc = """<!doctype rdf:RDF [ <!ENTITY ex "http://example.org/"> ]>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:eg="http://example.org/">
+  <rdf:Description rdf:about="&ex;s"><eg:p>v &ex;</eg:p></rdf:Description>
+</rdf:RDF>"""
+    val Right(ts) = RdfXmlParser.parse(doc)
+    assert(ts == Vector(TestSupport.quad("http://example.org/s", "http://example.org/p", "\"v http://example.org/\"")))
+  }
 }
