@@ -78,7 +78,8 @@ object SparkEntry {
       val root = scratchDir("st_in_" + Integer.toHexString(dir.hashCode)
         + "_" + streamRunSeq.incrementAndGet())
       Materialize.ntriples(ParseStage.parsedTranscripts(s, dir).toDF(), s"$root/nt")
-      runAvailableNow(s, graft.sources.NTriples.stream(s, s"$root/nt", maxFilesPerTrigger = 8)
+      val ss = inProcessFileSession(s)
+      runAvailableNow(ss, graft.sources.NTriples.stream(ss, s"$root/nt", maxFilesPerTrigger = 8)
         .filter(col("error").isNull)
         .select("subj", "pred", "obj"), root)
         .select("subj", "pred", "obj")
@@ -749,7 +750,7 @@ object SparkEntry {
     * this knob (and nothing else in the query) as keys grow. Shares the
     * SparkContext; conf is session-scoped, so batch queries keep 32. */
   private def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = {
-    val ss = s.newSession()
+    val ss = inProcessFileSession(s)
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // No-data micro-batches exist to advance the watermark so that
     // timeout-driven state (sessions) can flush after the last data batch.
@@ -762,6 +763,20 @@ object SparkEntry {
     // state-store init+commit round across all partitions). r7; the probe
     // evidence is in OPTIMIZATION_r07.md.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    ss
+  }
+
+  /** A child session whose Hadoop configuration opens `file:` paths through
+    * the in-process filesystems ([[InProcessChmod.options]]), so the
+    * streaming gates' checkpoints, state stores, sink logs and staging
+    * writes fork no `chmod` or `readlink` process. Spark copies session conf
+    * into every Hadoop configuration the session builds, including the one
+    * its tasks' state stores get. Shares the SparkContext; the parent
+    * session's conf and the process's cached `file:` filesystem are
+    * untouched. */
+  private def inProcessFileSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    InProcessChmod.options.foreach { case (k, v) => ss.conf.set(k, v) }
     ss
   }
 

@@ -147,9 +147,7 @@ object Materialize {
       * tasks, opens `file:` paths through a fresh [[InProcessChmodFileSystem]]:
       * Spark copies write options into the job's Hadoop configuration. The
       * session's cached `file:` filesystem is neither used nor replaced. */
-    def writer: DataFrameWriter[Row] = rows.write.mode("overwrite")
-      .option("fs.file.impl", classOf[InProcessChmodFileSystem].getName)
-      .option("fs.file.impl.disable.cache", "true")
+    def writer: DataFrameWriter[Row] = rows.write.mode("overwrite").options(InProcessChmod.options)
 
     def commit(): StageResult = {
       val observed = (out +: inputs.observed.toSeq).flatMap(_.get)
@@ -310,10 +308,7 @@ object Materialize {
     * keeps each output file deterministically ordered without a global
     * sort's single-reducer bottleneck. */
   def ntriples(rows: DataFrame, dir: String): Unit =
-    rows.filter(col("error").isNull)
-      .select(concat_ws(" ", col("subj"), col("pred"), col("obj"), lit(".")).as("value"))
-      .sortWithinPartitions("value")
-      .write.mode("overwrite").text(dir)
+    lines(rows, Seq(col("subj"), col("pred"), col("obj")), dir)
 
   /** N-Quads text sink: like [[ntriples]] with the graph term as the fourth
     * position (reference `defaultGraph` semantics — rows in the default
@@ -328,11 +323,17 @@ object Materialize {
           .when(col("graph").startsWith("<") || col("graph").startsWith("_:"), col("graph"))
           .otherwise(concat(lit("<"), col("graph"), lit(">")))
       else lit(null: String)
-    rows.filter(col("error").isNull)
-      .select(concat_ws(" ", col("subj"), col("pred"), col("obj"), graph, lit(".")).as("value"))
-      .sortWithinPartitions("value")
-      .write.mode("overwrite").text(dir)
+    lines(rows, Seq(col("subj"), col("pred"), col("obj"), graph), dir)
   }
+
+  /** One `terms … .` line per error-free row (a null term is left out),
+    * written as text through the in-process `file:` filesystem, as the
+    * stage snapshots are. */
+  private def lines(rows: DataFrame, terms: Seq[Column], dir: String): Unit =
+    rows.filter(col("error").isNull)
+      .select(concat_ws(" ", terms :+ lit("."): _*).as("value"))
+      .sortWithinPartitions("value")
+      .write.mode("overwrite").options(InProcessChmod.options).text(dir)
 
   /** Materialize the triple table: pred_bucket partitions on disk, rows
     * co-located and sorted by subject within files. Counters: the row count

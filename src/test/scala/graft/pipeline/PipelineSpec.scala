@@ -157,29 +157,11 @@ class PipelineSpec extends SparkSuite {
     assert(jobs == FreshJobs, s"a fresh KgPipeline.run launched $jobs Spark job(s)")
   }
 
-  /** The command lines of the processes this JVM starts while `f` runs, from
-    * a flight recording of `jdk.ProcessStart`. */
-  private def processesOf[T](f: => T): (T, Seq[String]) = {
-    val rec = new jdk.jfr.Recording()
-    val file = Files.createTempFile("graft_processes", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      val out = try f finally rec.stop()
-      rec.dump(file)
-      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command")))
-    } finally { rec.close(); Files.delete(file) }
-  }
-
   test("a fresh KgPipeline.run starts no chmod process and writes the permission bits Hadoop's chmod gave") {
     val out = Files.createTempDirectory("graft_kg_chmod")
-    val ((stats, _), commands) = processesOf {
-      // a process started on purpose shows that the recording sees them
-      (KgPipeline.run(spark, sfDir, out.toString), new ProcessBuilder("true").start().waitFor())
-    }
+    val (stats, commands) = Processes.processesOf(KgPipeline.run(spark, sfDir, out.toString))
     assert(stats.reusedStages == 0)
-    assert(commands.exists(_.split(' ').head.endsWith("true")), s"the recording missed a process: $commands")
-    val chmods = commands.filter(_.split(' ').head.endsWith("chmod"))
+    val chmods = Processes.running(commands, "chmod")
     assert(chmods.size == 0, s"a fresh KgPipeline.run started ${chmods.size} chmod process(es), first ${chmods.headOption}")
     // Hadoop's default umask 022: rw-r--r-- files, rwxr-xr-x directories,
     // each file beside its checksum
